@@ -38,6 +38,15 @@ Bit order: first-written bit is the MSB of the first byte (matches the
 reference's golden bit-string tests, which are asserted verbatim in
 tests/test_gorilla_codec.py).
 
+Layout, in file order, with the tests that pin each part:
+- scalar reference (BitWriter/BitReader, the encoder/decoder classes,
+  ``encode_block``): golden bit strings in tests/test_gorilla_codec.py,
+  round trips in tests/test_gorilla_properties.py;
+- array kernels ``_bitlen``, ``_value_fields`` and ``_pack`` behind the
+  two ``encode_*_vectorized`` encoders: bit identity with the scalar
+  reference in both files;
+- decoders ``decode_values`` and ``decode_block``: round trips in both.
+
 Everything in this module is deliberately self-contained (stdlib only)
 so Spark executors can receive it pickled by value.
 """
@@ -378,6 +387,139 @@ def encode_block(
     return w.getvalue()
 
 
+def _bitlen(x):
+    """Vectorized ``int.bit_length`` of a uint64 array (int64 result)."""
+    import numpy as np
+
+    x = x.copy()
+    res = np.zeros(x.shape, dtype=np.int64)
+    for s in (32, 16, 8, 4, 2, 1):
+        m = x >= np.uint64(1) << np.uint64(s)
+        res[m] += s
+        x[m] >>= np.uint64(s)
+    return res + x.astype(np.int64)
+
+
+def _value_fields(values, is_start, policy):
+    """Per-row value records as ``[(header), (payload)]`` fields, each a
+    ``(values, widths)`` row-array pair (payload width 0 when unused) —
+    what :class:`DoubleEncoder` (``policy="xor"``) or
+    :class:`DoubleEncoderLeadTrail` (``policy="leadtrail"``) writes.
+
+    Vectorization shape: the shrinking-window policy is fully
+    array-parallel (its window derives from the PREVIOUS row's xor — a
+    per-row computable). The lead/trail window PERSISTS until a misfit,
+    a data-dependent chain no fixed-depth array pass can resolve, so
+    that policy keeps one compact Python loop over rows — but only
+    integer compares on precomputed arrays (no struct packing, no
+    per-bit BitWriter work), with all XOR/lz/tz math and the final bit
+    packing still numpy. Measured ~8x over the scalar classes at the
+    parity query's sf0.1 shape."""
+    import numpy as np
+
+    n = len(values)
+    bits = values.view(np.uint64)
+    xored = bits ^ np.roll(bits, 1)
+    xored[is_start] = bits[is_start]  # encoder state after first push
+    lz_u = 64 - _bitlen(xored)  # uncapped
+    lz = np.minimum(lz_u, 31)
+    lowbit = xored & (~xored + np.uint64(1))
+    tz = np.maximum(_bitlen(lowbit) - 1, 0)
+    meaningful = 64 - tz - lz
+    vzero = (xored == 0) & ~is_start
+
+    v0 = np.empty(n, dtype=np.uint64)  # header field
+    l0 = np.empty(n, dtype=np.int64)
+    v1 = np.zeros(n, dtype=np.uint64)  # payload field (len 0 if unused)
+    l1 = np.zeros(n, dtype=np.int64)
+    v0[is_start] = bits[is_start]
+    l0[is_start] = 64
+    v0[vzero], l0[vzero] = 0, 1
+
+    new_hdr = ((0b11 << 11) | (lz << 6) | (meaningful - 1)).astype(np.uint64)
+    if policy == "xor":
+        # the window is the previous row's (uncapped lz, tz); row 0 is a
+        # start, so its wrapped-around value is unused
+        plz, ptz = np.roll(lz_u, 1), np.roll(tz, 1)
+        reuse = (lz >= plz) & (tz >= ptz) & ~vzero & ~is_start
+        new = ~(vzero | reuse | is_start)
+        v0[reuse], l0[reuse] = 0b10, 2
+        v1[reuse] = xored[reuse] >> ptz[reuse].astype(np.uint64)
+        l1[reuse] = 64 - ptz[reuse] - plz[reuse]
+        v0[new] = new_hdr[new]
+        l0[new] = 13
+        v1[new] = xored[new] >> tz[new].astype(np.uint64)
+        l1[new] = meaningful[new]
+    elif policy == "leadtrail":
+        # Persistent-window chain (double_stream_lead_trail.rs:63-101):
+        # resolved row-by-row over plain Python ints — only integer
+        # compares per row; XOR/lz/tz math stayed numpy above and bit
+        # packing stays numpy in _pack.
+        lz_l = lz.tolist()
+        tz_l = tz.tolist()
+        xor_l = xored.tolist()
+        start_l = is_start.tolist()
+        v0_l, l0_l, v1_l, l1_l = v0.tolist(), l0.tolist(), v1.tolist(), l1.tolist()
+        hdr_l = new_hdr.tolist()
+        wlz, wtz, wwidth = 64, 0, 0  # standing window (lz, tz, payload w)
+        for i in range(n):
+            if start_l[i]:
+                wlz, wtz, wwidth = 64, 0, 0
+                continue
+            if xor_l[i] == 0:
+                continue  # repeat record: window KEPT
+            li, ti = lz_l[i], tz_l[i]
+            if li >= wlz and ti >= wtz:
+                v0_l[i], l0_l[i] = 0b10, 2
+                v1_l[i] = xor_l[i] >> wtz
+                l1_l[i] = wwidth
+            else:
+                v0_l[i], l0_l[i] = hdr_l[i], 13
+                v1_l[i] = xor_l[i] >> ti
+                l1_l[i] = 64 - ti - li
+                wlz, wtz = li, ti
+                wwidth = 64 - wtz - wlz
+        v0[:], l0[:], v1[:], l1[:] = v0_l, l0_l, v1_l, l1_l
+    else:
+        raise ValueError(f"unknown policy {policy!r}")
+    return [(v0, l0), (v1, l1)]
+
+
+def _pack(fields, start_idx):
+    """Bit-pack ``fields``, a list of ``(values, widths)`` row arrays
+    written MSB-first in list order, into one payload per block (rows
+    from ``start_idx``), each zero-padded to a byte edge as BitWriter
+    does. Returns the public encoders' ``(payloads, nbits, start_idx)``."""
+    import numpy as np
+
+    n = len(fields[0][1])
+    block_bits = np.add.reduceat(sum(w for _, w in fields), start_idx)
+    # a zero field on each block's last row pads the block to a byte
+    pad = np.zeros(n, dtype=np.int64)
+    pad[np.append(start_idx[1:], n) - 1] = -block_bits % 8
+    fields = fields + [(np.zeros(n, dtype=np.uint64), pad)]
+    flat_lens = np.stack([w for _, w in fields], axis=1).ravel()
+    flat_vals = np.stack([v for v, _ in fields], axis=1).ravel()
+
+    total = int(flat_lens.sum())
+    starts = np.concatenate([[0], np.cumsum(flat_lens)[:-1]])
+    pos_in_field = np.arange(total, dtype=np.int64) - np.repeat(
+        starts, flat_lens
+    )
+    fvals = np.repeat(flat_vals, flat_lens)
+    shifts = (np.repeat(flat_lens, flat_lens) - 1 - pos_in_field).astype(
+        np.uint64
+    )
+    bitarr = ((fvals >> shifts) & np.uint64(1)).astype(np.uint8)
+    packed = np.packbits(bitarr)  # total is a multiple of 8 by padding
+    offsets = np.concatenate([[0], np.cumsum((block_bits + 7) >> 3)])
+    payloads = [
+        packed[offsets[i] : offsets[i + 1]].tobytes()
+        for i in range(len(start_idx))
+    ]
+    return payloads, block_bits, start_idx
+
+
 def encode_blocks_vectorized(epochs, values, header_times, is_start):
     """Encode MANY blocks at once with numpy — bit-identical to calling
     :func:`encode_block` per block, but the per-record work (delta/dod
@@ -409,153 +551,36 @@ def encode_blocks_vectorized(epochs, values, header_times, is_start):
         return [], np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
     start_idx = np.flatnonzero(is_start)
 
-    def bitlen(x):  # vectorized uint64 bit_length
-        x = x.copy()
-        res = np.zeros(x.shape, dtype=np.int64)
-        for s in (32, 16, 8, 4, 2, 1):
-            m = x >= np.uint64(1) << np.uint64(s)
-            res[m] += s
-            x[m] >>= np.uint64(s)
-        return res + x.astype(np.int64)
-
-    # ---- timestamp records: one field per row --------------------------
     # delta at block starts is vs header_time; elsewhere vs prev row.
     # Storing the header delta IN the delta array makes dod = plain diff.
-    delta = np.empty(n, dtype=np.int64)
-    delta[1:] = epochs[1:] - epochs[:-1]
+    delta = np.diff(epochs, prepend=0)
     delta[is_start] = epochs[is_start] - header_times[is_start]
     first_delta = delta[start_idx]
-    if ((first_delta < 0) | (first_delta > (1 << 14))).any():
-        bad = first_delta[(first_delta < 0) | (first_delta > (1 << 14))][0]
+    bad = (first_delta < 0) | (first_delta > (1 << 14))
+    if bad.any():
         raise ValueError(
-            f"first delta {bad} outside [0, 2^14] — header_time "
+            f"first delta {first_delta[bad][0]} outside [0, 2^14] — header_time "
             "must be the 2h-aligned floor of the first timestamp"
         )
-    dod = np.zeros(n, dtype=np.int64)
-    dod[1:] = delta[1:] - delta[:-1]
+    dod = np.diff(delta, prepend=delta[0])
 
-    # control prefix folded into one value: bits concatenate MSB-first,
-    # so ('10', 2)+(x, 7) == ((0b10<<7)|x, 9)
-    ts_val = np.empty(n, dtype=np.uint64)
-    ts_len = np.empty(n, dtype=np.int64)
+    # dod buckets as in TimestampEncoder.push, widest first so each
+    # narrower bucket overwrites the rows it covers. The control prefix
+    # folds into one value: bits concatenate MSB-first, so
+    # ('10', 2)+(x, 7) == ((0b10<<7)|x, 9)
+    ts_val = ((0b1111 << 32) | (dod & 0xFFFFFFFF)).astype(np.uint64)
+    ts_len = np.full(n, 36, dtype=np.int64)
+    for bias, ctl, width in ((2047, 0b1110, 12), (255, 0b110, 9), (63, 0b10, 7)):
+        m = (dod >= -bias) & (dod <= bias + 1)
+        ts_val[m] = ((ctl << width) | (dod[m] + bias)).astype(np.uint64)
+        ts_len[m] = ctl.bit_length() + width
     zero = dod == 0
-    b1 = (dod >= -63) & (dod <= 64) & ~zero
-    b2 = (dod >= -255) & (dod <= 256) & ~zero & ~b1
-    b3 = (dod >= -2047) & (dod <= 2048) & ~zero & ~b1 & ~b2
-    b4 = ~(zero | b1 | b2 | b3)
     ts_val[zero], ts_len[zero] = 0, 1
-    ts_val[b1] = ((0b10 << 7) | (dod[b1] + 63)).astype(np.uint64)
-    ts_len[b1] = 9
-    ts_val[b2] = ((0b110 << 9) | (dod[b2] + 255)).astype(np.uint64)
-    ts_len[b2] = 12
-    ts_val[b3] = ((0b1110 << 12) | (dod[b3] + 2047)).astype(np.uint64)
-    ts_len[b3] = 16
-    ts_val[b4] = ((0b1111 << 32) | (dod[b4] & 0xFFFFFFFF)).astype(np.uint64)
-    ts_len[b4] = 36
     ts_val[is_start] = first_delta.astype(np.uint64)
     ts_len[is_start] = 14
 
-    # ---- value records: header field + payload field per row -----------
-    bits = values.view(np.uint64)
-    xored = np.empty(n, dtype=np.uint64)
-    xored[1:] = bits[1:] ^ bits[:-1]
-    xored[is_start] = bits[is_start]  # encoder state after first push
-    prev_xor = np.empty(n, dtype=np.uint64)
-    prev_xor[1:] = xored[:-1]
-    prev_xor[0] = 0  # unused (row 0 is a start)
-
-    lz_u = 64 - bitlen(xored)  # uncapped
-    lz = np.minimum(lz_u, 31)
-    lowbit = xored & (~xored + np.uint64(1))
-    tz = np.maximum(bitlen(lowbit) - 1, 0)
-    plz = 64 - bitlen(prev_xor)
-    plowbit = prev_xor & (~prev_xor + np.uint64(1))
-    ptz = np.where(plz == 64, 0, np.maximum(bitlen(plowbit) - 1, 0))
-
-    vzero = (xored == 0) & ~is_start
-    reuse = (lz >= plz) & (tz >= ptz) & ~vzero & ~is_start
-    new = ~(vzero | reuse | is_start)
-    meaningful = 64 - tz - lz
-
-    v0 = np.empty(n, dtype=np.uint64)  # header field
-    l0 = np.empty(n, dtype=np.int64)
-    v1 = np.zeros(n, dtype=np.uint64)  # payload field (len 0 if unused)
-    l1 = np.zeros(n, dtype=np.int64)
-    v0[is_start] = bits[is_start]
-    l0[is_start] = 64
-    v0[vzero], l0[vzero] = 0, 1
-    v0[reuse], l0[reuse] = 0b10, 2
-    v1[reuse] = xored[reuse] >> ptz[reuse].astype(np.uint64)
-    l1[reuse] = 64 - ptz[reuse] - plz[reuse]
-    v0[new] = ((0b11 << 11) | (lz[new] << 6) | (meaningful[new] - 1)).astype(
-        np.uint64
-    )
-    l0[new] = 13
-    v1[new] = xored[new] >> tz[new].astype(np.uint64)
-    l1[new] = meaningful[new]
-
-    # ---- pack: interleave [ts, v_header, v_payload, block_pad] ---------
-    row_bits = ts_len + l0 + l1
-    block_bits = np.add.reduceat(row_bits, start_idx)
-    pad = (-block_bits) % 8  # byte-align each block independently
-    last_idx = np.concatenate([start_idx[1:] - 1, [n - 1]])
-    lens = np.stack([ts_len, l0, l1, np.zeros(n, dtype=np.int64)], axis=1)
-    vals = np.stack([ts_val, v0, v1, np.zeros(n, dtype=np.uint64)], axis=1)
-    lens[last_idx, 3] = pad
-    flat_lens = lens.ravel()
-    flat_vals = vals.ravel()
-    used = flat_lens > 0
-    flat_lens = flat_lens[used]
-    flat_vals = flat_vals[used]
-
-    total = int(flat_lens.sum())
-    starts = np.concatenate([[0], np.cumsum(flat_lens)[:-1]])
-    pos_in_field = np.arange(total, dtype=np.int64) - np.repeat(
-        starts, flat_lens
-    )
-    fvals = np.repeat(flat_vals, flat_lens)
-    shifts = (np.repeat(flat_lens, flat_lens) - 1 - pos_in_field).astype(
-        np.uint64
-    )
-    bitarr = ((fvals >> shifts) & np.uint64(1)).astype(np.uint8)
-    packed = np.packbits(bitarr)  # total is a multiple of 8 by padding
-
-    block_bytes = (block_bits + pad) >> 3
-    offsets = np.concatenate([[0], np.cumsum(block_bytes)])
-    payloads = [
-        packed[offsets[i] : offsets[i + 1]].tobytes()
-        for i in range(len(start_idx))
-    ]
-    return payloads, block_bits, start_idx
-
-
-def _pack_fields(flat_vals, flat_lens, block_bits, pad):
-    """Shared bit-packing tail: MSB-first concatenation of variable-width
-    fields into per-block byte payloads (identical layout to driving a
-    BitWriter per block, incl. per-block zero padding to a byte edge).
-    ``flat_vals``/``flat_lens`` are the already-flattened field arrays
-    (zero-length fields removed), ``block_bits`` the exact bit count per
-    block, ``pad`` the per-block pad widths ALREADY PRESENT as trailing
-    zero-fields in the flat arrays."""
-    import numpy as np
-
-    total = int(flat_lens.sum())
-    starts = np.concatenate([[0], np.cumsum(flat_lens)[:-1]])
-    pos_in_field = np.arange(total, dtype=np.int64) - np.repeat(
-        starts, flat_lens
-    )
-    fvals = np.repeat(flat_vals, flat_lens)
-    shifts = (np.repeat(flat_lens, flat_lens) - 1 - pos_in_field).astype(
-        np.uint64
-    )
-    bitarr = ((fvals >> shifts) & np.uint64(1)).astype(np.uint8)
-    packed = np.packbits(bitarr)  # total is a multiple of 8 by padding
-    block_bytes = (block_bits + pad) >> 3
-    offsets = np.concatenate([[0], np.cumsum(block_bytes)])
-    return [
-        packed[offsets[i] : offsets[i + 1]].tobytes()
-        for i in range(len(block_bytes))
-    ]
+    ts_fields = (ts_val, ts_len)
+    return _pack([ts_fields] + _value_fields(values, is_start, "xor"), start_idx)
 
 
 def encode_values_vectorized(values, is_start, policy: str = "xor"):
@@ -570,120 +595,15 @@ def encode_values_vectorized(values, is_start, policy: str = "xor"):
     Inputs are parallel arrays with each block's rows contiguous:
     ``values`` float64, ``is_start`` bool (True on each block's first
     row). Returns ``(payloads, nbits, start_idx)`` like
-    :func:`encode_blocks_vectorized`.
-
-    Vectorization shape: the shrinking-window policy is fully
-    array-parallel (its window derives from the PREVIOUS row's xor — a
-    per-row computable). The lead/trail window PERSISTS until a misfit,
-    a data-dependent chain no fixed-depth array pass can resolve, so
-    that policy keeps one compact Python loop over rows — but only
-    integer compares on precomputed arrays (no struct packing, no
-    per-bit BitWriter work), with all XOR/lz/tz math and the final bit
-    packing still numpy. Measured ~8x over the scalar classes at the
-    parity query's sf0.1 shape."""
+    :func:`encode_blocks_vectorized`."""
     import numpy as np
 
     values = np.asarray(values, dtype=np.float64)
     is_start = np.asarray(is_start, dtype=bool)
-    n = len(values)
-    if n == 0:
+    if len(values) == 0:
         return [], np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
     start_idx = np.flatnonzero(is_start)
-
-    def bitlen(x):  # vectorized uint64 bit_length
-        x = x.copy()
-        res = np.zeros(x.shape, dtype=np.int64)
-        for s in (32, 16, 8, 4, 2, 1):
-            m = x >= np.uint64(1) << np.uint64(s)
-            res[m] += s
-            x[m] >>= np.uint64(s)
-        return res + x.astype(np.int64)
-
-    bits = values.view(np.uint64)
-    xored = np.empty(n, dtype=np.uint64)
-    xored[1:] = bits[1:] ^ bits[:-1]
-    xored[is_start] = bits[is_start]
-    lz = np.minimum(64 - bitlen(xored), 31)
-    lowbit = xored & (~xored + np.uint64(1))
-    tz = np.maximum(bitlen(lowbit) - 1, 0)
-    meaningful = 64 - tz - lz
-    vzero = (xored == 0) & ~is_start
-
-    v0 = np.empty(n, dtype=np.uint64)  # header field
-    l0 = np.empty(n, dtype=np.int64)
-    v1 = np.zeros(n, dtype=np.uint64)  # payload field (len 0 if unused)
-    l1 = np.zeros(n, dtype=np.int64)
-    v0[is_start] = bits[is_start]
-    l0[is_start] = 64
-    v0[vzero], l0[vzero] = 0, 1
-
-    new_hdr = ((0b11 << 11) | (lz << 6) | (meaningful - 1)).astype(np.uint64)
-    if policy == "xor":
-        prev_xor = np.empty(n, dtype=np.uint64)
-        prev_xor[1:] = xored[:-1]
-        prev_xor[0] = 0  # unused (row 0 is a start)
-        plz = 64 - bitlen(prev_xor)
-        plowbit = prev_xor & (~prev_xor + np.uint64(1))
-        ptz = np.where(plz == 64, 0, np.maximum(bitlen(plowbit) - 1, 0))
-        reuse = (lz >= plz) & (tz >= ptz) & ~vzero & ~is_start
-        new = ~(vzero | reuse | is_start)
-        v0[reuse], l0[reuse] = 0b10, 2
-        v1[reuse] = xored[reuse] >> ptz[reuse].astype(np.uint64)
-        l1[reuse] = 64 - ptz[reuse] - plz[reuse]
-        v0[new] = new_hdr[new]
-        l0[new] = 13
-        v1[new] = xored[new] >> tz[new].astype(np.uint64)
-        l1[new] = meaningful[new]
-    elif policy == "leadtrail":
-        # Persistent-window chain (double_stream_lead_trail.rs:63-101):
-        # resolved row-by-row over plain Python ints — only integer
-        # compares per row; XOR/lz/tz math stayed numpy above and bit
-        # packing stays numpy below.
-        lz_l = lz.tolist()
-        tz_l = tz.tolist()
-        xor_l = xored.tolist()
-        start_l = is_start.tolist()
-        v0_l, l0_l = [0] * n, [0] * n
-        v1_l, l1_l = [0] * n, [0] * n
-        hdr_l = new_hdr.tolist()
-        wlz, wtz, wwidth = 64, 0, 0  # standing window (lz, tz, payload w)
-        for i in range(n):
-            if start_l[i]:
-                wlz, wtz, wwidth = 64, 0, 0
-                continue
-            if xor_l[i] == 0:
-                continue  # repeat record: window KEPT
-            li, ti = lz_l[i], tz_l[i]
-            if li >= wlz and ti >= wtz:
-                v0_l[i], l0_l[i] = 0b10, 2
-                v1_l[i] = xor_l[i] >> wtz
-                l1_l[i] = wwidth
-            else:
-                v0_l[i], l0_l[i] = hdr_l[i], 13
-                v1_l[i] = xor_l[i] >> ti
-                l1_l[i] = 64 - ti - li
-                wlz, wtz = li, ti
-                wwidth = 64 - wtz - wlz
-        mask = ~(vzero | is_start)
-        v0[mask] = np.array(v0_l, dtype=np.uint64)[mask]
-        l0[mask] = np.array(l0_l, dtype=np.int64)[mask]
-        v1[mask] = np.array(v1_l, dtype=np.uint64)[mask]
-        l1[mask] = np.array(l1_l, dtype=np.int64)[mask]
-    else:
-        raise ValueError(f"unknown policy {policy!r}")
-
-    row_bits = l0 + l1
-    block_bits = np.add.reduceat(row_bits, start_idx)
-    pad = (-block_bits) % 8
-    last_idx = np.concatenate([start_idx[1:] - 1, [n - 1]])
-    lens = np.stack([l0, l1, np.zeros(n, dtype=np.int64)], axis=1)
-    vals = np.stack([v0, v1, np.zeros(n, dtype=np.uint64)], axis=1)
-    lens[last_idx, 2] = pad
-    flat_lens = lens.ravel()
-    flat_vals = vals.ravel()
-    used = flat_lens > 0
-    payloads = _pack_fields(flat_vals[used], flat_lens[used], block_bits, pad)
-    return payloads, block_bits, start_idx
+    return _pack(_value_fields(values, is_start, policy), start_idx)
 
 
 def decode_values(payload: bytes, nbits: int, policy: str = "xor") -> list[float]:

@@ -28,13 +28,9 @@ ROWS_SCHEMA = "series_id string, ts long, value double"
 
 def _ship_codec_by_value() -> None:
     import gibbon_spark.codec.gorilla as gorilla_mod
+    from pyspark.cloudpickle import register_pickle_by_value
 
-    try:
-        from pyspark.cloudpickle import register_pickle_by_value
-
-        register_pickle_by_value(gorilla_mod)
-    except Exception:  # pragma: no cover - older cloudpickle
-        pass
+    register_pickle_by_value(gorilla_mod)
 
 
 def encode_timeseries(

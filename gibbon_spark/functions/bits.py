@@ -10,21 +10,17 @@ aggregations) stays JVM-side.
 
 from __future__ import annotations
 
+import sys
+
 import pandas as pd
+from pyspark.cloudpickle import register_pickle_by_value
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType
 
 # Ship this module by value: the pandas UDFs below are module-level, so
 # cloudpickle would otherwise serialize them by reference and executors
 # would need gibbon_spark importable (not guaranteed under the driver).
-try:  # pragma: no cover
-    import sys as _sys
-
-    from pyspark.cloudpickle import register_pickle_by_value as _rpbv
-
-    _rpbv(_sys.modules[__name__])
-except Exception:  # noqa: BLE001
-    pass
+register_pickle_by_value(sys.modules[__name__])
 
 
 @F.pandas_udf(LongType())

@@ -92,3 +92,37 @@ def money_exact_sum(col):
     hi = F.sum(F.call_function("div", v, m))
     lo = F.sum(v % m)
     return hi.cast("decimal(38,0)") * m + lo
+
+
+def exact_avg(col):
+    """Association-order-free mean, emitted ready-to-present: exact
+    numerator (4 dp pre-round, +1e-9 half-boundary guard, as money_sum)
+    over the non-null count, then the SAME +1e-9 nudge and 6 dp round
+    the DuckDB oracle applies (``queries.exact_avg_sql`` is the oracle
+    twin) — callers must not re-round, or the two engines can land on
+    opposite sides of a half boundary (the tie-flip class commit
+    b83f6d4 eliminated). A raw double avg() can differ by 1 ulp between
+    Spark's parallel sum and a serial oracle and flip the 6 dp
+    presentation — observed at sf0.1; this form hashes identically at
+    any parallelism.
+
+    The numerator is the 1e-4-scaled per-row long of
+    :func:`scaled_long` (r12) summed by the split-long accumulator of
+    :func:`money_exact_sum` (r13 — the single int64 sum died under ANSI
+    at ~sf1500). ``(double)S / 10000.0`` reproduces the reference
+    ``decimal(24,4)→double`` cast bit-for-bit (OpenJDK
+    BigDecimal.doubleValue computes exactly this for compact values).
+
+    Trade-off (why this is OPT-IN, not the generic contract): the 4 dp
+    pre-round quantizes sub-1e-4 magnitudes (values of 2e-5 average to
+    0). Fine for the oracle-paired gate queries' 2-dp money data; wrong
+    as a default for a generic library operator, which is why the
+    time-series ``summary``/``summary_by_series``/``resample`` default
+    to plain ``F.avg``.
+    """
+    return F.round(
+        money_exact_sum(col).cast("double") / F.lit(10000.0)
+        / F.count(col)
+        + F.lit(1e-9),
+        6,
+    )

@@ -68,40 +68,8 @@ def as_timeseries(
 # ---------------------------------------------------------------------------
 
 
-def _exact_avg(value: str):
-    """Association-order-free mean, emitted ready-to-present: exact
-    decimal numerator (4 dp pre-round, +1e-9 half-boundary guard) over
-    the non-null count, then the SAME +1e-9 nudge and 6 dp round the
-    DuckDB oracle applies — callers must not re-round, or the two
-    engines can land on opposite sides of a half boundary (the tie-flip
-    class commit b83f6d4 eliminated). A raw double avg() can differ by
-    1 ulp between Spark's parallel sum and a serial oracle and flip the
-    6 dp presentation — observed at sf0.1. Decimal partials combine
-    map-side like any sum, so the scale story is unchanged.
-
-    Trade-off (why this is OPT-IN, not the generic contract): the 4 dp
-    pre-round quantizes sub-1e-4 magnitudes (values of 2e-5 average to
-    0); the numerator is the 1e-4-scaled per-row long of
-    ``gibbon_spark.functions.exact.scaled_long`` (r12, see there for
-    the equivalence to the decimal(24,4) reference form) summed by the
-    split-long accumulator of ``money_exact_sum`` (r13 — the single
-    int64 sum died under ANSI at |sum| ≥ 9.2e14 value units). Fine for
-    the oracle-paired gate queries' 2-dp money data; wrong as a default
-    for a generic library operator, which is why
-    ``summary``/``summary_by_series``/``resample`` default to plain
-    ``F.avg``.
-    """
-    return F.round(
-        exact_fns.money_exact_sum(F.col(value)).cast("double")
-        / F.lit(10000.0)
-        / F.count(value)
-        + F.lit(1e-9),
-        6,
-    )
-
-
 def _avg(value: str, exact: bool):
-    return _exact_avg(value) if exact else F.avg(value)
+    return exact_fns.exact_avg(F.col(value)) if exact else F.avg(value)
 
 
 def summary(
@@ -116,7 +84,7 @@ def summary(
 
     ``avg_value`` is plain ``avg()`` (the reference's contract,
     ``csv_to_packed.rs:66-76``); pass ``exact_avg=True`` for the
-    oracle-parity decimal form (see ``_exact_avg`` for the trade-off).
+    oracle-parity decimal form (see ``exact_fns.exact_avg`` for the trade-off).
     """
     return df.agg(
         F.min(value).alias("min_value"),

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gibbon_spark.functions import exact as exact_fns
+from gibbon_spark.functions.exact import exact_avg
 from gibbon_spark.operators import layout
 from gibbon_spark.operators import merge as merge_ops
 from gibbon_spark.operators import skew as skew_ops
@@ -181,33 +182,6 @@ def money_sum_sql(expr: str, dp: int = 2) -> str:
     return (
         f"CAST(round(sum(CAST(round(({expr}) + 1e-9, 4) AS DECIMAL(24,4))), "
         f"{dp}) AS DOUBLE)"
-    )
-
-
-def exact_avg(col):
-    """Association-order-free mean: exact numerator (4 dp pre-round,
-    same guard as money_sum) divided by the non-null count, presented
-    at 6 dp. A raw round(avg(x), 6) can sit within 1 ulp of a rounding
-    boundary and flip between Spark's parallel sum and the oracle's
-    ordered sum — observed at sf0.1; this form hashes identically at
-    any parallelism. exact_avg_sql is the oracle twin.
-
-    The numerator is carried as the 1e-4-scaled value of
-    :func:`gibbon_spark.functions.exact.scaled_long` (r12, same
-    rationale and verified domain as money_sum), summed by the hi/lo
-    split-long accumulator of ``money_exact_sum`` (r13 — the single
-    int64 sum died at ~sf1500, see money_sum); ``(double)S / 10000.0``
-    reproduces the
-    reference ``decimal(24,4)→double`` cast bit-for-bit (OpenJDK
-    BigDecimal.doubleValue computes exactly this for compact values;
-    the decimal→double cast of the widened sum is identical to the long
-    cast wherever the long sum didn't overflow), and everything after
-    the cast is unchanged."""
-    return F.round(
-        exact_fns.money_exact_sum(col).cast("double") / F.lit(10000.0)
-        / F.count(col)
-        + F.lit(1e-9),
-        6,
     )
 
 

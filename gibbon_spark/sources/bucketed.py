@@ -149,7 +149,7 @@ def write_gorilla_store(
     path: str,
     *,
     mode: str = "overwrite",
-    day_files: int | None = None,
+    day_files: int = 4,
 ) -> None:
     """Persist gorilla-encoded blocks (codec/spark_ops.encode_timeseries
     output: one BinaryType payload per (series, 2h header bucket)) as a
@@ -171,10 +171,7 @@ def write_gorilla_store(
 
     ``day_files`` caps files per day directory regardless of executor
     count (same discipline as ``write_bucketed``); raise it on a real
-    cluster via GS_STORE_DAY_FILES so per-file size stays in the
-    128 MB-1 GB band at 100 TB."""
-    if day_files is None:
-        day_files = int(os.environ.get("GS_STORE_DAY_FILES", "4"))
+    cluster so per-file size stays in the 128 MB-1 GB band at 100 TB."""
     (
         blocks.withColumn(
             "bucket_day", F.col("header_time") - F.col("header_time") % DAY

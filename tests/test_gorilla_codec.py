@@ -21,6 +21,8 @@ from gibbon_spark.codec.gorilla import (
     TimestampEncoder,
     decode_block,
     encode_block,
+    encode_blocks_vectorized,
+    encode_values_vectorized,
 )
 
 
@@ -429,3 +431,48 @@ def test_vectorized_values_xor_bit_identity():
 
 def test_vectorized_values_leadtrail_bit_identity():
     _vec_equiv_sweep("leadtrail", DoubleEncoderLeadTrail)
+
+
+# --- vectorized encoders: input edge cases
+
+
+def test_vectorized_encoders_empty_input():
+    for payloads, nbits, start_idx in (
+        encode_blocks_vectorized([], [], [], []),
+        encode_values_vectorized([], [], "xor"),
+        encode_values_vectorized([], [], "leadtrail"),
+    ):
+        assert payloads == [] and len(nbits) == 0 and len(start_idx) == 0
+
+
+@pytest.mark.parametrize("offset", [-1, (1 << 14) + 1])
+def test_vectorized_encode_rejects_first_delta_like_scalar(offset):
+    """A first delta outside [0, 2^14] in ANY block of the batch (here
+    the second) raises the same ValueError as encode_block."""
+    header = 7200 * 1000
+    ts = [header + offset, header + offset + 60]
+    with pytest.raises(ValueError, match="first delta") as scalar:
+        encode_block(ts, [1.0, 2.0], header)
+    with pytest.raises(ValueError, match="first delta") as vec:
+        encode_blocks_vectorized(
+            [header - 7200, *ts],
+            [0.5, 1.0, 2.0],
+            [header - 7200, header, header],
+            [True, True, False],
+        )
+    assert str(vec.value) == str(scalar.value)
+
+
+@pytest.mark.parametrize("offset", [0, 1 << 14])
+def test_vectorized_encode_first_delta_bounds_match_scalar(offset):
+    header = 7200 * 1000
+    ts = [header + offset, header + offset + 60, header + offset + 60]
+    payloads, nbits, _ = encode_blocks_vectorized(
+        ts, [1.0, 2.0, 2.0], [header] * 3, [True, False, False]
+    )
+    assert (payloads[0], int(nbits[0])) == encode_block(ts, [1.0, 2.0, 2.0], header)
+
+
+def test_vectorized_values_unknown_policy_raises():
+    with pytest.raises(ValueError, match="unknown policy"):
+        encode_values_vectorized([1.0, 2.0], [True, False], "shrinking")

@@ -93,3 +93,51 @@ def test_encode_deterministic_under_subsecond_epoch_ties(spark):
         )
 
     assert payloads(fwd) == payloads(rev)
+
+
+def test_encode_carries_blocks_across_arrow_batches(spark):
+    """encode_timeseries streams each sorted partition through
+    mapInPandas and carries a block that straddles two Arrow batches
+    over to the next batch. Test data never fills a batch, so shrink
+    the batch to 7 rows: every block below has more rows than that and
+    spans several batches. Each payload must equal the scalar
+    encode_block of its block."""
+    import random
+
+    from gibbon_spark.codec.gorilla import encode_block
+
+    rng = random.Random(7)
+    header0 = 1_700_000_000 - 1_700_000_000 % 7200
+    rows = []
+    for sid in range(3):
+        for b, n in enumerate((9, 23, 41)):
+            header = header0 + 7200 * (b + sid)
+            t = header + rng.randrange(60)
+            for _ in range(n):
+                rows.append((sid, t, round(rng.uniform(-50, 50), 2)))
+                t += rng.choice((0, 1, 60, 60, 60, 120))
+    df = spark.createDataFrame(rows, "user_id int, epoch long, value double")
+    df = df.select("user_id", F.timestamp_seconds("epoch").alias("ts"), "value")
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "7")
+    try:
+        got = spark_ops.encode_timeseries(df, series=["user_id"]).collect()
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+    blocks: dict = {}
+    for sid, t, v in rows:
+        blocks.setdefault((str(sid), t - t % 7200), []).append((t, v))
+    assert len(got) == len(blocks) == 9
+    for r in got:
+        pts = sorted(blocks[(r.series_id, r.header_time)])
+        payload, nbits = encode_block(
+            [t for t, _ in pts], [v for _, v in pts], r.header_time
+        )
+        assert r.n_samples == len(pts)
+        assert (bytes(r.payload), r.n_bits) == (payload, nbits)
