@@ -57,6 +57,9 @@ import struct
 
 _U64 = (1 << 64) - 1
 
+# Width of one block: header times are epoch seconds aligned to it.
+BLOCK_SECONDS = 7200
+
 
 class BitWriter:
     """Append-only bit sink; O(1) amortized per write."""

@@ -45,7 +45,7 @@ def encode_timeseries(
     inside each block — the order-dependence the codec requires
     (SURVEY.md 'hard parts')."""
     _ship_codec_by_value()
-    from gibbon_spark.codec.gorilla import encode_blocks_vectorized
+    from gibbon_spark.codec.gorilla import BLOCK_SECONDS, encode_blocks_vectorized
     from gibbon_spark.operators.timeseries import as_timeseries
 
     norm = as_timeseries(df, series=series, ts=ts, value=value)
@@ -53,7 +53,7 @@ def encode_timeseries(
         "series_id",
         F.unix_timestamp("ts").alias("epoch"),
         "value",
-        (F.unix_timestamp("ts") - (F.unix_timestamp("ts") % 7200)).alias(
+        (F.unix_timestamp("ts") - (F.unix_timestamp("ts") % BLOCK_SECONDS)).alias(
             "header_time"
         ),
     )

@@ -13,10 +13,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def to_double_array(col: Column | str) -> Column:
-    return F.transform(F.col(col) if isinstance(col, str) else col, lambda x: x.cast("double"))
-
-
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product: sum_i a[i]*b[i].
 
@@ -60,7 +56,3 @@ def norm_fixed(a: Column, dims: int) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def cosine_fixed(a: Column, b: Column, dims: int) -> Column:
-    return dot_fixed(a, b, dims) / (norm_fixed(a, dims) * norm_fixed(b, dims))

@@ -23,8 +23,14 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gibbon_spark.functions import exact as exact_fns
-from gibbon_spark.functions.exact import exact_avg
+from gibbon_spark.functions.exact import (
+    exact_avg,
+    exact_avg_sql,
+    money4,
+    money4_sql,
+    money_sum,
+    money_sum_sql,
+)
 from gibbon_spark.operators import layout
 from gibbon_spark.operators import merge as merge_ops
 from gibbon_spark.operators import skew as skew_ops
@@ -134,64 +140,6 @@ def _prep(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     return [load_table(spark, sf_dir, n) for n in names]
 
 
-def money_sum(col, dp: int = 2):
-    """Deterministic money-sum, bit-identical to the DuckDB oracle's
-    ``CAST(round(sum(CAST(round((x) + 1e-9, 4) AS DECIMAL(24,4))), dp)
-    AS DOUBLE)`` at any magnitude: round each row to 4 dp (+1e-9 keeps
-    exactly-representable ties off the half boundary, where Spark rounds
-    half-up and DuckDB half-even), sum EXACTLY (order-free), round to
-    ``dp`` places in exact integer space, and only then present as a
-    double.
-
-    Implementation (r12 optimization): the exact sum is carried as a
-    1e-4-scaled BIGINT (:func:`_scaled_long`) instead of
-    ``decimal(24,4)`` — same exact value per row (verified row-for-row
-    on the gate data and end-to-end by the oracle gate), but the
-    per-row BigDecimal construction and the non-compact decimal(34,4)
-    sum buffer become plain codegen long arithmetic: measured 2.3 s →
-    0.7 s on q1's 8-aggregate pass at sf0.1.
-
-    Why not round AFTER a cast to double: at sf10 the big money sums
-    reach ~1e13 where a double ULP is ~0.002, and the two engines'
-    round(double, 2) disagree on the SAME bit pattern — Spark rounds
-    the double's shortest decimal representation (BigDecimal.valueOf →
-    Double.toString) while DuckDB rounds its exact binary value, e.g.
-    decimal 10116031050223.8550 → double ...223.85499…, Spark .86 vs
-    DuckDB .85 (caught by the round-9 sf10 oracle sweep on q1/q7).
-
-    Sum-domain bound (r13, widened): the r12 form summed the scaled
-    longs in a single int64, exact only through ~sf1500
-    (|Σ·10^4| < 2^63); past that ANSI raises ARITHMETIC_OVERFLOW and
-    the query dies — two orders below the 100 TB ≈ sf100000 target.
-    The accumulator is now the hi/lo split-long sum of
-    :func:`exact_fns.money_exact_sum` (see there for the domain,
-    ≈ sf10^10, and the 1.04× measured cost), recombined to an exact
-    ``decimal(38,0)`` per group. Post-sum, ``s/10000`` restores the
-    true money value exactly (decimal(38,6), scale-6 ≥ the value's
-    scale 4, so no rounding), ``round(·, dp)`` is decimal HALF_UP ==
-    the oracle's half-away-from-zero on the same exact value == the
-    r12 integer-space div trick, and the final decimal→double cast is
-    correctly rounded at ANY magnitude (OpenJDK BigDecimal.doubleValue
-    falls back to the exact path past 2^52) — bit-identical to the r12
-    ``(double)q / 10^dp`` wherever |q| < 2^53, i.e. every gate SF."""
-    s = exact_fns.money_exact_sum(col)
-    return F.round(s / F.lit(10000), dp).cast("double")
-
-
-def money_sum_sql(expr: str, dp: int = 2) -> str:
-    return (
-        f"CAST(round(sum(CAST(round(({expr}) + 1e-9, 4) AS DECIMAL(24,4))), "
-        f"{dp}) AS DOUBLE)"
-    )
-
-
-def exact_avg_sql(expr: str) -> str:
-    return (
-        f"round(CAST(sum(CAST(round(({expr}) + 1e-9, 4) AS DECIMAL(24,4))) "
-        f"AS DOUBLE) / count({expr}) + 1e-9, 6)"
-    )
-
-
 # =========================================================================
 # Time-series surface (reference operators #13-#22, SURVEY.md §2.1)
 # =========================================================================
@@ -199,11 +147,11 @@ def exact_avg_sql(expr: str) -> str:
 
 @query(
     "ts_summary",
-    """
+    f"""
     SELECT min(value) AS min_value,
            max(value) AS max_value,
            count(*) AS n_samples,
-           round(CAST(sum(CAST(round((value) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) / count(value) + 1e-9, 6) AS avg_value,
+           {exact_avg_sql("value")} AS avg_value,
            max(ts) AS max_ts
     FROM events
     """,
@@ -218,12 +166,12 @@ def q_ts_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_summary_by_series",
-    """
+    f"""
     SELECT event_type,
            min(value) AS min_value,
            max(value) AS max_value,
            count(*) AS n_samples,
-           round(CAST(sum(CAST(round((value) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) / count(value) + 1e-9, 6) AS avg_value,
+           {exact_avg_sql("value")} AS avg_value,
            max(ts) AS max_ts
     FROM events
     GROUP BY event_type
@@ -338,11 +286,11 @@ def q_ts_dod_class_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_bucket_2h",
-    """
+    f"""
     SELECT time_bucket(INTERVAL '2 hours', ts) AS bucket_start,
            event_type,
            count(*) AS n_samples,
-           round(CAST(sum(CAST(round((value) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) / count(value) + 1e-9, 6) AS avg_value
+           {exact_avg_sql("value")} AS avg_value
     FROM events
     GROUP BY 1, 2
     """,
@@ -364,13 +312,13 @@ def q_ts_bucket_2h(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_resample_1h",
-    """
+    f"""
     SELECT event_type,
            time_bucket(INTERVAL '1 hour', ts) AS bucket_start,
            min(value) AS min_value,
            max(value) AS max_value,
            count(*) AS n_samples,
-           round(CAST(sum(CAST(round((value) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) / count(value) + 1e-9, 6) AS avg_value
+           {exact_avg_sql("value")} AS avg_value
     FROM events
     GROUP BY 1, 2
     """,
@@ -415,8 +363,8 @@ def q_ts_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_topk_series",
-    """
-    SELECT user_id, count(*) AS n_events, round(CAST(sum(CAST(round((value) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) / count(value) + 1e-9, 6) AS avg_value
+    f"""
+    SELECT user_id, count(*) AS n_events, {exact_avg_sql("value")} AS avg_value
     FROM events
     GROUP BY user_id
     ORDER BY n_events DESC, user_id
@@ -460,16 +408,16 @@ def q_ts_compression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q1_pricing_summary",
-    """
+    f"""
     SELECT l_returnflag,
            l_linestatus,
-           CAST(round(sum(CAST(round((l_quantity) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS sum_qty,
-           CAST(round(sum(CAST(round((l_extendedprice) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS sum_base_price,
-           CAST(round(sum(CAST(round((l_extendedprice * (1 - l_discount)) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS sum_disc_price,
-           CAST(round(sum(CAST(round((l_extendedprice * (1 - l_discount) * (1 + l_tax)) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS sum_charge,
-           round(CAST(sum(CAST(round((l_quantity) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) / count(l_quantity) + 1e-9, 6) AS avg_qty,
-           round(CAST(sum(CAST(round((l_extendedprice) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) / count(l_extendedprice) + 1e-9, 6) AS avg_price,
-           round(CAST(sum(CAST(round((l_discount) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) / count(l_discount) + 1e-9, 6) AS avg_disc,
+           {money_sum_sql("l_quantity")} AS sum_qty,
+           {money_sum_sql("l_extendedprice")} AS sum_base_price,
+           {money_sum_sql("l_extendedprice * (1 - l_discount)")} AS sum_disc_price,
+           {money_sum_sql("l_extendedprice * (1 - l_discount) * (1 + l_tax)")} AS sum_charge,
+           {exact_avg_sql("l_quantity")} AS avg_qty,
+           {exact_avg_sql("l_extendedprice")} AS avg_price,
+           {exact_avg_sql("l_discount")} AS avg_disc,
            count(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -500,9 +448,9 @@ def q_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q3_top_orders",
-    """
+    f"""
     SELECT l.l_orderkey AS o_orderkey,
-           CAST(round(sum(CAST(round((l.l_extendedprice * (1 - l.l_discount)) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS revenue,
+           {money_sum_sql("l.l_extendedprice * (1 - l.l_discount)")} AS revenue,
            o.o_orderdate,
            o.o_orderpriority
     FROM customer c
@@ -540,10 +488,10 @@ def q_q3_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q5_region_revenue",
-    """
+    f"""
     SELECT r.r_name,
            n.n_name,
-           CAST(round(sum(CAST(round((l.l_extendedprice * (1 - l.l_discount)) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS revenue,
+           {money_sum_sql("l.l_extendedprice * (1 - l.l_discount)")} AS revenue,
            count(*) AS n_items
     FROM lineitem l
     JOIN orders o   ON l.l_orderkey = o.o_orderkey
@@ -666,7 +614,7 @@ def q_ts_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_range_join",
-    """
+    f"""
     WITH spikes AS (
       SELECT event_id AS spike_id, ts AS w_start,
              ts + INTERVAL 15 MINUTE AS w_end
@@ -675,8 +623,7 @@ def q_ts_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT s.spike_id, s.w_start,
            count(*) AS n_events,
            count(DISTINCT e.user_id) AS n_users,
-           round(CAST(sum(CAST(round((e.value) + 1e-9, 4) AS DECIMAL(24,4)))
-                      AS DOUBLE) / count(e.value) + 1e-9, 6) AS avg_value
+           {exact_avg_sql("e.value")} AS avg_value
     FROM spikes s JOIN events e
       ON e.ts >= s.w_start AND e.ts < s.w_end
     GROUP BY s.spike_id, s.w_start
@@ -713,9 +660,7 @@ def q_ts_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = joined.groupBy("spike_id", "w_start", "user_id").agg(
         F.count(F.lit(1)).alias("_c"),
         F.count("value").alias("_cv"),
-        F.sum(
-            F.round(F.col("value") + F.lit(1e-9), 4).cast("decimal(24,4)")
-        ).alias("_s"),
+        F.sum(money4(F.col("value"))).alias("_s"),
     )
     return (
         per_user.groupBy("spike_id", "w_start")
@@ -834,9 +779,9 @@ def q_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "outer_join_order_counts",
-    """
+    f"""
     SELECT c.c_custkey, count(o.o_orderkey) AS n_orders,
-           CAST(round(coalesce(sum(CAST(round((o.o_totalprice) + 1e-9, 4) AS DECIMAL(24,4))), 0), 2) AS DOUBLE) AS total_spend
+           CAST(round(coalesce(sum({money4_sql("o.o_totalprice")}), 0), 2) AS DOUBLE) AS total_spend
     FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
     GROUP BY c.c_custkey
     """,
@@ -851,11 +796,7 @@ def q_outer_join_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("o_orderkey").alias("n_orders"),
         F.round(
             F.coalesce(
-                F.sum(
-                    F.round(F.col("o_totalprice") + F.lit(1e-9), 4).cast(
-                        "decimal(24,4)"
-                    )
-                ),
+                F.sum(money4(F.col("o_totalprice"))),
                 F.lit(0).cast("decimal(24,4)"),
             ),
             2,
@@ -865,11 +806,11 @@ def q_outer_join_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_distinct",
-    """
+    f"""
     SELECT o_orderpriority,
            count(DISTINCT o_custkey) AS n_custs,
            count(*) AS n_orders,
-           CAST(round(sum(DISTINCT CAST(round((o_totalprice) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS sum_distinct_price
+           CAST(round(sum(DISTINCT {money4_sql("o_totalprice")}), 2) AS DOUBLE) AS sum_distinct_price
     FROM orders
     GROUP BY o_orderpriority
     """,
@@ -881,9 +822,7 @@ def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("o_custkey").alias("n_custs"),
         F.count(F.lit(1)).alias("n_orders"),
         F.round(
-            F.sum_distinct(
-                F.round(F.col("o_totalprice") + F.lit(1e-9), 4).cast("decimal(24,4)")
-            ),
+            F.sum_distinct(money4(F.col("o_totalprice"))),
             2,
         ).cast("double").alias("sum_distinct_price"),
     )
@@ -941,9 +880,9 @@ def q_agg_approx_distinct_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "rollup_lineitem",
-    """
+    f"""
     SELECT l_returnflag, l_linestatus, count(*) AS n,
-           CAST(round(sum(CAST(round((l_quantity) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS sum_qty
+           {money_sum_sql("l_quantity")} AS sum_qty
     FROM lineitem
     GROUP BY ROLLUP(l_returnflag, l_linestatus)
     """,
@@ -959,9 +898,9 @@ def q_rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cube_orders",
-    """
+    f"""
     SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-           CAST(round(sum(CAST(round((o_totalprice) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS sum_price
+           {money_sum_sql("o_totalprice")} AS sum_price
     FROM orders
     GROUP BY CUBE(o_orderstatus, o_orderpriority)
     """,
@@ -1160,8 +1099,8 @@ def q_subqueries_gallery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q6_forecast_revenue",
-    """
-    SELECT CAST(round(sum(CAST(round((l_extendedprice * l_discount) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS revenue,
+    f"""
+    SELECT {money_sum_sql("l_extendedprice * l_discount")} AS revenue,
            count(*) AS n_items
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -1416,7 +1355,7 @@ def q_window_frames_gallery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_sliding_window",
-    """
+    f"""
     WITH starts AS (
       SELECT event_type, value,
              unnest([time_bucket(INTERVAL '1 hour', ts),
@@ -1426,7 +1365,7 @@ def q_window_frames_gallery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT event_type, win_start,
            count(*) AS n_samples,
-           round(CAST(sum(CAST(round((value) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) / count(value) + 1e-9, 6) AS avg_value
+           {exact_avg_sql("value")} AS avg_value
     FROM starts
     WHERE ts >= win_start AND ts < win_start + INTERVAL '2 hours'
     GROUP BY event_type, win_start
@@ -1582,11 +1521,9 @@ def q_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q14_promo_ratio",
-    """
-    SELECT round(100.0 * CAST(sum(CAST(round((CASE WHEN p.p_type LIKE 'PROMO%'
-                                  THEN l.l_extendedprice * (1 - l.l_discount)
-                                  ELSE 0 END) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE)
-                 / CAST(sum(CAST(round((l.l_extendedprice * (1 - l.l_discount)) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) + 1e-9, 6) AS promo_pct,
+    f"""
+    SELECT round(100.0 * CAST(sum({money4_sql("CASE WHEN p.p_type LIKE 'PROMO%' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0 END")}) AS DOUBLE)
+                 / CAST(sum({money4_sql("l.l_extendedprice * (1 - l.l_discount)")}) AS DOUBLE) + 1e-9, 6) AS promo_pct,
            count(*) AS n_items
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     WHERE l.l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
@@ -1606,7 +1543,7 @@ def q_q14_promo_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     promo = F.when(F.col("p_type").like("PROMO%"), rev).otherwise(F.lit(0.0))
 
     def exact(c):
-        return F.sum(F.round(c + F.lit(1e-9), 4).cast("decimal(24,4)")).cast("double")
+        return F.sum(money4(c)).cast("double")
 
     return j.agg(
         F.round(
@@ -1647,12 +1584,12 @@ def q_q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q18_large_orders",
-    """
+    f"""
     SELECT c.c_custkey, o.o_orderkey, round(o.o_totalprice, 2) AS o_totalprice,
            round(t.sum_qty, 2) AS sum_qty
-    FROM (SELECT l_orderkey, CAST(sum(CAST(round((l_quantity) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) AS sum_qty
+    FROM (SELECT l_orderkey, CAST(sum({money4_sql("l_quantity")}) AS DOUBLE) AS sum_qty
           FROM lineitem GROUP BY l_orderkey
-          HAVING CAST(sum(CAST(round((l_quantity) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) > 150) t
+          HAVING CAST(sum({money4_sql("l_quantity")}) AS DOUBLE) > 150) t
     JOIN orders o ON t.l_orderkey = o.o_orderkey
     JOIN customer c ON o.o_custkey = c.c_custkey
     """,
@@ -1666,9 +1603,7 @@ def q_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = (
         li.groupBy("l_orderkey")
         .agg(
-            F.sum(
-                F.round(F.col("l_quantity") + F.lit(1e-9), 4).cast("decimal(24,4)")
-            )
+            F.sum(money4(F.col("l_quantity")))
             .cast("double")
             .alias("sum_qty")
         )
@@ -1689,8 +1624,8 @@ def q_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q19_disjunctive",
-    """
-    SELECT CAST(round(sum(CAST(round((l.l_extendedprice * (1 - l.l_discount)) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS revenue,
+    f"""
+    SELECT {money_sum_sql("l.l_extendedprice * (1 - l.l_discount)")} AS revenue,
            count(*) AS n_items
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     WHERE (p.p_brand = 'Brand#12' AND l.l_quantity BETWEEN 1 AND 11 AND p.p_size BETWEEN 1 AND 5)
@@ -1813,10 +1748,10 @@ def q_stats_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q7_nation_volume",
-    """
+    f"""
     SELECT ns.n_name AS supp_nation,
            nc.n_name AS cust_nation,
-           CAST(round(sum(CAST(round((l.l_extendedprice * (1 - l.l_discount)) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS revenue,
+           {money_sum_sql("l.l_extendedprice * (1 - l.l_discount)")} AS revenue,
            count(*) AS n_items
     FROM lineitem l
     JOIN supplier s ON l.l_suppkey = s.s_suppkey
@@ -1859,9 +1794,9 @@ def q_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q10_returned_items",
-    """
+    f"""
     SELECT c.c_custkey, c.c_name,
-           CAST(round(sum(CAST(round((l.l_extendedprice * (1 - l.l_discount)) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS revenue
+           {money_sum_sql("l.l_extendedprice * (1 - l.l_discount)")} AS revenue
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -1912,10 +1847,10 @@ def q_q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFram
 
 @query(
     "q22_idle_rich_customers",
-    """
+    f"""
     SELECT substr(c.c_name, 10, 2) AS name_tag,
            count(*) AS n_custs,
-           CAST(round(sum(CAST(round((c.c_acctbal) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS total_bal
+           {money_sum_sql("c.c_acctbal")} AS total_bal
     FROM customer c
     WHERE c.c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0)
       AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
@@ -1933,10 +1868,10 @@ def q_q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         df.createOrReplaceTempView(name)
     return spark.sql(
-        """
+        f"""
         SELECT substr(c.c_name, 10, 2) AS name_tag,
                count(*) AS n_custs,
-               CAST(round(sum(CAST(round((c.c_acctbal) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS total_bal
+               {money_sum_sql("c.c_acctbal")} AS total_bal
         FROM customer c
         WHERE c.c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0)
           AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
@@ -1948,11 +1883,10 @@ def q_q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q8_market_share",
-    """
+    f"""
     SELECT o_year,
-           round(CAST(sum(CAST(round((CASE WHEN supp_nation = 'NATION_0'
-                                      THEN volume ELSE 0 END) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE)
-                 / CAST(sum(CAST(round((volume) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) + 1e-9, 6) AS mkt_share,
+           round(CAST(sum({money4_sql("CASE WHEN supp_nation = 'NATION_0' THEN volume ELSE 0 END")}) AS DOUBLE)
+                 / CAST(sum({money4_sql("volume")}) AS DOUBLE) + 1e-9, 6) AS mkt_share,
            count(*) AS n_items
     FROM (
       SELECT year(o.o_orderdate) AS o_year,
@@ -1997,7 +1931,7 @@ def q_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume = F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
     def exact(c):
-        return F.sum(F.round(c + F.lit(1e-9), 4).cast("decimal(24,4)")).cast("double")
+        return F.sum(money4(c)).cast("double")
 
     return j.groupBy("o_year").agg(
         F.round(
@@ -2012,10 +1946,10 @@ def q_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q9_product_profit",
-    """
+    f"""
     SELECT ns.n_name AS nation,
            year(o.o_orderdate) AS o_year,
-           CAST(round(sum(CAST(round((l.l_extendedprice * (1 - l.l_discount) - 0.5 * p.p_retailprice * l.l_quantity) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS sum_profit
+           {money_sum_sql("l.l_extendedprice * (1 - l.l_discount) - 0.5 * p.p_retailprice * l.l_quantity")} AS sum_profit
     FROM lineitem l
     JOIN part p     ON l.l_partkey = p.p_partkey
     JOIN supplier s ON l.l_suppkey = s.s_suppkey
@@ -2085,10 +2019,10 @@ def q_q12_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q15_top_supplier",
-    """
+    f"""
     WITH rev AS (
       SELECT l_suppkey AS supplier_no,
-             CAST(round(sum(CAST(round((l_extendedprice * (1 - l_discount)) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS total_revenue
+             {money_sum_sql("l_extendedprice * (1 - l_discount)")} AS total_revenue
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
@@ -2194,13 +2128,13 @@ def q_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q20_volume_suppliers",
-    """
+    f"""
     SELECT s.s_suppkey, s.s_name
     FROM supplier s
     WHERE EXISTS (
       SELECT 1 FROM (
         SELECT l.l_suppkey,
-               CAST(round(sum(CAST(round((l.l_quantity) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS qty
+               {money_sum_sql("l.l_quantity")} AS qty
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         WHERE p.p_name LIKE 'red%'
         GROUP BY l.l_suppkey
@@ -2377,10 +2311,10 @@ def q_map_ops_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q11_important_stock",
-    """
+    f"""
     WITH pv AS (
       SELECT l_partkey,
-             CAST(round(sum(CAST(round((l_extendedprice * (1 - l_discount)) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE) AS part_value
+             {money_sum_sql("l_extendedprice * (1 - l_discount)")} AS part_value
       FROM lineitem GROUP BY l_partkey
     )
     SELECT l_partkey, part_value
@@ -2408,11 +2342,11 @@ def q_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_rollup_hypertable",
-    """
+    f"""
     SELECT date_trunc('day', ts) AS day,
            time_bucket(INTERVAL '2 hours', ts) AS bucket_2h,
            count(*) AS n_samples,
-           round(CAST(sum(CAST(round((value) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) / count(value) + 1e-9, 6) AS avg_value,
+           {exact_avg_sql("value")} AS avg_value,
            max(value) AS max_value
     FROM events
     GROUP BY ROLLUP (day, bucket_2h)
@@ -3001,9 +2935,10 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     loader (sources/tables.py): if the parquet stores TIMESTAMP(NANOS)
     the column arrives as a long (nanosAsLong) and is converted to a
     microsecond timestamp JVM-side; if it is already a timestamp it is
-    passed through unchanged."""
+    passed through unchanged. Pins the session to UTC like :func:`_prep`."""
     from pyspark.sql.types import LongType
 
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from gibbon_spark.sources.tables import raw_schema as _raw_schema
 
@@ -3065,7 +3000,6 @@ def q_streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     store (streaming/ingest.py), where windows emit incrementally and
     state stays bounded. The order-free decimal money_sum makes the
     result identical no matter how the stream is micro-batched."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     s = _events_stream(spark, sf_dir)
     rolled = s.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -3150,10 +3084,10 @@ def q_streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_anomaly_zscore",
-    """
+    f"""
     WITH r AS (
       SELECT event_id, user_id,
-             CAST(round(value + 1e-9, 4) AS DECIMAL(24,4)) AS r4
+             {money4_sql("value")} AS r4
       FROM events
     ),
     a AS (
@@ -3180,7 +3114,7 @@ def q_ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     anomaly flags reproducible across partitionings. One aggregate +
     one join back, both shuffles on the series key."""
     (ev,) = _prep(spark, sf_dir, "events")
-    r4 = F.round(F.col("value") + F.lit(1e-9), 4).cast("decimal(24,4)")
+    r4 = money4(F.col("value"))
     r = ev.select("event_id", "user_id", r4.alias("r4"))
     a = r.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n"),
@@ -3205,10 +3139,10 @@ def q_ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "skew_salted_agg",
-    """
+    f"""
     WITH r AS (
       SELECT event_type,
-             CAST(round(value + 1e-9, 4) AS DECIMAL(24,4)) AS r4
+             {money4_sql("value")} AS r4
       FROM events
     )
     SELECT event_type,
@@ -3231,7 +3165,7 @@ def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gibbon_spark.operators import skew
 
     (ev,) = _prep(spark, sf_dir, "events")
-    r4 = F.round(F.col("value") + F.lit(1e-9), 4).cast("decimal(24,4)")
+    r4 = money4(F.col("value"))
     s = skew.salted_summary(
         ev.select("event_type", r4.alias("r4")),
         ["event_type"],
@@ -3343,7 +3277,6 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark so closed sessions emit incrementally and state stays
     bounded (complete mode here only because the gate wants every
     session, including the ones a finite stream never closes)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     s = _events_stream(spark, sf_dir)
     sess = s.groupBy(
         "user_id", F.session_window("ts", "30 minutes").alias("sw")
@@ -3585,9 +3518,7 @@ def q_ts_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("increase"),
     )
     total = F.round(
-        F.sum(
-            F.round(F.col("increase") + F.lit(1e-9), 4).cast("decimal(24,4)")
-        ),
+        F.sum(money4(F.col("increase"))),
         4,
     ).cast("double")
     span = F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts"))
@@ -3803,7 +3734,6 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-ingest gate is streaming/ingest.py::dedup_stream
     (dropDuplicatesWithinWatermark), which bounds state by the
     watermark at 100 TB/day."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     s = _events_stream(spark, sf_dir)
     deduped = s.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
@@ -3944,7 +3874,7 @@ def q_window_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_stateful_summary",
-    """
+    f"""
     WITH o AS (
       SELECT user_id, value, ts, event_id,
              row_number() OVER (PARTITION BY user_id
@@ -3953,7 +3883,7 @@ def q_window_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT user_id, count(*) AS n_events,
            min(value) AS min_value, max(value) AS max_value,
-           CAST(round(sum(CAST(round(value + 1e-9, 4) AS DECIMAL(24,4))), 4) AS DOUBLE) AS sum_4dp,
+           {money_sum_sql("value", 4)} AS sum_4dp,
            max(CASE WHEN rn = 1 THEN value END) AS last_value
     FROM o GROUP BY user_id
     """,
@@ -3972,7 +3902,6 @@ def q_streaming_stateful_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit. State is O(1) per series, keyed by the shuffle."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     s = _events_stream(spark, sf_dir).select("user_id", "ts", "event_id", "value")
 
     out_schema = (
@@ -4030,7 +3959,7 @@ def q_streaming_stateful_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "null_semantics_gallery",
-    """
+    f"""
     WITH o AS (
       SELECT o_orderkey,
              CASE WHEN o_orderkey % 5 = 0 THEN NULL ELSE o_totalprice END AS p,
@@ -4044,8 +3973,8 @@ def q_streaming_stateful_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(CASE WHEN pr IS NOT DISTINCT FROM NULL THEN 1 ELSE 0 END)
              AS BIGINT) AS n_null_safe_eq,
            count(DISTINCT pr) AS n_distinct_pr,
-           round(CAST(sum(CAST(round((p) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) / count(p) + 1e-9, 6) AS avg_skipnull,
-           CAST(round(sum(CAST(round(coalesce(p, 0) + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE)
+           {exact_avg_sql("p")} AS avg_skipnull,
+           {money_sum_sql("coalesce(p, 0)")}
              AS sum_coalesced
     FROM o
     """,
@@ -4211,12 +4140,11 @@ def q_events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_seasonality_profile",
-    """
+    f"""
     SELECT CAST(dayofweek(ts) + 1 AS INT) AS dow,
            CAST(hour(ts) AS INT) AS hour_of_day,
            count(*) AS n_samples,
-           round(CAST(sum(CAST(round((value) + 1e-9, 4) AS DECIMAL(24,4)))
-                      AS DOUBLE) / count(value) + 1e-9, 6) AS avg_value
+           {exact_avg_sql("value")} AS avg_value
     FROM events
     GROUP BY 1, 2
     """,
@@ -4304,8 +4232,7 @@ def q_percentiles_by_group_approx(spark: SparkSession, sf_dir: str) -> DataFrame
     f"""
     WITH spend AS (
       SELECT o_custkey,
-             CAST(sum(CAST(round((o_totalprice) + 1e-9, 4)
-                           AS DECIMAL(24,4))) AS DOUBLE) AS s
+             CAST(sum({money4_sql("o_totalprice")}) AS DOUBLE) AS s
       FROM orders GROUP BY o_custkey
     ),
     ranked AS (
@@ -4350,9 +4277,7 @@ def q_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     operand doubles on both engines."""
     (orders,) = _prep(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(
-        F.sum(
-            F.round(F.col("o_totalprice") + F.lit(1e-9), 4).cast("decimal(24,4)")
-        )
+        F.sum(money4(F.col("o_totalprice")))
         .cast("double")
         .alias("s")
     )

@@ -18,8 +18,9 @@ from pyspark.sql import functions as F
 
 from gibbon_spark.codec import oracle_sql as _codec_oracle
 from gibbon_spark.functions import text as tx
+from gibbon_spark.functions.exact import exact_avg, exact_avg_sql, money4
 from gibbon_spark.operators import dedup, similarity
-from gibbon_spark.queries import _prep, exact_avg, query
+from gibbon_spark.queries import _prep, query
 from gibbon_spark.materialize import materialize
 
 # ---------------------------------------------------------------------------
@@ -792,11 +793,11 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "gorilla_roundtrip_summary",
-    """
+    f"""
     SELECT min(value) AS min_value,
            max(value) AS max_value,
            count(*) AS n_samples,
-           round(CAST(sum(CAST(round((value) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) / count(value) + 1e-9, 6) AS avg_value,
+           {exact_avg_sql("value")} AS avg_value,
            max(CAST(floor(epoch(ts)) AS BIGINT)) AS max_ts_epoch
     FROM events
     """,
@@ -863,11 +864,7 @@ def q_gorilla_dual_path_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.when(F.col("side") == tag, col)
 
     def dec_sum(tag):
-        return F.sum(
-            F.round(side(tag, F.col("value")) + F.lit(1e-9), 4).cast(
-                "decimal(24,4)"
-            )
-        )
+        return F.sum(money4(side(tag, F.col("value"))))
 
     agg = u.agg(
         F.count(side("r", F.lit(1))).alias("n_samples"),

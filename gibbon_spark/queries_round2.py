@@ -20,14 +20,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gibbon_spark.functions import text as tx
+from gibbon_spark.functions.exact import money4, money4_sql, money_sum, money_sum_sql
 from gibbon_spark.queries import (
     _finite_replay,
     _replay_parts,
     _events_stream,
     _prep,
     _replay_width,
-    money_sum,
-    money_sum_sql,
     query,
 )
 from gibbon_spark.streaming.joins import stream_interval_join
@@ -68,11 +67,7 @@ def q_mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     def partial(df: DataFrame) -> DataFrame:
         return df.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
             F.count(F.lit(1)).alias("pn"),
-            F.sum(
-                F.round(F.col("o_totalprice") + F.lit(1e-9), 4).cast(
-                    "decimal(24,4)"
-                )
-            ).alias("ps"),
+            F.sum(money4(F.col("o_totalprice"))).alias("ps"),
         )
 
     base = partial(orders.filter(F.col("o_orderdate") < cutoff))
@@ -434,11 +429,10 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batching. The reference has no streaming join (synchronous
     single writer, examples/csv_to_packed.rs:23-27); SURVEY §2.2
     streaming category."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     s1 = _events_stream(spark, sf_dir)
     s2 = _events_stream(spark, sf_dir)
     # withWatermark requires TIMESTAMP (LTZ); the parquet stores NTZ.
-    # The session tz is pinned UTC above, so the cast is value-preserving.
+    # _events_stream pins the session tz to UTC, so the cast is value-preserving.
     purchases = s1.filter(F.col("event_type") == "purchase").select(
         "user_id",
         F.col("event_id").alias("purchase_id"),
@@ -683,7 +677,6 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch join oracle. At 100 TB/day the same plan holds: the stream
     shuffles only for the final aggregate, the dim re-broadcasts per
     trigger (refreshable without restart)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from gibbon_spark.sources.tables import load_table
 
     s = _events_stream(spark, sf_dir)
@@ -882,9 +875,9 @@ def q_quality_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "running_total_orders",
-    """
+    f"""
     SELECT o_orderkey, o_orderdate,
-           CAST(round(sum(CAST(round(o_totalprice + 1e-9, 4) AS DECIMAL(24,4))) OVER (ORDER BY o_orderdate, o_orderkey
+           CAST(round(sum({money4_sql("o_totalprice")}) OVER (ORDER BY o_orderdate, o_orderkey
                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS DOUBLE) AS running_revenue
     FROM orders
     """,
@@ -902,7 +895,7 @@ def q_running_total_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gibbon_spark.operators.ranking import global_running_sum
 
     (orders,) = _prep(spark, sf_dir, "orders")
-    val = F.round(F.col("o_totalprice") + F.lit(1e-9), 4).cast("decimal(24,4)")
+    val = money4(F.col("o_totalprice"))
     out = global_running_sum(
         orders.select("o_orderkey", "o_orderdate", "o_totalprice"),
         [F.asc("o_orderdate"), F.asc("o_orderkey")],
@@ -970,10 +963,10 @@ def q_array_hof_gallery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_cusum_changepoints",
-    """
+    f"""
     WITH r AS (
       SELECT event_id, user_id, ts,
-             CAST(round(value + 1e-9, 4) AS DECIMAL(24,4)) AS r4
+             {money4_sql("value")} AS r4
       FROM events
     ),
     st AS (
@@ -1017,7 +1010,7 @@ def q_ts_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     match bit-for-bit. Plan: one aggregate + one keyed window shuffle —
     both on user_id, reusable partitioning, no whole-frame operator."""
     (events,) = _prep(spark, sf_dir, "events")
-    r4 = F.round(F.col("value") + F.lit(1e-9), 4).cast("decimal(24,4)")
+    r4 = money4(F.col("value"))
     r = events.select("event_id", "user_id", "ts", r4.alias("r4"))
     rd = F.col("r4").cast("double")
     sq = F.round(rd * rd + F.lit(1e-9), 8).cast("decimal(30,8)")
@@ -1065,10 +1058,10 @@ def q_ts_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sql_api_nation_revenue",
-    """
+    f"""
     SELECT n.n_name,
            count(DISTINCT o.o_custkey) AS n_buyers,
-           CAST(round(sum(CAST(round(o.o_totalprice + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE)
+           {money_sum_sql("o.o_totalprice")}
              AS revenue
     FROM orders o
     JOIN customer c ON o.o_custkey = c.c_custkey
@@ -1085,16 +1078,14 @@ def q_sql_api_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is nearly the identical text, modulo DuckDB's cast syntax).
     Users porting warehouse SQL onto this engine use exactly this
     entry point."""
-    from gibbon_spark.sources.tables import load_table
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    for t in ("orders", "customer", "nation"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"gs_{t}")
+    names = ("orders", "customer", "nation")
+    for name, df in zip(names, _prep(spark, sf_dir, *names)):
+        df.createOrReplaceTempView(f"gs_{name}")
     return spark.sql(
-        """
+        f"""
         SELECT n.n_name,
                count(DISTINCT o.o_custkey) AS n_buyers,
-               CAST(round(sum(CAST(round(o.o_totalprice + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE)
+               {money_sum_sql("o.o_totalprice")}
                  AS revenue
         FROM gs_orders o
         JOIN gs_customer c ON o.o_custkey = c.c_custkey
@@ -1324,7 +1315,7 @@ def q_sample_mixture_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_time_weighted_avg",
-    """
+    f"""
     WITH w AS (
       SELECT user_id, ts, value,
              lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
@@ -1333,7 +1324,7 @@ def q_sample_mixture_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg AS (
       SELECT user_id,
              CAST(date_diff('second', ts, nxt) AS BIGINT) AS dt,
-             CAST(round(value + 1e-9, 4) AS DECIMAL(24,4)) AS v4
+             {money4_sql("value")} AS v4
       FROM w WHERE nxt IS NOT NULL
     )
     SELECT user_id,
@@ -1363,9 +1354,7 @@ def q_ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "ts",
             F.lead("ts").over(w).alias("nxt"),
-            F.round(F.col("value") + F.lit(1e-9), 4)
-            .cast("decimal(24,4)")
-            .alias("v4"),
+            money4(F.col("value")).alias("v4"),
         )
         .filter(F.col("nxt").isNotNull())
         .select(
@@ -1440,10 +1429,10 @@ def q_funnel_abandoned_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_sax_words",
-    """
+    f"""
     WITH r AS (
       SELECT event_id, user_id, ts,
-             CAST(round(value + 1e-9, 4) AS DECIMAL(24,4)) AS r4
+             {money4_sql("value")} AS r4
       FROM events
     ),
     st AS (
@@ -1493,7 +1482,7 @@ def q_ts_sax_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. Two keyed shuffles (stats, window+segment agg) — both on
     the series key."""
     (events,) = _prep(spark, sf_dir, "events")
-    r4 = F.round(F.col("value") + F.lit(1e-9), 4).cast("decimal(24,4)")
+    r4 = money4(F.col("value"))
     r = events.select("event_id", "user_id", "ts", r4.alias("r4"))
     rd = F.col("r4").cast("double")
     sq = F.round(rd * rd + F.lit(1e-9), 8).cast("decimal(30,8)")

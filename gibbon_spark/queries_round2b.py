@@ -1716,7 +1716,6 @@ def q_streaming_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of event volume — the reason sketches, not exact
     distinct sets, are what production streams maintain. The replay
     pins a bounded state-store width (_replay_width)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     s = _events_stream(spark, sf_dir)
     hexid = F.md5(F.col("user_id").cast("string"))
     v = F.conv(F.substring(hexid, 3, 13), 16, 10).cast("bigint")

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gibbon_spark.functions.exact import money4, money4_sql, money_sum_sql
 from gibbon_spark.queries import _prep, query
 
 # =========================================================================
@@ -461,7 +462,7 @@ def _rfm_cut_sql(col: str, q: float) -> str:
              date_diff('day', CAST(max(o_orderdate) AS DATE),
                        DATE '{_RFM_ANCHOR}') AS r_days,
              count(*) AS freq,
-             CAST(round(sum(CAST(round(o_totalprice + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE)
+             {money_sum_sql("o_totalprice")}
                AS monetary
       FROM orders GROUP BY o_custkey
     ),
@@ -488,7 +489,7 @@ def _rfm_cut_sql(col: str, q: float) -> str:
     )
     SELECT r_score, f_score, m_score,
            count(*) AS n_customers,
-           round(CAST(sum(CAST(round(monetary + 1e-9, 4) AS DECIMAL(24,4)))
+           round(CAST(sum({money4_sql("monetary")})
                       AS DOUBLE) / count(*) + 1e-9, 6) AS avg_monetary
     FROM scored
     GROUP BY r_score, f_score, m_score
@@ -518,9 +519,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("r_days"),
         F.count(F.lit(1)).alias("freq"),
         F.round(
-            F.sum(
-                F.round(F.col("o_totalprice") + F.lit(1e-9), 4).cast("decimal(24,4)")
-            ),
+            F.sum(money4(F.col("o_totalprice"))),
             2,
         ).cast("double").alias("monetary"),
     )
@@ -549,9 +548,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.groupBy("r_score", "f_score", "m_score").agg(
         F.count(F.lit(1)).alias("n_customers"),
         F.round(
-            F.sum(
-                F.round(F.col("monetary") + F.lit(1e-9), 4).cast("decimal(24,4)")
-            ).cast("double")
+            F.sum(money4(F.col("monetary"))).cast("double")
             / F.count(F.lit(1))
             + F.lit(1e-9),
             6,

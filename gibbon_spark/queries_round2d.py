@@ -25,8 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gibbon_spark.functions.exact import money4, money4_sql, money_sum, money_sum_sql
 from gibbon_spark.operators import ranking
-from gibbon_spark.queries import _prep, money_sum, money_sum_sql, query
+from gibbon_spark.queries import _prep, query
 from gibbon_spark.materialize import materialize
 
 # =========================================================================
@@ -841,7 +842,7 @@ def q_text_unigram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     unattributed AS (
       SELECT count(*) AS n_purchases_none,
-             CAST(round(sum(CAST(round(p.cents / 100.0 + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE)
+             {money_sum_sql("p.cents / 100.0")}
                AS revenue_none
       FROM p WHERE p.event_id NOT IN (SELECT event_id FROM j)
     )
@@ -931,11 +932,7 @@ def q_events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_purchases_none"),
             F.coalesce(
                 F.round(
-                    F.sum(
-                        F.round(F.col("cents") / F.lit(100.0) + F.lit(1e-9), 4).cast(
-                            "decimal(24,4)"
-                        )
-                    ),
+                    F.sum(money4(F.col("cents") / F.lit(100.0))),
                     2,
                 ).cast("double"),
                 F.lit(0.0),
@@ -952,10 +949,10 @@ def q_events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orders_growth_mom",
-    """
+    f"""
     WITH m AS (
       SELECT date_trunc('month', o_orderdate) AS month,
-             CAST(round(sum(CAST(round(o_totalprice + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE)
+             {money_sum_sql("o_totalprice")}
                AS revenue,
              count(*) AS n_orders
       FROM orders GROUP BY 1
@@ -980,9 +977,7 @@ def q_orders_growth_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orders,) = _prep(spark, sf_dir, "orders")
     m = orders.groupBy(F.date_trunc("month", "o_orderdate").alias("month")).agg(
         F.round(
-            F.sum(
-                F.round(F.col("o_totalprice") + F.lit(1e-9), 4).cast("decimal(24,4)")
-            ),
+            F.sum(money4(F.col("o_totalprice"))),
             2,
         ).cast("double").alias("revenue"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -1045,7 +1040,6 @@ def q_streaming_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
         _replay_width,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     s = _events_stream(spark, sf_dir)
     counts = s.groupBy(
         F.window(F.col("ts").cast("timestamp"), "2 hours").alias("w"), "event_type"
@@ -1076,19 +1070,18 @@ _SEAS_ANOM_TOL = 0.25
     WITH ym AS (
       SELECT CAST(extract(year FROM o_orderdate) AS INT) AS year,
              CAST(extract(month FROM o_orderdate) AS INT) AS month,
-             CAST(round(sum(CAST(round(o_totalprice + 1e-9, 4) AS DECIMAL(24,4))), 2) AS DOUBLE)
+             {money_sum_sql("o_totalprice")}
                AS revenue
       FROM orders GROUP BY 1, 2
     ),
     mm AS (
       SELECT month,
-             round(CAST(sum(CAST(round(revenue + 1e-9, 4) AS DECIMAL(24,4)))
+             round(CAST(sum({money4_sql("revenue")})
                         AS DOUBLE) / count(*) + 1e-9, 4) AS month_mean
       FROM ym GROUP BY month
     ),
     g AS (
-      SELECT round(CAST(sum(CAST(round(month_mean + 1e-9, 4)
-                                 AS DECIMAL(24,4))) AS DOUBLE) / count(*)
+      SELECT round(CAST(sum({money4_sql("month_mean")}) AS DOUBLE) / count(*)
                    + 1e-9, 4) AS global_mean
       FROM mm
     )
@@ -1124,17 +1117,13 @@ def q_orders_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year("o_orderdate").alias("year"), F.month("o_orderdate").alias("month")
     ).agg(
         F.round(
-            F.sum(
-                F.round(F.col("o_totalprice") + F.lit(1e-9), 4).cast("decimal(24,4)")
-            ),
+            F.sum(money4(F.col("o_totalprice"))),
             2,
         ).cast("double").alias("revenue")
     )
     mm = ym.groupBy("month").agg(
         F.round(
-            F.sum(
-                F.round(F.col("revenue") + F.lit(1e-9), 4).cast("decimal(24,4)")
-            ).cast("double")
+            F.sum(money4(F.col("revenue"))).cast("double")
             / F.count(F.lit(1))
             + F.lit(1e-9),
             4,
@@ -1142,9 +1131,7 @@ def q_orders_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = mm.agg(
         F.round(
-            F.sum(
-                F.round(F.col("month_mean") + F.lit(1e-9), 4).cast("decimal(24,4)")
-            ).cast("double")
+            F.sum(money4(F.col("month_mean"))).cast("double")
             / F.count(F.lit(1))
             + F.lit(1e-9),
             4,
@@ -1210,7 +1197,7 @@ _RAKE_TOP_K = 20
     ),
     scored AS (
       SELECT dpw.phrase,
-             CAST(round(sum(CAST(round(ws.word_score + 1e-9, 4) AS DECIMAL(24,4))), 4) AS DOUBLE)
+             {money_sum_sql("ws.word_score", 4)}
                AS rake_score
       FROM dpw JOIN ws USING (tok)
       GROUP BY dpw.phrase
@@ -1278,11 +1265,7 @@ def q_text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("phrase")
         .agg(
             F.round(
-                F.sum(
-                    F.round(F.col("word_score") + F.lit(1e-9), 4).cast(
-                        "decimal(24,4)"
-                    )
-                ),
+                F.sum(money4(F.col("word_score"))),
                 4,
             ).cast("double").alias("rake_score")
         )

@@ -11,8 +11,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gibbon_spark.functions.exact import exact_avg, exact_avg_sql
 from gibbon_spark.operators import skew as skew_ops
-from gibbon_spark.queries import _prep, exact_avg, query
+from gibbon_spark.queries import _prep, query
 
 # =========================================================================
 # Zipf(1.5) skew-stress join — salted plan vs plain-join oracle
@@ -128,11 +129,11 @@ def q_skew_zipf_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "gorilla_store_lifecycle",
-    """
+    f"""
     SELECT min(value) AS min_value,
            max(value) AS max_value,
            count(*) AS n_samples,
-           round(CAST(sum(CAST(round((value) + 1e-9, 4) AS DECIMAL(24,4))) AS DOUBLE) / count(value) + 1e-9, 6) AS avg_value,
+           {exact_avg_sql("value")} AS avg_value,
            max(CAST(floor(epoch(ts)) AS BIGINT)) AS max_ts_epoch,
            CAST(count(DISTINCT (CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(ts)) AS BIGINT) % 7200)) AS BIGINT) AS n_buckets
     FROM events

@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gibbon_spark.codec.gorilla import BLOCK_SECONDS
 from gibbon_spark.operators.timeseries import as_timeseries, with_bucket
 
 BUCKET_WIDTH = "2 hours"
@@ -202,7 +203,7 @@ def read_gorilla_store(
     codec/spark_ops.decode_timeseries."""
     df = spark.read.parquet(path)
     if start_epoch is not None:
-        lo = int(start_epoch) - 7200
+        lo = int(start_epoch) - BLOCK_SECONDS
         df = df.filter(F.col("bucket_day") >= lo - lo % DAY)
         df = df.filter(F.col("header_time") >= lo)
     if end_epoch is not None:

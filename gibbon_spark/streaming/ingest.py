@@ -27,8 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from gibbon_spark.operators.timeseries import as_timeseries, with_bucket
-
-BUCKET_WIDTH = "2 hours"
+from gibbon_spark.sources.bucketed import BUCKET_WIDTH
 
 
 def normalize_stream(
