@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from gibbon_spark.functions.text import fingerprint, tokens
 from gibbon_spark.materialize import materialize
+from gibbon_spark.session import pin_shuffle_partitions
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -1069,13 +1070,8 @@ def connected_components(
     # frame, and localCheckpoint pins partitioning before AQE can
     # coalesce. sym's partition count is already data-proportional
     # (AQE sized it when the cache materialized).
-    spark = edges.sparkSession
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
+    with pin_shuffle_partitions(edges.sparkSession, parts):
         labels = _cc_loop(sym, labels, max_iter)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
     sym.unpersist()
     edges.unpersist()
     return labels.select("node", F.col("label").alias("component"))

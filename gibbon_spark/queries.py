@@ -16,8 +16,6 @@ value-hash comparison exact:
 
 from __future__ import annotations
 
-import atexit
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -37,6 +35,7 @@ from gibbon_spark.operators import skew as skew_ops
 from gibbon_spark.operators import timeseries as ts_ops
 from gibbon_spark.sources.tables import load_table
 from gibbon_spark.materialize import materialize
+from gibbon_spark.streaming.replay import events_stream, replay
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -2824,162 +2823,6 @@ def q_ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming replay (batch-stream parity, oracle-exact) & anomaly scan
 # =========================================================================
 
-_REPLAY_DIRS: list[str] = []
-
-
-def _cleanup_replay_dirs() -> None:
-    import shutil
-
-    while _REPLAY_DIRS:
-        shutil.rmtree(_REPLAY_DIRS.pop(), ignore_errors=True)
-
-
-atexit.register(_cleanup_replay_dirs)
-
-
-def _replay_parts(spark: SparkSession, sf_dir: str, fname: str = "events.parquet") -> int:
-    """State/shuffle width for a finite replay, sized from the input:
-    ~2 MB of compressed source per state partition (≈12 MB raw — a few
-    hundred thousand session/agg keys), floored at 8 (below that the
-    per-store fixed overhead dominates, measured 8→2.8 s vs 32→8-15 s
-    on the sf0.1 stream-stream join) and capped at the session's core
-    count. A fixed width can't serve both ends: 8 was right at sf0.1
-    but starved the sf3 session build 2x (16.4 s vs 7.8 s at 32)."""
-    try:
-        size = os.path.getsize(os.path.join(sf_dir, fname))
-    except OSError:
-        size = 0
-    cpus = spark.sparkContext.defaultParallelism
-    return int(min(max(8, size // (2 << 20)), max(8, cpus)))
-
-
-def _finite_replay(spark: SparkSession, df: DataFrame, *, mode: str) -> DataFrame:
-    """Run an availableNow replay and materialize its output DISTRIBUTED.
-
-    Replaces the memory sink for the replay queries: the memory sink
-    funnels every output row through the driver and pins the whole
-    result under a temp view (2.9M session rows at sf3). Each emitted
-    micro-batch is instead pinned executor-side via
-    ``localCheckpoint(eager=True)`` inside ``foreachBatch`` (r13):
-    rows stay distributed in block storage, there is no scratch-parquet
-    write + commit + re-scan round trip — interleaved A/B at sf0.1 won
-    every rep on all 7 replay queries, ratios 0.65–0.97, e.g.
-    streaming_sessions 1.21 → 0.79 s, hourly_rollup 1.01 → 0.71 s.
-    ``complete`` mode keeps the LAST emission (each is the full
-    result); append/update modes union the emissions (disjoint deltas /
-    per-key updates that downstream reconciliation folds). A batch is
-    only appended after its eager checkpoint completes, so a timed-out
-    half-finished batch can never be read. Like every materialize()
-    site, local checkpoint blocks are executor state — under
-    ``spark.gibbon.checkpoint.mode=reliable`` (the durable production
-    setting) the replay keeps the r12 scratch-parquet path so outputs
-    survive executor loss.
-
-    After termination the finished run's loaded state-store providers
-    are explicitly unloaded: the provider cache is per-JVM and
-    otherwise holds every dead replay's state maps until a maintenance
-    sweep, measured as multi-x slowdown of later replays in one
-    session. Parquet scratch dirs (reliable mode) live until process
-    exit (atexit sweep): deleting the previous dir when the next replay
-    started turned any still-held prior result into a
-    FileNotFoundException on re-collect."""
-    import tempfile
-    import uuid
-
-    from gibbon_spark.materialize import _mode as _ckpt_mode
-
-    durable = _ckpt_mode(df) == "reliable"
-    batches: list[DataFrame] = []
-    if durable:
-        path = os.path.join(tempfile.gettempdir(), f"gs_replay_{uuid.uuid4().hex}")
-        _REPLAY_DIRS.append(path)
-        write_mode = "overwrite" if mode == "complete" else "append"
-
-        def _emit(bdf, _bid):
-            bdf.write.mode(write_mode).parquet(path)
-
-    else:
-
-        def _emit(bdf, _bid):
-            batches.append(bdf.localCheckpoint(eager=True))
-
-    q = (
-        df.writeStream.foreachBatch(_emit)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()  # timed out: halt the writer before reading the output
-        q.awaitTermination(30)
-    try:
-        spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    except Exception:
-        pass  # internal API — if it moves, we only lose the eager unload
-    if durable:
-        if not os.path.exists(path):
-            return spark.createDataFrame([], df.schema)
-        return spark.read.parquet(path)
-    if not batches:
-        return spark.createDataFrame([], df.schema)
-    if mode == "complete":
-        return batches[-1]
-    out = batches[0]
-    for b in batches[1:]:
-        out = out.unionAll(b)
-    return out
-
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming read of the events table, normalized like the batch
-    loader (sources/tables.py): if the parquet stores TIMESTAMP(NANOS)
-    the column arrives as a long (nanosAsLong) and is converted to a
-    microsecond timestamp JVM-side; if it is already a timestamp it is
-    passed through unchanged. Pins the session to UTC like :func:`_prep`."""
-    from pyspark.sql.types import LongType
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    from gibbon_spark.sources.tables import raw_schema as _raw_schema
-
-    raw_schema = _raw_schema(spark, sf_dir, "events")
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if isinstance(raw_schema["ts"].dataType, LongType):
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return stream
-
-
-
-
-class _replay_width:
-    """Pin a BOUNDED state/shuffle width for an availableNow replay.
-
-    Structured Streaming fixes the state-store partition count from
-    ``spark.sql.shuffle.partitions`` at query START and keeps it for the
-    checkpoint's lifetime. The session default (sized for batch scans on
-    the whole machine) gives every stateful operator that many RocksDB/
-    memory stores and per-trigger tasks — pure overhead when a replay's
-    state is a few thousand keys (measured 8 -> 2.8 s vs 32 -> 8-15 s on
-    the stream-stream join at sf0.1). Production streams size this to
-    key cardinality x throughput when the job is created; 8 is the
-    replay-volume choice, NOT a global default."""
-
-    def __init__(self, spark: SparkSession, parts: int = 8) -> None:
-        self.spark, self.parts = spark, parts
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.parts))
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
-
 
 @query(
     "streaming_hourly_rollup",
@@ -3000,13 +2843,12 @@ def q_streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     store (streaming/ingest.py), where windows emit incrementally and
     state stays bounded. The order-free decimal money_sum makes the
     result identical no matter how the stream is micro-batched."""
-    s = _events_stream(spark, sf_dir)
+    s = events_stream(spark, sf_dir)
     rolled = s.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count(F.lit(1)).alias("n"),
         money_sum(F.col("value")).alias("sum_value"),
     )
-    with _replay_width(spark, _replay_parts(spark, sf_dir)):
-        out = _finite_replay(spark, rolled, mode="complete")
+    out = replay(rolled, sf_dir, mode="complete")
     return out.select(
         F.col("w.start").alias("hour_start"), "event_type", "n", "sum_value"
     )
@@ -3277,12 +3119,11 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark so closed sessions emit incrementally and state stays
     bounded (complete mode here only because the gate wants every
     session, including the ones a finite stream never closes)."""
-    s = _events_stream(spark, sf_dir)
+    s = events_stream(spark, sf_dir)
     sess = s.groupBy(
         "user_id", F.session_window("ts", "30 minutes").alias("sw")
     ).agg(F.min("ts").alias("session_start"), F.count(F.lit(1)).alias("n_events"))
-    with _replay_width(spark, _replay_parts(spark, sf_dir)):
-        out = _finite_replay(spark, sess, mode="complete")
+    out = replay(sess, sf_dir, mode="complete")
     return out.select("user_id", "session_start", "n_events")
 
 
@@ -3734,13 +3575,11 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-ingest gate is streaming/ingest.py::dedup_stream
     (dropDuplicatesWithinWatermark), which bounds state by the
     watermark at 100 TB/day."""
-    s = _events_stream(spark, sf_dir)
+    s = events_stream(spark, sf_dir)
     deduped = s.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    with _replay_width(spark, _replay_parts(spark, sf_dir)):
-        out = _finite_replay(spark, deduped, mode="append")
-    return out
+    return replay(deduped, sf_dir, mode="append")
 
 
 @query(
@@ -3902,7 +3741,7 @@ def q_streaming_stateful_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit. State is O(1) per series, keyed by the shuffle."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    s = _events_stream(spark, sf_dir).select("user_id", "ts", "event_id", "value")
+    s = events_stream(spark, sf_dir).select("user_id", "ts", "event_id", "value")
 
     out_schema = (
         "user_id long, n_events long, min_value double, max_value double, "
@@ -3946,8 +3785,7 @@ def q_streaming_stateful_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     tracked = s.groupBy("user_id").applyInPandasWithState(
         track, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    with _replay_width(spark, _replay_parts(spark, sf_dir)):
-        out = _finite_replay(spark, tracked, mode="update")
+    out = replay(tracked, sf_dir, mode="update")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
         out

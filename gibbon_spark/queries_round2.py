@@ -21,15 +21,9 @@ from pyspark.sql import functions as F
 
 from gibbon_spark.functions import text as tx
 from gibbon_spark.functions.exact import money4, money4_sql, money_sum, money_sum_sql
-from gibbon_spark.queries import (
-    _finite_replay,
-    _replay_parts,
-    _events_stream,
-    _prep,
-    _replay_width,
-    query,
-)
+from gibbon_spark.queries import _prep, query
 from gibbon_spark.streaming.joins import stream_interval_join
+from gibbon_spark.streaming.replay import events_stream, replay
 from gibbon_spark.materialize import materialize
 
 # =========================================================================
@@ -429,10 +423,10 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batching. The reference has no streaming join (synchronous
     single writer, examples/csv_to_packed.rs:23-27); SURVEY §2.2
     streaming category."""
-    s1 = _events_stream(spark, sf_dir)
-    s2 = _events_stream(spark, sf_dir)
+    s1 = events_stream(spark, sf_dir)
+    s2 = events_stream(spark, sf_dir)
     # withWatermark requires TIMESTAMP (LTZ); the parquet stores NTZ.
-    # _events_stream pins the session tz to UTC, so the cast is value-preserving.
+    # events_stream pins the session tz to UTC, so the cast is value-preserving.
     purchases = s1.filter(F.col("event_type") == "purchase").select(
         "user_id",
         F.col("event_id").alias("purchase_id"),
@@ -448,9 +442,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "user_id", "purchase_id", F.col("click_id_right").alias("click_id")
     )
-    with _replay_width(spark, _replay_parts(spark, sf_dir)):
-        out = _finite_replay(spark, joined, mode="append")
-    return out
+    return replay(joined, sf_dir, mode="append")
 
 
 # =========================================================================
@@ -679,7 +671,7 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger (refreshable without restart)."""
     from gibbon_spark.sources.tables import load_table
 
-    s = _events_stream(spark, sf_dir)
+    s = events_stream(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
@@ -690,9 +682,7 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         money_sum(F.col("value")).alias("sum_value"),
     )
-    with _replay_width(spark, _replay_parts(spark, sf_dir)):
-        out = _finite_replay(spark, rolled, mode="complete")
-    return out
+    return replay(rolled, sf_dir, mode="complete")
 
 
 # =========================================================================

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from gibbon_spark.materialize import materialize
 from gibbon_spark.queries import _prep, query
+from gibbon_spark.streaming.replay import events_stream, replay
 
 # =========================================================================
 # RAG chunking: fixed token windows with overlap
@@ -1670,14 +1671,6 @@ def q_ts_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming sketch maintenance: HLL registers as streaming state
 # =========================================================================
 
-from gibbon_spark.queries import (  # noqa: E402
-    _events_stream,
-    _finite_replay,
-    _replay_parts,
-    _replay_width,
-)
-
-
 @query(
     "streaming_sketch_hll",
     """
@@ -1715,8 +1708,8 @@ def q_streaming_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: streaming state is bounded at days x 256 registers
     regardless of event volume — the reason sketches, not exact
     distinct sets, are what production streams maintain. The replay
-    pins a bounded state-store width (_replay_width)."""
-    s = _events_stream(spark, sf_dir)
+    pins a bounded state-store width (streaming.replay)."""
+    s = events_stream(spark, sf_dir)
     hexid = F.md5(F.col("user_id").cast("string"))
     v = F.conv(F.substring(hexid, 3, 13), 16, 10).cast("bigint")
     rho = F.when(v == 0, F.lit(53)).otherwise(
@@ -1735,8 +1728,7 @@ def q_streaming_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("day_num", "bucket")
         .agg(F.max("rho").alias("register"))
     )
-    with _replay_width(spark, _replay_parts(spark, sf_dir)):
-        out = _finite_replay(spark, regs, mode="complete")
+    out = replay(regs, sf_dir, mode="complete")
     return out.select("day_num", "bucket", "register")
 
 

@@ -29,6 +29,7 @@ from gibbon_spark.functions.exact import money4, money4_sql, money_sum, money_su
 from gibbon_spark.operators import ranking
 from gibbon_spark.queries import _prep, query
 from gibbon_spark.materialize import materialize
+from gibbon_spark.streaming.replay import events_stream, replay
 
 # =========================================================================
 # Merkle-style bucket-checksum table diff
@@ -1033,19 +1034,11 @@ def q_streaming_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark with rank in the sink query. The post-replay rank
     partitions by window over the tiny state table, pruned by
     WindowGroupLimit to k rows per window."""
-    from gibbon_spark.queries import (
-        _events_stream,
-        _finite_replay,
-        _replay_parts,
-        _replay_width,
-    )
-
-    s = _events_stream(spark, sf_dir)
+    s = events_stream(spark, sf_dir)
     counts = s.groupBy(
         F.window(F.col("ts").cast("timestamp"), "2 hours").alias("w"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n"))
-    with _replay_width(spark, _replay_parts(spark, sf_dir)):
-        out = _finite_replay(spark, counts, mode="complete")
+    out = replay(counts, sf_dir, mode="complete")
     state = out.select(
         F.col("w.start").alias("bucket_start"), "event_type", "n"
     )

@@ -12,6 +12,8 @@ the oracle (DuckDB) and are portable across clusters.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -21,6 +23,14 @@ def _cpus() -> int:
         return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     except ValueError:
         return 32
+
+
+def _driver_mem(phys_bytes: int) -> str:
+    """Default driver heap: half of physical RAM, capped at 48g. A flat
+    48g let the JVM grow to 12.7 GB RSS on a 15 GB host and lose it
+    midway through the test suite; half the host leaves room for the
+    Python workers and DuckDB."""
+    return f"{min(48 << 10, phys_bytes // 2 >> 20)}m"
 
 
 def get_spark(
@@ -54,7 +64,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or _driver_mem(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")),
+        )
         # The oracle harness collects FULL query outputs for hash
         # comparison; at sf10 a multi-million-row result serializes past
         # the 1g default (ts_downsample_m4: 24 tasks / 1058 MiB). 4g is
@@ -70,3 +84,15 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def pin_shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
+    """Set ``spark.sql.shuffle.partitions`` to ``n`` for the block and
+    restore the caller's value on exit, also when the block raises."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

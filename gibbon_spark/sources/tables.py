@@ -58,7 +58,7 @@ def raw_schema(spark: SparkSession, sf_dir: str, name: str):
     """The stored parquet schema of a table, inferred once per process
     and table version (nanosAsLong pinned first so TIMESTAMP(NANOS)
     columns arrive as longs, matching the conversion in
-    load_table/_events_stream)."""
+    load_table/streaming.replay.events_stream)."""
     path, key = _table_key(sf_dir, name)
     if key not in _SCHEMA_CACHE:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

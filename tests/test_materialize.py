@@ -113,13 +113,18 @@ def test_query_hash_invariant_across_modes(spark, tmp_path, monkeypatch):
 # materialize() consumers from DISTINCT families — non-eager shared
 # subtrees (containment's shingle table, the bigram LM), eager
 # iterative frontiers (connected components), the _pid-dependent
-# two-level global cumsum, and the blocked 3-way triangle join.
+# two-level global cumsum, and the blocked 3-way triangle join — plus
+# one streaming replay per output mode (complete / append / update),
+# whose foreachBatch emissions are pinned through materialize().
 _RELIABLE_INVARIANCE_QUERIES = (
     "dedup_containment",
     "dedup_clusters_cc",
     "text_perplexity_bigram",
     "running_total_orders",
     "graph_triangle_count",
+    "streaming_hourly_rollup",
+    "streaming_dedup",
+    "streaming_stateful_summary",
 )
 
 

@@ -10,6 +10,8 @@ import pytest
 
 from gibbon_spark.sources.csv_source import read_gibbon_csv, stream_gibbon_csv
 from gibbon_spark.streaming import ingest
+from gibbon_spark.streaming import replay as replay_mod
+from tests.conftest import SF_SMALL
 
 ROWS = [
     (10005, 0.34),
@@ -377,3 +379,16 @@ def test_transform_with_state_in_pandas(spark):
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     final = {r.series: (r.n, r.vmax) for r in rows}
     assert final == {"a": (3, 5.0), "b": (2, 7.0)}
+
+
+def test_replay_timeout_raises_and_restores_width(spark, monkeypatch):
+    """A replay that outlives its timeout is stopped and raises with the
+    query's last progress instead of returning the batches so far, and
+    the caller's shuffle width is restored on the way out."""
+    monkeypatch.setattr(replay_mod, "TIMEOUT_S", 0.001)  # PySpark rejects 0
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    counts = replay_mod.events_stream(spark, SF_SMALL).groupBy("event_type").count()
+    with pytest.raises(TimeoutError, match="last progress"):
+        replay_mod.replay(counts, SF_SMALL, mode="complete")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert not spark.streams.active

@@ -139,9 +139,9 @@ def run_once(fn, spark, sf_dir: str) -> float:
     # finished streaming memory-sink tables holding millions of rows) —
     # measured as 2-7x inflation of later sf3 runs before this existed.
     # Queries manage their own caches within a run, so clearing between
-    # runs only removes leaks, never live state. (The old _gs_stream_*
-    # temp-view sweep is gone with the memory sinks — all replays write
-    # scratch parquet via _finite_replay now.)
+    # runs only removes leaks, never live state. (No temp-view sweep is
+    # needed: replays pin their output through materialize(), see
+    # gibbon_spark/streaming/replay.py.)
     spark.catalog.clearCache()
     # localCheckpoint blocks (iterative queries: CC, k-means, pagerank)
     # are freed by the JVM ContextCleaner only after the Python-side
