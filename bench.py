@@ -32,10 +32,9 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
-    try:
-        cpus = max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    except ValueError:
-        cpus = 32
+    from gibbon_spark.session import _cpus, get_spark
+
+    cpus = _cpus()
 
     # ---- disk preflight (round-11, after the r10 driver bench died on
     # "No space left on device"): reap stale scratch (leaked DuckDB
@@ -66,7 +65,6 @@ def main() -> None:
         sys.exit(1)
 
     import __spark_entry__ as entrymod
-    from gibbon_spark.session import get_spark
 
     spark = get_spark("gibbon_spark_bench")
     qs = entrymod.queries()

@@ -19,10 +19,13 @@ from pyspark.sql import SparkSession
 
 
 def _cpus() -> int:
+    """Local core count: ``$SPARK_GRAFT_CPUS``, 32 when unset. An
+    unparsable value raises instead of silently running on 32 cores."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
     try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+        return max(1, int(raw))
     except ValueError:
-        return 32
+        raise ValueError(f"SPARK_GRAFT_CPUS must be an integer, got {raw!r}") from None
 
 
 def _driver_mem(phys_bytes: int) -> str:
@@ -51,6 +54,11 @@ def get_spark(
       memory with room for shuffle buffers.
     - Parquet ZSTD: plays the Gorilla-compression role at the storage
       layer (SURVEY.md §1.3).
+    - Generated-class cache of 4096 entries (Spark's default is 100): a
+      long-running service re-runs the same plans, and the registry
+      needs ~2.6k classes, so the default evicts and recompiles them on
+      every pass. The conf is static: a caller that builds its own
+      session must set it at build time.
     """
     cpus = _cpus()
     builder = (
@@ -78,6 +86,12 @@ def get_spark(
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
+        # Static conf (Spark's default is 100). The query registry needs
+        # ~2.6k generated classes, which the default evicts and recompiles
+        # on every pass. The bound keeps the heap held by cached classes
+        # finite. Re-measure with recipe 7 of .claude/skills/verify/SKILL.md;
+        # the measured figures are in ROADMAP.md D2.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
