@@ -45,10 +45,15 @@ Layout, in file order, with the tests that pin each part:
 - array kernels ``_bitlen``, ``_value_fields`` and ``_pack`` behind the
   two ``encode_*_vectorized`` encoders: bit identity with the scalar
   reference in both files;
-- decoders ``decode_values`` and ``decode_block``: round trips in both.
+- decoders ``decode_values`` and ``decode_block`` (the scalar decode
+  reference): round trips in both;
+- ``decode_blocks_vectorized``, the lockstep array decoder of many
+  blocks: identity with ``decode_block`` in both files, including every
+  truncation point of a block (tests/test_gorilla_codec.py).
 
-Everything in this module is deliberately self-contained (stdlib only)
-so Spark executors can receive it pickled by value.
+Everything in this module is deliberately self-contained (stdlib, plus
+numpy imported inside the array kernels) so Spark executors can receive
+it pickled by value.
 """
 
 from __future__ import annotations
@@ -391,16 +396,16 @@ def encode_block(
 
 
 def _bitlen(x):
-    """Vectorized ``int.bit_length`` of a uint64 array (int64 result)."""
+    """Vectorized ``int.bit_length`` of a uint64 array (int64 result).
+
+    The float64 exponent of x is its bit length, or one more where the
+    conversion rounded x up to the next power of two; the shift test
+    takes that one back."""
     import numpy as np
 
-    x = x.copy()
-    res = np.zeros(x.shape, dtype=np.int64)
-    for s in (32, 16, 8, 4, 2, 1):
-        m = x >= np.uint64(1) << np.uint64(s)
-        res[m] += s
-        x[m] >>= np.uint64(s)
-    return res + x.astype(np.int64)
+    e = np.frexp(x.astype(np.float64))[1].astype(np.int64)
+    rounded_up = (x >> (e - 1).clip(0).astype(np.uint64)) == 0
+    return e - (rounded_up & (e > 0))
 
 
 def _value_fields(values, is_start, policy):
@@ -675,14 +680,155 @@ def decode_values(payload: bytes, nbits: int, policy: str = "xor") -> list[float
     return out
 
 
+# Timestamp record fields by the record's first 4 bits (see
+# TimestampEncoder.push): header length, dod width and dod bias.
+_TS_HEAD = (1,) * 8 + (2,) * 4 + (3,) * 2 + (4, 4)
+_TS_WIDTH = (0,) * 8 + (7,) * 4 + (9,) * 2 + (12, 32)
+_TS_BIAS = (0,) * 8 + (63,) * 4 + (255,) * 2 + (2047, 0)
+
+
+def decode_blocks_vectorized(payloads, nbits, header_times):
+    """Decode MANY blocks at once with numpy — the twin of
+    :func:`encode_blocks_vectorized`, giving what :func:`decode_block`
+    gives per block. Lockstep: step *i* decodes record *i* of every block
+    that still has one, so a batch costs one set of array ops per record
+    position instead of Python work per bit field. This is the hot path
+    of distributed decode (spark_ops): one call per Arrow batch.
+
+    Each block stops exactly where decode_block stops: a record starts
+    only while bits remain before the block's ``nbits`` (a stored sample
+    count is not consulted), and a timestamp record with no value after
+    it raises the same ``ValueError``. A corrupt block that decode_block
+    fails on (a record running past its payload bytes, a new-window
+    record wider than 64 bits) raises ``ValueError`` here as well.
+
+    Inputs are parallel per-block sequences: ``payloads`` bytes-like,
+    ``nbits`` ints, ``header_times`` ints. Returns ``(timestamps, values,
+    counts)``: int64 timestamps (decode_block's wrapping 64-bit adds,
+    read as signed) and bit-exact float64 values, block-major and in
+    stream order, and the int64 record count of each block.
+    """
+    import numpy as np
+
+    payloads = list(payloads)
+    nbits = np.asarray(nbits, dtype=np.int64)
+    header_times = np.asarray(header_times, dtype=np.int64)
+    nblk = len(payloads)
+    lens = np.fromiter(map(len, payloads), dtype=np.int64, count=nblk)
+    total = lens * 8  # bits a block's reads may reach
+    base = (np.cumsum(lens) - lens) * 8  # block start in the joined buffer
+
+    # words[k] is the big-endian 64-bit word starting at byte k, so the
+    # 64 bits starting at any bit offset are one gather plus two shifts
+    # (the low o bits come from the next word's first byte). 16 zero
+    # bytes keep every read of an in-bounds record inside the buffer.
+    buf = np.frombuffer(b"".join(payloads) + bytes(16), dtype=np.uint8)
+    nw = len(buf) - 8
+    words = np.empty(nw, dtype=np.uint64)
+    for r in range(8):
+        count = (nw - r + 7) // 8
+        words[r::8] = np.frombuffer(buf, dtype=">u8", count=count, offset=r)
+    tail = buf.astype(np.uint64)
+    ts_head, ts_width, ts_bias = (
+        np.array(t, dtype=np.uint64) for t in (_TS_HEAD, _TS_WIDTH, _TS_BIAS)
+    )
+
+    def read64(p):
+        k = p >> 3
+        o = (p & 7).astype(np.uint64)
+        return (words[k] << o) | (tail[k + 8] >> (8 - o))
+
+    def past_end(pos, blk):
+        if (pos > total[blk]).any():
+            raise ValueError("record runs past the end of its payload")
+
+    def truncated(pos, blk):
+        if (pos > nbits[blk]).any():
+            raise ValueError("value truncated: timestamp without value")
+
+    # ---- step 0: 14-bit first delta, then the raw 64-bit first value
+    blk = np.flatnonzero(nbits >= 14)
+    at = base[blk]
+    delta = (read64(at) >> 50).astype(np.int64)
+    past_end(14, blk)
+    truncated(78, blk)
+    past_end(78, blk)
+    ts = header_times[blk] + delta
+    v_bits = read64(at + 14)
+    v_xor = v_bits
+    pos = np.full(len(blk), 78, dtype=np.int64)
+    out_blk, out_ts, out_v = [blk], [ts], [v_bits]
+
+    while True:
+        live = pos < nbits[blk]  # room for the next timestamp's 1st bit
+        if not live.all():
+            blk, pos, delta, ts = blk[live], pos[live], delta[live], ts[live]
+            v_bits, v_xor = v_bits[live], v_xor[live]
+        if not len(blk):
+            break
+        at = base[blk] + pos
+        x = read64(at)
+        # ---- timestamp record: the top 4 bits pick the dod bucket
+        c = (x >> 60).astype(np.intp)
+        hl, tw = ts_head[c], ts_width[c]
+        tl = hl + tw
+        dod = ((x << hl) >> (64 - tw)) - ts_bias[c]
+        # a 32-bit dod is sign-extended; narrower ones fit 32 bits anyway
+        dod = (dod << 32).view(np.int64) >> 32
+        delta = delta + dod
+        ts = ts + delta
+        tlen = tl.astype(np.int64)
+        past_end(pos + tlen, blk)
+        truncated(pos + tlen + 1, blk)
+        # ---- value record: 0 repeat, 10 reuse the xor window, 11 new
+        xv = x << tl  # a value header is at most 13 bits
+        changed = (xv >> 63).astype(bool)
+        new = (xv >> 62) == 3
+        bl = _bitlen(np.concatenate([v_xor, v_xor & (~v_xor + np.uint64(1))]))
+        wlz, wtz = 64 - bl[: len(blk)], np.maximum(bl[len(blk) :] - 1, 0)
+        lz = ((xv >> 57) & 31).astype(np.int64)
+        meaningful = ((xv >> 51) & 63).astype(np.int64) + 1
+        width = np.where(new, meaningful, np.where(changed, 64 - wtz - wlz, 0))
+        shift = np.where(new, 64 - meaningful - lz, wtz)
+        if (shift < 0).any():
+            raise ValueError("new-window record wider than 64 bits")
+        # the payload is read from its own offset: a reuse payload can
+        # be 64 bits wide, more than is left in x after the header
+        hlen = np.where(new, 13, np.where(changed, 2, 1))
+        at = at + tlen + hlen
+        payload = read64(at) >> (64 - width).astype(np.uint64)
+        new_xor = payload << shift.astype(np.uint64)
+        v_bits = v_bits ^ new_xor
+        v_xor = np.where(changed, new_xor, v_xor)  # a repeat keeps it
+        pos = pos + tlen + hlen + width
+        past_end(pos, blk)
+        out_blk.append(blk)
+        out_ts.append(ts)
+        out_v.append(v_bits)
+
+    # steps are record-major; scatter each record to its block's slot
+    sizes = [len(b) for b in out_blk]
+    blk = np.concatenate(out_blk)
+    counts = np.bincount(blk, minlength=nblk).astype(np.int64)
+    dest = (np.cumsum(counts) - counts)[blk] + np.repeat(
+        np.arange(len(sizes)), sizes
+    )
+    ts_out = np.empty(len(blk), dtype=np.int64)
+    v_out = np.empty(len(blk), dtype=np.uint64)
+    ts_out[dest] = np.concatenate(out_ts)
+    v_out[dest] = np.concatenate(out_v)
+    return ts_out, v_out.view(np.float64), counts
+
+
 def decode_block(
     payload: bytes, nbits: int, header_time: int
 ) -> tuple[list[int], list[float]]:
-    """Inlined hot-path decode, identical semantics to driving
-    TimestampDecoder/DoubleDecoder over a BitReader (which the golden
-    and property tests pin). The whole payload is one Python big-int
-    cursor: each field extraction is a single C-level shift+mask instead
-    of a per-byte Python loop."""
+    """Scalar decode of one block, the reference that
+    :func:`decode_blocks_vectorized` is pinned against. Identical
+    semantics to driving TimestampDecoder/DoubleDecoder over a BitReader
+    (which the golden and property tests pin). The whole payload is one
+    Python big-int cursor: each field extraction is a single C-level
+    shift+mask instead of a per-byte Python loop."""
     acc = int.from_bytes(payload, "big")
     total = len(payload) * 8
     pos = 0

@@ -3,11 +3,12 @@
 The storage unit matches the reference: one compressed block per
 (series, 2-hour bucket) — exactly Gorilla's per-series block keyed by
 header time (``vec_stream.rs:6-9``, ``csv_to_packed.rs:16-18``). Encode
-is an ``applyInPandas`` over that grouping (one shuffle, the same
-partitioning the bucketed store and per-series windows use); decode is
-an ``applyInPandas`` back to rows. Blocks are independent, so both
-sides scale embarrassingly: 100 TB = many blocks, never a big one
-(2 h × one series).
+shuffles once on that key (the same partitioning the bucketed store and
+per-series windows use) and packs each sorted partition with a
+``mapInPandas``; decode is a shuffle-free ``mapInPandas`` back to rows.
+Both run one vectorized codec call per Arrow batch. Blocks are
+independent, so both sides scale embarrassingly: 100 TB = many blocks,
+never a big one (2 h × one series).
 
 The codec module is shipped to executors BY VALUE via cloudpickle's
 ``register_pickle_by_value`` — executors need no importable copy of
@@ -142,28 +143,30 @@ def encode_timeseries(
 def decode_timeseries(blocks: DataFrame) -> DataFrame:
     """gorilla blocks → (series_id, ts epoch-seconds, value) rows."""
     _ship_codec_by_value()
-    from gibbon_spark.codec.gorilla import decode_block
+    from gibbon_spark.codec.gorilla import decode_blocks_vectorized
 
-    def decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+        import numpy as np
         import pandas as pd
 
-        # flat accumulators, one DataFrame per Arrow batch — a per-block
-        # DataFrame+concat costs ~1 ms x thousands of tiny blocks
-        sids: list = []
-        tss: list = []
-        vals: list = []
-        for r in pdf.itertuples(index=False):
-            ts_list, v_list = decode_block(
-                bytes(r.payload), int(r.n_bits), int(r.header_time)
-            )
-            sids.extend([r.series_id] * len(ts_list))
-            tss.extend(ts_list)
-            vals.extend(v_list)
-        return pd.DataFrame({"series_id": sids, "ts": tss, "value": vals})
+        # whole-batch lockstep decode: every block in the Arrow batch in
+        # one numpy pass (see decode_blocks_vectorized)
+        ts, values, counts = decode_blocks_vectorized(
+            pdf["payload"],
+            pdf["n_bits"].to_numpy(dtype=np.int64),
+            pdf["header_time"].to_numpy(dtype=np.int64),
+        )
+        return pd.DataFrame(
+            {
+                "series_id": np.repeat(pdf["series_id"].to_numpy(), counts),
+                "ts": ts,
+                "value": values,
+            }
+        )
 
     # mapInPandas keeps decode embarrassingly parallel (no shuffle)
     return blocks.mapInPandas(
-        lambda it: (decode_group(pdf) for pdf in it), ROWS_SCHEMA
+        lambda it: (decode_batch(pdf) for pdf in it), ROWS_SCHEMA
     )
 
 

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gibbon_spark.codec.gorilla import BLOCK_SECONDS
+from gibbon_spark.codec.spark_ops import BLOCK_SCHEMA
 from gibbon_spark.operators.timeseries import as_timeseries, with_bucket
 
 BUCKET_WIDTH = "2 hours"
@@ -200,8 +201,12 @@ def read_gorilla_store(
     and the exact ``header_time`` predicate lands on parquet row-group
     stats (files are written sorted by header_time) — together strictly
     the reference's block skipping. Returns the block frame ready for
-    codec/spark_ops.decode_timeseries."""
-    df = spark.read.parquet(path)
+    codec/spark_ops.decode_timeseries.
+
+    The schema is given, not inferred: inference costs a footer-reading
+    job on every read and would type ``bucket_day`` as int until
+    2038-01-19 and as bigint after; it is written as long."""
+    df = spark.read.schema(f"{BLOCK_SCHEMA}, bucket_day long").parquet(path)
     if start_epoch is not None:
         lo = int(start_epoch) - BLOCK_SECONDS
         df = df.filter(F.col("bucket_day") >= lo - lo % DAY)

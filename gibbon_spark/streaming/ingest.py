@@ -15,9 +15,12 @@ DROPS rows later than the configured bound for stateful stages; the
 plain append sink below never drops (no state), and the windowed
 aggregation helper documents the bound it enforces.
 
-Scale: the sink path shuffles once on (bucket, series-hash) so each
-micro-batch writes a bounded number of files per bucket; state for the
-windowed rollup is per (series, window) and expires with the watermark.
+Scale: the sink path does not shuffle: each micro-batch task appends
+its rows to the bucket directories it touches, so a long-running sink
+leaves many small files per bucket, and
+``sources.bucketed.compact_bucketed`` rewrites them to a bounded number
+per bucket. State for the windowed rollup is per (series, window) and
+expires with the watermark.
 """
 
 from __future__ import annotations

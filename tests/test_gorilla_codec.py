@@ -20,6 +20,7 @@ from gibbon_spark.codec.gorilla import (
     TimestampDecoder,
     TimestampEncoder,
     decode_block,
+    decode_blocks_vectorized,
     encode_block,
     encode_blocks_vectorized,
     encode_values_vectorized,
@@ -476,3 +477,97 @@ def test_vectorized_encode_first_delta_bounds_match_scalar(offset):
 def test_vectorized_values_unknown_policy_raises():
     with pytest.raises(ValueError, match="unknown policy"):
         encode_values_vectorized([1.0, 2.0], [True, False], "shrinking")
+
+
+# --- vectorized decode: a cut stream stops where decode_block stops
+
+
+def _marked_block():
+    """A 4-record block (repeat, reuse and new-window values) and, per
+    record, the bit offsets where its timestamp and its value end."""
+    header = 7200 * 1000
+    ts = [header + 5, header + 65, header + 125, header + 4000]
+    vals = [1.0, 1.5, 1.5, -3.25]
+    w = BitWriter()
+    te, de = TimestampEncoder(header), DoubleEncoder()
+    marks = []
+    for t, v in zip(ts, vals):
+        te.push(t, w)
+        ts_end = w.nbits
+        de.push(v, w)
+        marks.append((ts_end, w.nbits))
+    payload, _ = w.getvalue()
+    return header, ts, payload, marks
+
+
+def _decode_both(payload, cut, header):
+    """decode_block per block and decode_blocks_vectorized over a batch
+    of an intact block, the cut block and another intact block. Each
+    outcome is the flat (timestamps, value bits), or the ValueError's
+    message."""
+    h2 = header + 7200
+    other, other_nbits = encode_block([h2, h2 + 60], [2.0, 2.5], h2)
+    batch = (
+        [other, payload, other],
+        [other_nbits, cut, other_nbits],
+        [h2, header, h2],
+    )
+
+    def scalar():
+        ts, vs = [], []
+        for p, nb, h in zip(*batch):
+            t, v = decode_block(p, nb, h)
+            ts += t
+            vs += v
+        return ts, [struct.pack("<d", v) for v in vs]
+
+    def vector():
+        ts, vs, _ = decode_blocks_vectorized(*batch)
+        return ts.tolist(), [struct.pack("<d", v) for v in vs.tolist()]
+
+    out = []
+    for fn in (scalar, vector):
+        try:
+            out.append(fn())
+        except ValueError as e:
+            out.append(str(e))
+    return out
+
+
+def test_vectorized_decode_cut_mid_value_raises_like_scalar():
+    """A timestamp with no value after it raises decode_block's
+    ValueError: any cut inside the raw first value, and a cut right
+    after a later timestamp record."""
+    header, _, payload, marks = _marked_block()
+    (ts0_end, v0_end), *rest = marks
+    cuts = list(range(ts0_end, v0_end)) + [ts_end for ts_end, _ in rest]
+    for cut in cuts:
+        scalar, vector = _decode_both(payload, cut, header)
+        assert scalar == "value truncated: timestamp without value", cut
+        assert vector == scalar, cut
+
+
+def test_vectorized_decode_cut_after_value_yields_scalar_prefix():
+    header, ts, payload, marks = _marked_block()
+    for k, (_, v_end) in enumerate(marks):
+        scalar, vector = _decode_both(payload, v_end, header)
+        assert vector == scalar
+        assert vector[0][2 : 3 + k] == ts[: k + 1]  # after the 2-record block
+
+
+def test_vectorized_decode_every_cut_matches_scalar():
+    """Every n_bits from 0 to the payload's last bit: the same samples,
+    or the same ValueError."""
+    header, _, payload, _ = _marked_block()
+    for cut in range(len(payload) * 8 + 1):
+        scalar, vector = _decode_both(payload, cut, header)
+        assert vector == scalar, cut
+
+
+def test_vectorized_decode_rejects_records_past_the_payload():
+    header, _, payload, _ = _marked_block()
+    nbits = len(payload) * 8 + 40
+    with pytest.raises(ValueError):
+        decode_block(payload, nbits, header)
+    with pytest.raises(ValueError, match="past the end"):
+        decode_blocks_vectorized([payload], [nbits], [header])

@@ -78,27 +78,21 @@ def test_double_stream_roundtrip_property(vals):
         assert struct.pack("<d", a) == struct.pack("<d", b)
 
 
-@given(
-    blocks=st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=10_000),  # header bucket no.
-            st.integers(min_value=0, max_value=7199),  # first offset
-            increments,
-            st.lists(finite_doubles, min_size=1, max_size=30),
-        ),
-        min_size=1,
-        max_size=8,
-    )
+# batches of blocks: (header bucket no., first offset, increments, values)
+block_batches = st.lists(
+    st.tuples(
+        st.integers(min_value=1, max_value=10_000),
+        st.integers(min_value=0, max_value=7199),
+        increments,
+        st.lists(finite_doubles, min_size=1, max_size=30),
+    ),
+    min_size=1,
+    max_size=8,
 )
-@settings(max_examples=100, deadline=None)
-def test_vectorized_encode_matches_scalar(blocks):
-    """encode_blocks_vectorized (the distributed hot path) must be
-    bit-identical to the scalar per-block codec for any batch of
-    blocks, including dupes, every dod bucket, window reuse chains."""
-    import numpy as np
 
-    from gibbon_spark.codec.gorilla import encode_blocks_vectorized
 
+def _flatten(blocks):
+    """A drawn batch as the vectorized encoder's parallel row lists."""
     epochs, vals, hts, starts = [], [], [], []
     for bucket, off, incs, bvals in blocks:
         header = 7200 * bucket
@@ -111,6 +105,20 @@ def test_vectorized_encode_matches_scalar(blocks):
             vals.append(bvals[i % len(bvals)])
             hts.append(header)
             starts.append(i == 0)
+    return epochs, vals, hts, starts
+
+
+@given(blocks=block_batches)
+@settings(max_examples=100, deadline=None)
+def test_vectorized_encode_matches_scalar(blocks):
+    """encode_blocks_vectorized (the distributed hot path) must be
+    bit-identical to the scalar per-block codec for any batch of
+    blocks, including dupes, every dod bucket, window reuse chains."""
+    import numpy as np
+
+    from gibbon_spark.codec.gorilla import encode_blocks_vectorized
+
+    epochs, vals, hts, starts = _flatten(blocks)
     payloads, nbits, start_idx = encode_blocks_vectorized(
         np.array(epochs, dtype=np.int64),
         np.array(vals, dtype=np.float64),
@@ -124,6 +132,48 @@ def test_vectorized_encode_matches_scalar(blocks):
         )
         assert payloads[k] == ref_payload
         assert int(nbits[k]) == ref_nbits
+
+
+@given(blocks=block_batches)
+@settings(max_examples=100, deadline=None)
+def test_vectorized_decode_matches_scalar(blocks):
+    """decode_blocks_vectorized (the distributed decode path) must give
+    decode_block's timestamps and value bits for every block of a
+    batch, in stream order, with each block's record count."""
+    import numpy as np
+
+    from gibbon_spark.codec.gorilla import decode_blocks_vectorized
+
+    epochs, vals, hts, starts = _flatten(blocks)
+    bounds = [i for i, s in enumerate(starts) if s] + [len(epochs)]
+    spans = list(zip(bounds, bounds[1:]))
+    payloads, nbits = zip(
+        *(encode_block(epochs[s:e], vals[s:e], hts[s]) for s, e in spans)
+    )
+    headers = [hts[s] for s, _ in spans]
+    ts, values, counts = decode_blocks_vectorized(payloads, nbits, headers)
+    assert ts.dtype == np.int64 and values.dtype == np.float64
+    got_ts, got_vals = [], []
+    for payload, nb, header in zip(payloads, nbits, headers):
+        t, v = decode_block(payload, nb, header)
+        got_ts += t
+        got_vals += v
+    assert counts.tolist() == [e - s for s, e in spans]
+    assert ts.tolist() == got_ts == epochs
+    assert values.view(np.uint64).tolist() == [
+        struct.unpack("<Q", struct.pack("<d", v))[0] for v in got_vals
+    ]
+
+
+def test_vectorized_decode_empty_input():
+    from gibbon_spark.codec.gorilla import decode_blocks_vectorized
+
+    ts, values, counts = decode_blocks_vectorized([], [], [])
+    assert len(ts) == len(values) == len(counts) == 0
+    assert (str(ts.dtype), str(values.dtype)) == ("int64", "float64")
+    # blocks with no complete first record yield no samples
+    ts, values, counts = decode_blocks_vectorized([b"", b"\x00"], [0, 13], [0, 7200])
+    assert len(ts) == len(values) == 0 and counts.tolist() == [0, 0]
 
 
 @given(st.lists(st.integers(min_value=0, max_value=(1 << 64) - 1), min_size=0, max_size=40),

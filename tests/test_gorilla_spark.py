@@ -141,3 +141,54 @@ def test_encode_carries_blocks_across_arrow_batches(spark):
         )
         assert r.n_samples == len(pts)
         assert (bytes(r.payload), r.n_bits) == (payload, nbits)
+
+
+def test_decode_matches_scalar_per_block_across_arrow_batches(spark):
+    """decode_timeseries runs one vectorized decode per Arrow batch.
+    Shrink the batch to 7 blocks so one partition of 24 blocks spans
+    several batches, and check every block's rows, in order, against
+    the scalar decode_block."""
+    import random
+    import struct
+
+    from gibbon_spark.codec.gorilla import decode_block
+
+    rng = random.Random(11)
+    header0 = 1_700_000_000 - 1_700_000_000 % 7200
+    rows = []
+    for sid in range(4):
+        for b in range(6):
+            header = header0 + 7200 * b
+            t = header + rng.randrange(600)
+            for _ in range(rng.randrange(1, 40)):
+                v = round(rng.uniform(-50, 50), rng.choice((0, 2)))
+                rows.append((sid, t, v))
+                t += rng.choice((0, 1, 60, 60, 60, 300))
+    df = spark.createDataFrame(rows, "user_id int, epoch long, value double")
+    df = df.select("user_id", F.timestamp_seconds("epoch").alias("ts"), "value")
+    blocks = spark_ops.encode_timeseries(df, series=["user_id"]).coalesce(1)
+    stored = blocks.collect()
+    assert len(stored) == 24
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "7")
+    try:
+        one_part = spark.createDataFrame(stored).coalesce(1)
+        got = spark_ops.decode_timeseries(one_part).collect()
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+    decoded: dict = {}
+    for r in got:
+        block = (r.series_id, r.ts - r.ts % 7200)
+        decoded.setdefault(block, []).append((r.ts, struct.pack("<d", r.value)))
+    assert len(decoded) == 24
+    for b in stored:
+        ts, vals = decode_block(bytes(b.payload), b.n_bits, b.header_time)
+        assert len(ts) == b.n_samples
+        want = [(t, struct.pack("<d", v)) for t, v in zip(ts, vals)]
+        assert decoded[(b.series_id, b.header_time)] == want

@@ -181,3 +181,40 @@ def test_expire_buckets_retention(spark, store):
     left = spark.read.parquet(path)
     assert left.count() > 0
     assert left.agg(F.min("bucket")).collect()[0][0].isoformat(sep=" ") >= cutoff
+
+
+def test_gorilla_store_pinned_schema_reads_as_inferred(spark, block_store):
+    """read_gorilla_store gives its schema instead of inferring it: the
+    same rows as an inferred read, full and ranged, and no job is run
+    to build the frame."""
+    cols = ["series_id", "header_time", "n_samples", "n_bits", "payload"]
+    inferred = spark.read.parquet(block_store)
+    lo, hi = 1704844800, 1704931200
+    sc = spark.sparkContext
+    sc.setJobGroup("pinned_schema_build", "read_gorilla_store build")
+    try:
+        full = bucketed.read_gorilla_store(spark, block_store)
+        ranged = bucketed.read_gorilla_store(
+            spark, block_store, start_epoch=lo, end_epoch=hi
+        )
+        assert list(sc.statusTracker().getJobIdsForGroup("pinned_schema_build")) == []
+    finally:
+        sc.setJobGroup(None, None)
+    assert full.dtypes == inferred.select(cols).dtypes
+    assert sorted(map(tuple, full.collect())) == sorted(
+        map(tuple, inferred.select(cols).collect())
+    )
+    expected = inferred.filter(
+        (F.col("header_time") >= lo - 7200) & (F.col("header_time") < hi)
+    ).select(cols)
+    assert sorted(map(tuple, ranged.collect())) == sorted(
+        map(tuple, expected.collect())
+    )
+
+
+def test_gorilla_store_missing_path_raises(spark):
+    from pyspark.errors import AnalysisException
+
+    missing = os.path.join(tempfile.mkdtemp(prefix="gibbon_nostore_"), "blocks")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        bucketed.read_gorilla_store(spark, missing)
