@@ -50,9 +50,5 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def norm_fixed(a: Column, dims: int) -> Column:
-    return F.sqrt(dot_fixed(a, a, dims))
-
-
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))

@@ -7,7 +7,7 @@ aggregate read by a global-moment pass and an adjustment join). Without
 a materialization each consumer replays the subtree's scan + shuffles.
 Every such site in the engine calls :func:`materialize` instead of
 ``DataFrame.localCheckpoint`` directly, so the storage strategy is a
-deployment decision, not 31 scattered call sites:
+deployment decision, not a choice repeated at every call site:
 
 * ``local`` (default) — ``localCheckpoint``: blocks on executor local
   storage, zero extra infra. Right for local[*] and for short jobs
@@ -19,28 +19,21 @@ deployment decision, not 31 scattered call sites:
   dir (HDFS/S3/...). The production setting for 100-TB runs: blocks
   survive executor loss. Set the dir via ``spark.gibbon.checkpoint.dir``
   (or pre-set ``sparkContext.setCheckpointDir``).
-* ``off`` — pass-through (no materialization; consumers recompute the
-  subtree). Used by the matched-load A/B harness to measure what a
-  checkpoint actually buys at a given scale factor.
 
-Mode resolution order: ``GS_CKPT_MODE`` env var (lets a fresh-session
-A/B subprocess flip the mode without touching code), then the Spark
-conf ``spark.gibbon.checkpoint.mode``, then ``local``.
-
-Results are mode-invariant between ``local`` and ``reliable`` by
-construction — those modes change WHERE blocks live, never values —
-pinned by tests/test_materialize.py. ``off`` is a measurement-only
-harness setting, NOT safe for correctness-gated runs: plans that join
-consumers on ``spark_partition_id()`` after a ``repartitionByRange``
+The mode comes only from the Spark conf ``spark.gibbon.checkpoint.mode``
+(unset → ``local``); any other value raises. Materialization is part
+of correctness, not only of cost: plans that join consumers on
+``spark_partition_id()`` after a ``repartitionByRange``
 (global_running_sum, q_abtest_ks_distance, q_revenue_concentration)
-rely on the checkpoint to pin the range exchange's sampled boundaries;
-under ``off`` a recompute or task retry of the exchange can assign a
-different partition id across consumers.
+rely on the checkpoint to pin the range exchange's sampled boundaries,
+and the dedup verify's hash-injectivity proof relies on it to pin the
+shingle table it probed.
+
+Results are mode-invariant by construction — the two modes change WHERE
+blocks live, never values — pinned by tests/test_materialize.py.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 
@@ -48,24 +41,17 @@ MODE_CONF = "spark.gibbon.checkpoint.mode"
 DIR_CONF = "spark.gibbon.checkpoint.dir"
 
 
-_VALID_MODES = frozenset({"local", "reliable", "off"})
+_VALID_MODES = frozenset({"local", "reliable"})
 
 
 def _mode(df: DataFrame) -> str:
-    env = os.environ.get("GS_CKPT_MODE")
-    if env:
-        mode = env
-    else:
-        try:
-            mode = df.sparkSession.conf.get(MODE_CONF, "local")
-        except Exception:  # noqa: BLE001 — conf access never blocks the plan
-            mode = "local"
-    # a typo must fail loudly, not silently run the 'local' arm of an
-    # A/B comparison (advisor r11: GS_CKPT_MODE=reliabe fell through)
+    mode = df.sparkSession.conf.get(MODE_CONF, "local")
+    # a typo must fail loudly, not silently run the non-durable 'local'
+    # arm for a deployment that asked for 'reliable'
     if mode not in _VALID_MODES:
         raise ValueError(
-            f"invalid checkpoint mode {mode!r} (from GS_CKPT_MODE or "
-            f"{MODE_CONF}); expected one of {sorted(_VALID_MODES)}"
+            f"invalid checkpoint mode {mode!r} (from {MODE_CONF}); "
+            f"expected one of {sorted(_VALID_MODES)}"
         )
     return mode
 
@@ -79,10 +65,7 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     the cost attributed up front (e.g. iterative loops pinning each
     round's frontier).
     """
-    mode = _mode(df)
-    if mode == "off":
-        return df
-    if mode == "reliable":
+    if _mode(df) == "reliable":
         sc = df.sparkSession.sparkContext
         if sc._jsc.sc().getCheckpointDir().isEmpty():
             ckpt_dir = df.sparkSession.conf.get(DIR_CONF, None)

@@ -134,18 +134,9 @@ def _verify_elem(sh: DataFrame) -> Column:
     data-independent. The isEmpty() probe is one tiny action over the
     already-checkpointed shingle table; its cost is O(vocabulary) (a
     full distinct-shingle aggregate), paid eagerly even if the caller
-    never consumes the operator's result.
-
-    The proof is only sound when ``sh`` is pinned: under checkpoint
-    mode 'off' (measurement harness) the probe and the later verify
-    arrays are two independent evaluations of the shingle subtree, so
-    a nondeterministic ``docs`` input could grow shingles the probe
-    never saw (advisor r12) — take the always-exact string path there
-    instead of hashing."""
-    from gibbon_spark.materialize import _mode
-
-    if _mode(sh) == "off":
-        return F.col("shingle")
+    never consumes the operator's result. ``sh`` must be a
+    ``materialize``d table, so the probe and the verify arrays read the
+    same shingles."""
     injective = (
         sh.groupBy(F.xxhash64("shingle").alias("h"))
         .agg(F.count_distinct("shingle").alias("d"))

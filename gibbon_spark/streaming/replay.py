@@ -21,9 +21,9 @@ Emission rule. Each ``foreachBatch`` micro-batch is pinned with
 ``materialize(bdf, eager=True)``, so the checkpoint mode decides where
 the emitted rows live, as at every other materialize site: ``local`` →
 executor block storage (``localCheckpoint``); ``reliable`` → a durable
-RDD checkpoint in ``spark.gibbon.checkpoint.dir``; ``off`` still takes a
-``localCheckpoint``, because a ``foreachBatch`` frame cannot be re-run
-after its batch commits. ``complete`` mode returns the LAST emission
+RDD checkpoint in ``spark.gibbon.checkpoint.dir``. Either way the rows
+are pinned, because a ``foreachBatch`` frame cannot be re-run after its
+batch commits. ``complete`` mode returns the LAST emission
 (each is the full result); ``append``/``update`` return the union of the
 emissions (disjoint deltas / per-key updates that downstream
 reconciliation folds). A batch is appended only after its eager
@@ -89,10 +89,7 @@ def replay(df: DataFrame, sf_dir: str, *, mode: str) -> DataFrame:
     batches: list[DataFrame] = []
 
     def _emit(bdf: DataFrame, _bid: int) -> None:
-        pinned = materialize(bdf, eager=True)
-        if pinned is bdf:  # mode=off passes through
-            pinned = bdf.localCheckpoint(eager=True)
-        batches.append(pinned)
+        batches.append(materialize(bdf, eager=True))
 
     with pin_shuffle_partitions(spark, width):
         q = (

@@ -1,10 +1,13 @@
 """materialize() contract: the shared-subtree materialization point is
-mode-invariant on VALUES (local / reliable / off change only where
-blocks live), the reliable mode actually truncates lineage through a
-durable checkpoint dir, and a missing dir fails loudly (round-10
-verdict ask #4 — the 100-TB checkpoint story)."""
+mode-invariant on VALUES (local / reliable change only where blocks
+live), the mode comes only from ``spark.gibbon.checkpoint.mode`` and
+rejects anything else, the reliable mode actually truncates lineage
+through a durable checkpoint dir, and a missing dir fails loudly
+(round-10 verdict ask #4 — the 100-TB checkpoint story)."""
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,32 +28,36 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+@contextmanager
+def _checkpoint_conf(spark, mode, ckpt_dir=None):
+    spark.conf.set(MODE_CONF, mode)
+    if ckpt_dir is not None:
+        spark.conf.set(DIR_CONF, str(ckpt_dir))
+    try:
+        yield
+    finally:
+        spark.conf.unset(MODE_CONF)
+        spark.conf.unset(DIR_CONF)
+
+
 def test_local_mode_default_values_unchanged(spark):
     base = _rows(_frame(spark))
     assert _rows(materialize(_frame(spark))) == base
     assert _rows(materialize(_frame(spark), eager=True)) == base
 
 
-def test_off_mode_is_passthrough(spark, monkeypatch):
-    monkeypatch.setenv("GS_CKPT_MODE", "off")
-    df = _frame(spark)
-    assert materialize(df) is df
-
-
-def test_reliable_mode_without_dir_fails_loudly(spark, monkeypatch):
+def test_reliable_mode_without_dir_fails_loudly(spark):
     # runs BEFORE the checkpoint test below: setCheckpointDir is sticky
     # on the session-scoped context, so order matters
-    monkeypatch.setenv("GS_CKPT_MODE", "reliable")
     if not spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
         pytest.skip("session already has a checkpoint dir")
-    with pytest.raises(ValueError, match=DIR_CONF):
-        materialize(_frame(spark))
+    with _checkpoint_conf(spark, "reliable"):
+        with pytest.raises(ValueError, match=DIR_CONF):
+            materialize(_frame(spark))
 
 
-def test_reliable_mode_checkpoints_and_matches(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("GS_CKPT_MODE", "reliable")
-    spark.conf.set(DIR_CONF, str(tmp_path / "ckpt"))
-    try:
+def test_reliable_mode_checkpoints_and_matches(spark, tmp_path):
+    with _checkpoint_conf(spark, "reliable", tmp_path / "ckpt"):
         out = materialize(_frame(spark), eager=True)
         assert _rows(out) == _rows(_frame(spark))
         # the eager reliable checkpoint wrote durable RDD blocks
@@ -59,53 +66,79 @@ def test_reliable_mode_checkpoints_and_matches(spark, tmp_path, monkeypatch):
         assert "Scan ExistingRDD" in out._jdf.queryExecution().toString() or (
             out.rdd.toDebugString().count(b"\n") < _frame(spark).rdd.toDebugString().count(b"\n")
         )
-    finally:
-        spark.conf.unset(DIR_CONF)
 
 
-def test_invalid_mode_raises(spark, monkeypatch):
-    # advisor r11: a typo (GS_CKPT_MODE=reliabe) must not silently run
-    # the local arm of an A/B comparison
-    monkeypatch.setenv("GS_CKPT_MODE", "reliabe")
-    with pytest.raises(ValueError, match="invalid checkpoint mode"):
+def test_invalid_mode_raises(spark):
+    # a typo must not silently run the non-durable local arm; the mode
+    # is case-sensitive, and there is no pass-through 'off' mode
+    for mode in ("reliabe", "LOCAL", "off"):
+        with _checkpoint_conf(spark, mode):
+            with pytest.raises(ValueError, match="invalid checkpoint mode"):
+                materialize(_frame(spark))
+
+
+def _spy_checkpoints(monkeypatch):
+    """Record which checkpoint call materialize() makes; both return the
+    frame unchanged so no blocks are written."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    calls = []
+    monkeypatch.setattr(
+        ClassicDataFrame, "checkpoint", lambda self, *a, **k: calls.append("reliable") or self
+    )
+    monkeypatch.setattr(
+        ClassicDataFrame, "localCheckpoint", lambda self, *a, **k: calls.append("local") or self
+    )
+    return calls
+
+
+def test_off_mode_is_passthrough(spark, monkeypatch):
+    # the former pass-through switch (GS_CKPT_MODE=off) is gone: with it
+    # set, materialize still takes the default local checkpoint
+    monkeypatch.setenv("GS_CKPT_MODE", "off")
+    df = _frame(spark)
+    out = materialize(df)
+    assert out is not df
+    assert _rows(out) == _rows(df)
+    calls = _spy_checkpoints(monkeypatch)
+    materialize(_frame(spark))
+    assert calls == ["local"]
+
+
+def test_conf_mode_respected_without_env(spark, tmp_path, monkeypatch):
+    # the conf alone picks the mode, and an env override changes nothing
+    calls = _spy_checkpoints(monkeypatch)
+    with _checkpoint_conf(spark, "reliable", tmp_path / "conf_ckpt"):
+        monkeypatch.delenv("GS_CKPT_MODE", raising=False)
         materialize(_frame(spark))
-    monkeypatch.delenv("GS_CKPT_MODE")
-    spark.conf.set(MODE_CONF, "LOCAL")  # case-sensitive by contract
-    try:
-        with pytest.raises(ValueError, match="invalid checkpoint mode"):
-            materialize(_frame(spark))
-    finally:
-        spark.conf.unset(MODE_CONF)
-
-
-def test_conf_mode_respected_without_env(spark, monkeypatch):
-    monkeypatch.delenv("GS_CKPT_MODE", raising=False)
-    spark.conf.set(MODE_CONF, "off")
-    try:
-        df = _frame(spark)
-        assert materialize(df) is df
-    finally:
-        spark.conf.unset(MODE_CONF)
+        monkeypatch.setenv("GS_CKPT_MODE", "local")
+        materialize(_frame(spark))
+    assert calls == ["reliable", "reliable"]
+    with _checkpoint_conf(spark, "local"):
+        monkeypatch.setenv("GS_CKPT_MODE", "reliable")
+        materialize(_frame(spark))
+    assert calls == ["reliable", "reliable", "local"]
 
 
 def test_query_hash_invariant_across_modes(spark, tmp_path, monkeypatch):
-    """A real multi-consumer query (CUPED) returns identical rows with
-    materialization off, local, and RELIABLE (the 100-TB production
-    path) — materialization is a physical choice."""
+    """A real multi-consumer query (CUPED) returns identical rows
+    un-materialized, local, and RELIABLE (the 100-TB production path) —
+    materialization is a physical choice."""
     import __spark_entry__ as entrymod
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
     q = entrymod.queries()["abtest_cuped"]
-    monkeypatch.setenv("GS_CKPT_MODE", "off")
-    off_rows = _rows(q(spark, "/root/testdata/sf0.001"))
-    monkeypatch.setenv("GS_CKPT_MODE", "local")
+    with monkeypatch.context() as m:
+        # the un-materialized baseline: every local checkpoint is a no-op
+        # (patch the classic class — it overrides the abstract method)
+        m.setattr(ClassicDataFrame, "localCheckpoint", lambda self, *a, **k: self)
+        df = _frame(spark)
+        assert materialize(df) is df
+        plain_rows = _rows(q(spark, "/root/testdata/sf0.001"))
     on_rows = _rows(q(spark, "/root/testdata/sf0.001"))
-    assert off_rows == on_rows
-    monkeypatch.setenv("GS_CKPT_MODE", "reliable")
-    spark.conf.set(DIR_CONF, str(tmp_path / "qckpt"))
-    try:
+    assert plain_rows == on_rows
+    with _checkpoint_conf(spark, "reliable", tmp_path / "qckpt"):
         rel_rows = _rows(q(spark, "/root/testdata/sf0.001"))
-    finally:
-        spark.conf.unset(DIR_CONF)
     assert rel_rows == on_rows
 
 
@@ -129,16 +162,12 @@ _RELIABLE_INVARIANCE_QUERIES = (
 
 
 @pytest.mark.parametrize("name", _RELIABLE_INVARIANCE_QUERIES)
-def test_reliable_mode_invariant_heavy_consumers(spark, tmp_path, monkeypatch, name):
+def test_reliable_mode_invariant_heavy_consumers(spark, tmp_path, name):
     import __spark_entry__ as entrymod
 
     q = entrymod.queries()[name]
-    monkeypatch.setenv("GS_CKPT_MODE", "local")
-    local_rows = _rows(q(spark, "/root/testdata/sf0.001"))
-    monkeypatch.setenv("GS_CKPT_MODE", "reliable")
-    spark.conf.set(DIR_CONF, str(tmp_path / f"ckpt_{name}"))
-    try:
+    with _checkpoint_conf(spark, "local"):
+        local_rows = _rows(q(spark, "/root/testdata/sf0.001"))
+    with _checkpoint_conf(spark, "reliable", tmp_path / f"ckpt_{name}"):
         rel_rows = _rows(q(spark, "/root/testdata/sf0.001"))
-    finally:
-        spark.conf.unset(DIR_CONF)
     assert rel_rows == local_rows
