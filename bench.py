@@ -1,19 +1,28 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints TWO
-JSON lines:
+"""Benchmark harness: runs every registry query at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS].
 
-1. the full per-query detail {"metric", "value", "unit", "queries", "sf"}
-   (~4 KB at 145 queries), then
-2. a small (<200 byte) summary {"metric", "value", "unit", "sf",
-   "n_queries"} as the FINAL line.
-
-The driver keeps only a tail of stdout, which truncated the single big
-line mid-object in round 1 ("parsed": null); the final small line always
-survives a 2 KB tail capture.
+One measurement rule: every query runs in exactly two full passes, and
+its published wall time is the min of the two. Beside it goes the
+query's CPU seconds of the process tree (this process, the Spark JVM and
+its Python workers, the JVM's JIT compiler threads left out;
+``perfbench.proctree``), sampled just outside the wall window and also
+the min of the two passes. No query is ever run a third time: host CPU
+steal moves wall time 20-40% between runs a minute apart, and the CPU
+figure beside it is the steadier reading.
 
 Each query is forced end-to-end with the noop sink (full computation, no
-driver collect, no disk write) — the number measures the distributed
-plan, not driver materialization.
+driver collect, no disk write), so the number measures the distributed
+plan, not driver materialization. stdout carries:
+
+1. the detail line: ``value`` (total of the per-query min walls),
+   ``queries`` (wall s), ``queries_cpu_s``, ``cpu_total_s``,
+   ``pass_totals``, the calibration fields and ``normalized_total``,
+   ``regressed`` and, off sf0.1, the cross-scale ratios and flags. It is
+   also written to ``BENCH_DETAIL*.json`` (keyed by sf and core count)
+   in the checkout the bench runs from, as the next run's baseline;
+2. the per-query walls again as standalone lines under 2 KB each;
+3. a summary under 300 bytes as the FINAL line. Callers may keep only a
+   tail of stdout, so this line must parse on its own.
 """
 
 from __future__ import annotations
@@ -27,12 +36,26 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+N_PASSES = 2
+MIN_FREE_GB = 10.0
+
+
+def _read_detail(path: str) -> dict | None:
+    """A persisted detail file, or None when there is none. A corrupt or
+    schema-broken file raises: it would otherwise publish zero flags."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
     from gibbon_spark.session import _cpus, get_spark
+    from perfbench.proctree import cpu_seconds_between, thread_ticks
 
     cpus = _cpus()
 
@@ -45,8 +68,7 @@ def main() -> None:
 
     reaped = scratch.reap_stale()
     disk_free_gb = round(scratch.free_gb(), 1)
-    min_free = float(os.environ.get("GS_BENCH_MIN_FREE_GB", "10"))
-    if disk_free_gb < min_free:
+    if disk_free_gb < MIN_FREE_GB:
         print(
             json.dumps(
                 {
@@ -57,12 +79,30 @@ def main() -> None:
                     "disk_free_gb": disk_free_gb,
                     "error": (
                         f"preflight abort: {disk_free_gb} GB free on /tmp "
-                        f"< floor {min_free} GB — clean scratch before benching"
+                        f"< floor {MIN_FREE_GB} GB — clean scratch before benching"
                     ),
                 }
             )
         )
         sys.exit(1)
+
+    # previous run's per-query detail for the regression flags
+    # (FIXTURES.md §5), read before any Spark work. The detail file is
+    # keyed by sf and core count: only a run at the canonical sf0.1 on
+    # 32 cores reads/writes the committed BENCH_DETAIL.json; other runs
+    # use their own BENCH_DETAIL_sf{sf}/_c{n} sibling, so they get real
+    # flags and never clobber the canonical row.
+    detail_name = "BENCH_DETAIL" if sf == 0.1 else f"BENCH_DETAIL_sf{sf}"
+    if cpus != 32:
+        detail_name += f"_c{cpus}"
+    detail_path = os.path.join(REPO, detail_name + ".json")
+    prev = _read_detail(detail_path)
+    prev_queries: dict[str, float] = prev["queries"] if prev else {}
+    prev_cal = float(prev["calibration_s"]) if prev else None
+    # a run off the canonical sf is also diagnosed against sf0.1
+    canon = None
+    if sf is not None and sf != 0.1:
+        canon = _read_detail(os.path.join(REPO, "BENCH_DETAIL.json"))
 
     import __spark_entry__ as entrymod
 
@@ -131,53 +171,16 @@ def main() -> None:
 
     cal_probes: list[tuple[float, float, float]] = [_calibrate()]
 
-    # previous run's per-query detail for the regression flags
-    # (FIXTURES.md §5). The driver's BENCH_r*.json keeps only a
-    # truncated stdout tail, so bench.py persists its own full detail
-    # (BENCH_DETAIL.json, committed per round) and reads it back here.
-    # The detail path is sf-KEYED up front (round-9 advisor fix): only a
-    # run at the canonical bench sf (0.1) reads/writes the committed
-    # BENCH_DETAIL.json baseline; runs at other scale factors compare
-    # against — and persist to — their own sibling file, so a repeat
-    # sf0.01 smoke run gets real regression flags instead of silently
-    # empty ones, and can never clobber the cross-round sf0.1 baseline.
-    # ... and CPU-keyed as well (round-13, verdict r12 ask #7): the r12
-    # driver's 8-core scaling run overwrote the canonical 32-core row,
-    # breaking the like-for-like regression detector. A run at a
-    # non-canonical core count reads/writes its own _c{n} sibling.
-    detail_name = "BENCH_DETAIL" if sf == 0.1 else f"BENCH_DETAIL_sf{sf}"
-    if cpus != 32:
-        detail_name += f"_c{cpus}"
-    detail_path = os.path.join(REPO, detail_name + ".json")
-    prev_queries: dict[str, float] = {}
-    prev_cal = None
-    try:
-        with open(detail_path) as f:
-            prev = json.load(f)
-        if (
-            isinstance(prev.get("queries"), dict)
-            and prev.get("calibration_s")
-            and prev.get("sf") == sf
-        ):
-            prev_queries = prev["queries"]
-            prev_cal = float(prev["calibration_s"])
-    except Exception:  # noqa: BLE001 — normalization context is best-effort
-        pass
-
-    # ---- main timing loop. Min-of-2 FULL passes is the DEFAULT
-    # (round-11 verdict ask #2): epoch-level host inflation (the r10
-    # median 1.47x, the r11 354->282s first pass) mostly cancels in the
-    # min, and the official driver invocation previously ran 1-pass and
-    # needed 60 end-of-run rescues. Both pass totals are published so
-    # readers see the spread; set GS_BENCH_PASSES=1 for a quick look.
-    n_passes = max(1, int(os.environ.get("GS_BENCH_PASSES", "2")))
+    # ---- main timing loop: two full passes, per-query min of each
+    # figure. The /proc samples sit outside the wall window; their own
+    # wall cost is published as cpu_sample_ms (per query, both samples).
     timings: dict[str, float] = {}
-    names = list(qs)
+    cpu: dict[str, float] = {}
     pass_totals: list[float] = []
-    first_pass: dict[str, float] = {}
-    per_pass: list[dict[str, float]] = []
-    for p in range(n_passes):
-        pass_t: dict[str, float] = {}
+    sample_s = 0.0
+    names = list(qs)
+    for p in range(N_PASSES):
+        pass_total = 0.0
         for i, name in enumerate(names):
             if i % 20 == 19:
                 # nudge the driver JVM to GC: with a large heap it otherwise
@@ -187,124 +190,19 @@ def main() -> None:
                 spark.sparkContext._jvm.System.gc()
             if p == 0 and i == len(names) // 2:
                 cal_probes.append(_calibrate())  # mid-run probe
+            s0 = time.time()
+            before = thread_ticks()
             t0 = time.time()
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            pass_t[name] = round(time.time() - t0, 4)
-        pass_totals.append(round(sum(pass_t.values()), 4))
-        per_pass.append(pass_t)
-        if p == 0:
-            # verbatim pass-0 walls, captured BEFORE any min-merge, so the
-            # published provenance field is genuinely first-pass (advisor
-            # r11: dict(timings) after the merge held min-of-passes)
-            first_pass = dict(pass_t)
-        for n, t in pass_t.items():
-            timings[n] = min(timings.get(n, float("inf")), t)
-
-    def _rerun(name: str, keep) -> float:
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        t_new = round(time.time() - t0, 4)
-        timings[name] = keep(timings[name], t_new)
-        return t_new
-
-    # this box shares a host; a noisy-neighbor burst can inflate one or
-    # two queries by 10-30s in a single pass. Re-run clear outliers
-    # (>4x the per-query median and >2s absolute) once and keep the min —
-    # re-measuring the plan, not the neighbors.
-    med = sorted(timings.values())[len(timings) // 2]
-    for name in [n for n, t in timings.items() if t > max(4 * med, 2.0)]:
-        _rerun(name, min)
-
-    # round-10 (verdict r9 ask #2): noise-proof the MEASUREMENT, not just
-    # the detection. When the host is 2-4x loaded for a stretch of the
-    # loop, every query in that stretch inflates raw AND normalized
-    # together, so the r9 both-ratios flag rule cannot help — three
-    # rounds running, the official artifact contradicted the committed
-    # canonical run. Fix: any query whose first pass exceeded 1.3x its
-    # persisted per-query baseline is re-measured ONCE at end-of-run
-    # (after the load stretch has had the whole loop to subside) and the
-    # MIN of the passes is recorded; n_reruns is published so readers
-    # can see how much of the run needed rescue. A genuine plan
-    # regression reproduces on the second pass and stays flagged.
-    #
-    # Round-11 (advisor ask): the rescue is now SYMMETRIC. A query that
-    # came in >1.3x FASTER than its persisted baseline is re-run once
-    # and the MAX of its passes kept — a genuinely faster plan
-    # reproduces fast (max of two fast passes is still fast), while a
-    # single lucky draw is corrected upward instead of being persisted
-    # as next round's baseline. Slow rescues keep min, fast
-    # confirmations keep max: the persisted baseline is no longer
-    # one-sidedly min-biased.
-    #
-    # The FAST trigger uses the both-ratios rule (raw AND
-    # host-normalized, same as the regression flags): when the previous
-    # epoch was uniformly inflated (r10: median 1.47x), EVERY query
-    # looks raw-fast on a recovered host — a raw-only trigger re-ran 83
-    # queries and max-kept away a genuine recovery (measured: merged
-    # total 321s vs best-pass 261s). Normalizing by the calibration
-    # constant cancels host-epoch swings, so only a query that got
-    # faster RELATIVE TO THE HOST gets the skeptical max treatment.
-    # The end-of-run probe therefore runs BEFORE the rescue loop (it
-    # still brackets the main loop; rescues are post-loop extras).
+            t1 = time.time()
+            cpu_s = round(cpu_seconds_between(before, thread_ticks()), 2)
+            sample_s += (t0 - s0) + (time.time() - t1)
+            wall = round(t1 - t0, 4)
+            pass_total += wall
+            timings[name] = min(timings.get(name, wall), wall)
+            cpu[name] = min(cpu.get(name, cpu_s), cpu_s)
+        pass_totals.append(round(pass_total, 4))
     cal_probes.append(_calibrate())  # end-of-run probe
-    _totals = sorted(p[0] for p in cal_probes)
-    _cal_now = _totals[len(_totals) // 2]
-    n_reruns = n_reruns_fast = n_fast_pass_agreed = 0
-    if prev_queries:
-        for name, t in list(timings.items()):
-            pt = prev_queries.get(name, 0)
-            if not pt or pt <= 0:
-                continue
-            norm_ratio = (
-                (t / _cal_now) / (pt / prev_cal) if prev_cal else t / pt
-            )
-            if t > 1.3 * pt and t > 0.5:
-                _rerun(name, min)
-                n_reruns += 1
-            elif t < pt / 1.3 and norm_ratio < 1 / 1.3 and pt > 0.5:
-                # measurement fix (r12): the skeptical max-keep is only
-                # correct when the confirm run FAILS to reproduce the
-                # speedup. When the confirm run is ALSO raw-fast vs the
-                # persisted baseline, both measurements agree the plan
-                # got faster and the min is the honest record; max-keep
-                # here let a single noise burst during the confirm run
-                # overwrite two consistent fast passes (observed: 8.2 s
-                # and 2.9 s passes, 42 s confirm under load, 42 s
-                # published as a 2.1x "regression" on the round's
-                # biggest genuine improvement).
-                #
-                # second r12 measurement fix: with n_passes >= 2, a
-                # query that measured fast in EVERY full pass is already
-                # confirmed by independent same-run measurements — the
-                # skeptical confirm is a THIRD draw, and the confirm
-                # loop runs the flagged queries back-to-back at
-                # end-of-run, so one host-load burst there max-kept a
-                # whole STRETCH of genuinely faster queries (observed:
-                # first passes 0.47-1.21 s for 6 registry-adjacent
-                # queries published as 1.49-3.66 s; 24 fast-rescues, one
-                # burst). Two agreeing passes outvote one loaded
-                # confirm: keep the min, skip the rerun.
-                # round-13 (advisor r12): each pass must be fast under the
-                # HOST-NORMALIZED ratio too, not just raw — two back-to-back
-                # passes in one session share any warm-session effect, so
-                # the raw-only gate could publish a host-epoch min with no
-                # skeptical confirm.
-                if n_passes > 1 and all(
-                    pp.get(name, float("inf")) < pt / 1.3
-                    and (
-                        not prev_cal
-                        or (pp.get(name, float("inf")) / _cal_now)
-                        / (pt / prev_cal)
-                        < 1 / 1.3
-                    )
-                    for pp in per_pass
-                ):
-                    n_fast_pass_agreed += 1
-                    continue
-                t2 = _rerun(name, max)
-                if t2 < pt / 1.3:
-                    timings[name] = min(t, t2)
-                n_reruns_fast += 1
 
     # median of the three interleaved probes; spread = max/min exposes
     # how noisy the host was across the run
@@ -316,13 +214,15 @@ def main() -> None:
 
     total = round(sum(timings.values()), 4)
     normalized_total = round(total / calibration_s, 2)
+    cpu_total_s = round(sum(cpu.values()), 1)
 
     # per-query regression flags — the README ledger's own rule, now
     # applied inside the artifact (round-9 fix for the r08 165-false-flag
     # incident): a query is flagged only when BOTH its raw wall time AND
     # its host-normalized time grew >1.3x vs the previous persisted run.
     # A calibration-constant swing moves every normalized ratio but no
-    # raw ratio; a genuine plan regression moves both.
+    # raw ratio; a genuine plan regression moves both. Flags only
+    # report: nothing is rerun.
     regressed: dict[str, float] = {}
     if prev_queries and prev_cal:
         for name, t in timings.items():
@@ -342,35 +242,33 @@ def main() -> None:
     # for a sweep to trip over it.
     vs_canonical: dict[str, float] = {}
     cross_scale_flags: dict[str, dict] = {}
-    if sf is not None and sf != 0.1:
-        try:
-            with open(os.path.join(REPO, "BENCH_DETAIL.json")) as f:
-                canon = json.load(f)
-            from tools.scale_gate import ABS_FLOOR_S, growth_limit
+    if canon is not None:
+        from tools.scale_gate import ABS_FLOOR_S, growth_limit
 
-            data_growth = sf / 0.1
-            for name, t in timings.items():
-                ct = canon.get("queries", {}).get(name)
-                if not ct or ct <= 0:
-                    continue
-                ratio = round(t / ct, 2)
-                vs_canonical[name] = ratio
-                limit = growth_limit(name, data_growth)
-                if ratio > limit and max(t, ct) > ABS_FLOOR_S:
-                    cross_scale_flags[name] = {
-                        "ratio": ratio,
-                        "allowed": round(limit, 1),
-                        "sf_s": t,
-                        "canon_s": ct,
-                    }
-        except Exception:  # noqa: BLE001 — diagnosis is best-effort
-            pass
+        data_growth = sf / 0.1
+        for name, t in timings.items():
+            ct = canon["queries"].get(name)
+            if not ct or ct <= 0:
+                continue
+            ratio = round(t / ct, 2)
+            vs_canonical[name] = ratio
+            limit = growth_limit(name, data_growth)
+            if ratio > limit and max(t, ct) > ABS_FLOOR_S:
+                cross_scale_flags[name] = {
+                    "ratio": ratio,
+                    "allowed": round(limit, 1),
+                    "sf_s": t,
+                    "canon_s": ct,
+                }
 
     detail = {
         "metric": "headline_queries_total_wall",
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "queries_cpu_s": cpu,
+        "cpu_total_s": cpu_total_s,
+        "cpu_sample_ms": round(1000 * sample_s / (N_PASSES * len(names)), 2),
         "sf": sf,
         "cpus": cpus,
         "calibration_s": calibration_s,
@@ -380,18 +278,10 @@ def main() -> None:
         "calibration_spread": cal_spread,
         "normalized_total": normalized_total,
         "regressed": regressed,
-        "n_reruns": n_reruns,
-        "n_reruns_fast": n_reruns_fast,
-        "n_fast_pass_agreed": n_fast_pass_agreed,
         "disk_free_gb": disk_free_gb,
         "scratch_reaped": reaped,
-        "n_passes": n_passes,
+        "n_passes": N_PASSES,
         "pass_totals": pass_totals,
-        # first-pass wall for every re-measured query (auditable
-        # provenance of the persisted baseline; advisor r10)
-        "queries_first_pass": {
-            n: first_pass[n] for n in first_pass if first_pass[n] != timings[n]
-        },
     }
     if vs_canonical:
         detail["vs_sf0.1_ratio"] = vs_canonical
@@ -446,7 +336,7 @@ def main() -> None:
             "calibration_spread": cal_spread,
             "normalized_total": normalized_total,
             "n_regressed": len(regressed),
-            "n_reruns": n_reruns,
+            "cpu_total_s": cpu_total_s,
             "disk_free_gb": disk_free_gb,
         }
     )

@@ -1,1 +1,1 @@
-"""Column-level functions: bit-pattern utilities, vector math, text metrics."""
+"""Column-level functions: bit-pattern utilities and text metrics."""

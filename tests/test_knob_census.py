@@ -9,6 +9,11 @@ change. The walk is over the AST, so it sees ``os.environ.get``,
 ``os.environ[...]``, ``os.getenv`` and ``... in os.environ`` alike; any
 other use of the environment (passing it on, copying it, a non-literal
 key) is reported as opaque and fails the census.
+
+The bench harness gets the same census: ``bench.py`` and
+``tools/scratch.py`` read only the paths of the data and the scratch
+space they run against. How a bench measures is fixed in its code, so
+two runs of the same commit measure the same way.
 """
 
 from __future__ import annotations
@@ -16,9 +21,12 @@ from __future__ import annotations
 import ast
 import pathlib
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "gibbon_spark"
+REPO = pathlib.Path(__file__).resolve().parent.parent
+PKG = REPO / "gibbon_spark"
 
 DEPLOYMENT_SETTINGS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
+# GS_DUCK_SPILL_DIR is set by perfbench and tools/run_oracle_sweep.py
+HARNESS_PATHS = {"SPARK_GRAFT_SF_DIR", "GS_DUCK_SPILL_DIR"}
 
 _ENV_NAMES = {"environ", "environb", "getenv", "getenvb"}
 
@@ -46,11 +54,16 @@ def _env_key(node: ast.AST, parents: dict[ast.AST, ast.AST]) -> ast.AST | None:
     return None
 
 
-def env_reads(root: pathlib.Path = PKG) -> dict[str, list[str]]:
-    """Map each environment key the package reads (or ``<opaque>``) to
-    the ``file:line`` sites that read it."""
+def env_reads(root: pathlib.Path | list[pathlib.Path] = PKG) -> dict[str, list[str]]:
+    """Map each environment key the package under *root*, or the list of
+    repo files *root*, reads (or ``<opaque>``) to the ``file:line`` sites
+    that read it."""
+    if isinstance(root, list):
+        paths, base = root, REPO
+    else:
+        paths, base = sorted(root.rglob("*.py")), root.parent
     found: dict[str, list[str]] = {}
-    for path in sorted(root.rglob("*.py")):
+    for path in paths:
         tree = ast.parse(path.read_text(), filename=str(path))
         parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
         for node in ast.walk(tree):
@@ -62,7 +75,7 @@ def env_reads(root: pathlib.Path = PKG) -> dict[str, list[str]]:
                 if isinstance(key, ast.Constant) and isinstance(key.value, str)
                 else "<opaque>"
             )
-            site = f"{path.relative_to(root.parent)}:{node.lineno}"
+            site = f"{path.relative_to(base)}:{node.lineno}"
             found.setdefault(name, []).append(site)
     return found
 
@@ -70,6 +83,11 @@ def env_reads(root: pathlib.Path = PKG) -> dict[str, list[str]]:
 def test_engine_reads_only_deployment_settings():
     reads = env_reads()
     assert set(reads) == DEPLOYMENT_SETTINGS, reads
+
+
+def test_harness_reads_only_deployment_paths():
+    reads = env_reads([REPO / "bench.py", REPO / "tools" / "scratch.py"])
+    assert set(reads) == HARNESS_PATHS, reads
 
 
 def test_census_catches_every_read_form(tmp_path):

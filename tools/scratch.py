@@ -112,13 +112,12 @@ def reap_stale(tmp: str = "/tmp", max_age_s: float = 3600.0) -> list[str]:
     """Remove stale scratch dirs under *tmp*; returns the paths removed.
 
     A dir is stale when its newest top-level mtime is older than
-    ``max_age_s`` (env override ``GS_REAP_MAX_AGE_S``) AND no live
-    process can still own it: PID-named spill dirs require their owner
-    to be dead (/proc check), and Spark's own ``spark-*``/``blockmgr-*``
-    dirs are only touched when no JVM is running on the box at all.
+    ``max_age_s`` AND no live process can still own it: PID-named spill
+    dirs require their owner to be dead (/proc check), and Spark's own
+    ``spark-*``/``blockmgr-*`` dirs are only touched when no JVM is
+    running on the box at all.
     The current process's own spill dir is always skipped.
     """
-    max_age_s = float(os.environ.get("GS_REAP_MAX_AGE_S", max_age_s))
     now = time.time()
     removed: list[str] = []
     jvm_alive = _live_jvm_exists()
