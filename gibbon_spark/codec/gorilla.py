@@ -39,14 +39,14 @@ reference's golden bit-string tests, which are asserted verbatim in
 tests/test_gorilla_codec.py).
 
 Layout, in file order, with the tests that pin each part:
-- scalar reference (BitWriter/BitReader, the encoder/decoder classes,
-  ``encode_block``): golden bit strings in tests/test_gorilla_codec.py,
-  round trips in tests/test_gorilla_properties.py;
+- scalar reference: BitWriter/BitReader, one encoder and one decoder
+  class per record kind, and ``encode_block``, ``decode_block`` and
+  ``decode_values``, which only drive those classes over one stream:
+  golden bit strings in tests/test_gorilla_codec.py, round trips in
+  tests/test_gorilla_properties.py;
 - array kernels ``_bitlen``, ``_value_fields`` and ``_pack`` behind the
   two ``encode_*_vectorized`` encoders: bit identity with the scalar
   reference in both files;
-- decoders ``decode_values`` and ``decode_block`` (the scalar decode
-  reference): round trips in both;
 - ``decode_blocks_vectorized``, the lockstep array decoder of many
   blocks: identity with ``decode_block`` in both files, including every
   truncation point of a block (tests/test_gorilla_codec.py).
@@ -59,8 +59,18 @@ it pickled by value.
 from __future__ import annotations
 
 import struct
+from functools import partial
 
 _U64 = (1 << 64) - 1
+
+# The error every decoder raises for a corrupt block whose records run
+# past its payload bytes.
+_PAST_END = "record runs past the end of its payload"
+
+# bound once: a field read or a float conversion is a few hundred ns,
+# and the attribute lookups would be a third of it
+_from_bytes = int.from_bytes
+_F64 = struct.Struct("<d")
 
 # Width of one block: header times are epoch seconds aligned to it.
 BLOCK_SECONDS = 7200
@@ -101,29 +111,32 @@ class BitWriter:
 
 class BitReader:
     """Forward-only bit cursor; returns None at end-of-stream
-    (Reader contract, stream.rs:6-8)."""
+    (Reader contract, stream.rs:6-8). A read reaching past ``data``
+    itself, where ``nbits`` claims more bits than it holds, raises
+    ``ValueError``."""
+
+    __slots__ = ("data", "nbits", "pos", "_stop")
 
     def __init__(self, data: bytes, nbits: int) -> None:
         self.data = data
         self.nbits = nbits
         self.pos = 0
+        self._stop = min(nbits, len(data) << 3)  # reads up to here succeed
 
     def read(self, count: int) -> int | None:
-        if self.pos + count > self.nbits:
-            return None
-        out = 0
         pos = self.pos
-        remaining = count
-        while remaining:
-            byte = self.data[pos >> 3]
-            avail = 8 - (pos & 7)
-            take = min(avail, remaining)
-            chunk = (byte >> (avail - take)) & ((1 << take) - 1)
-            out = (out << take) | chunk
-            pos += take
-            remaining -= take
-        self.pos = pos
-        return out
+        end = pos + count
+        if end > self._stop:
+            if end > self.nbits:
+                return None
+            raise ValueError(_PAST_END)
+        self.pos = end
+        # only the bytes the field covers, so a read costs the same at
+        # any payload length; a control bit is one byte's shift
+        if count == 1:
+            return (self.data[pos >> 3] >> (~pos & 7)) & 1
+        word = _from_bytes(self.data[pos >> 3 : (end + 7) >> 3], "big")
+        return (word >> (-end & 7)) & ((1 << count) - 1)
 
 
 def _lz64(x: int) -> int:
@@ -171,38 +184,46 @@ class TimestampEncoder:
         self.prev = ts
 
 
+# dod field (width, bias) by the number of leading ones of a timestamp
+# record's control prefix (see TimestampEncoder.push)
+_TS_DOD = ((0, 0), (7, 63), (9, 255), (12, 2047), (32, 0))
+
+
 class TimestampDecoder:
+    __slots__ = ("header_time", "value", "delta")
+
     def __init__(self, header_time: int) -> None:
         self.header_time = header_time
         self.value: int | None = None
         self.delta = 0
 
     def next(self, r: BitReader) -> int | None:
+        """The next timestamp; None at the end, also inside a record."""
+        read = r.read
         if self.value is None:
-            delta = r.read(14)
+            delta = read(14)
             if delta is None:
                 return None
             self.value = (self.header_time + delta) & _U64
             self.delta = delta
             return self.value
-        ctl = r.read(1)
-        if ctl is None:
-            return None
-        if ctl == 0:
-            self.value = (self.value + self.delta) & _U64
-            return self.value
-        if r.read(1) == 0:
-            nbits, bias = 7, 63
-        elif r.read(1) == 0:
-            nbits, bias = 9, 255
-        elif r.read(1) == 0:
-            nbits, bias = 12, 2047
-        else:
-            nbits, bias = 32, 0
-        dod = r.read(nbits) - bias
-        if nbits == 32 and dod >= (1 << 31):  # sign-extend (see module doc)
-            dod -= 1 << 32
-        self.delta += dod
+        ones = 0
+        while ones < 4:
+            bit = read(1)
+            if bit is None:
+                return None
+            if not bit:
+                break
+            ones += 1
+        if ones:
+            nbits, bias = _TS_DOD[ones]
+            dod = read(nbits)
+            if dod is None:
+                return None
+            dod -= bias
+            if nbits == 32 and dod >= (1 << 31):  # sign-extend (see module doc)
+                dod -= 1 << 32
+            self.delta += dod
         self.value = (self.value + self.delta) & _U64
         return self.value
 
@@ -239,46 +260,46 @@ class DoubleEncoder:
 
 
 class DoubleDecoder:
+    __slots__ = ("value", "xor")
+
     def __init__(self) -> None:
         self.value: int | None = None
         self.xor = 0
 
     def next(self, r: BitReader) -> float | None:
+        """The next value; None at the end, also inside a record."""
+        read = r.read
         if self.value is None:
-            bits = r.read(64)
+            bits = read(64)
             if bits is None:
                 return None
             self.value, self.xor = bits, bits
         else:
-            ctl = r.read(1)
+            ctl = read(1)
             if ctl is None:
                 return None
             if ctl == 1:
-                sub = r.read(1)
+                sub = read(1)
                 if sub is None:
-                    return None  # truncated mid-record: EOS, not TypeError
+                    return None
                 if sub == 0:  # reuse window (from current xor state)
-                    prev_lz = _lz64(self.xor)
-                    prev_tz = 0 if prev_lz == 64 else _tz64(self.xor)
-                    nbits = 64 - prev_tz - prev_lz
-                    payload = r.read(nbits)
+                    shift = _tz64(self.xor)  # xor 0: a 0-bit window
+                    payload = read(self.xor.bit_length() - shift)
                     if payload is None:
                         return None
-                    new_xor = payload << prev_tz
-                else:  # new window
-                    lz = r.read(5)
-                    mc = r.read(6)
-                    if lz is None or mc is None:
+                    new_xor = payload << shift
+                else:  # new window: 5 bits lz, 6 bits meaningful-1
+                    head = read(11)
+                    if head is None:
                         return None
-                    meaningful = mc + 1
-                    tz = 64 - meaningful - lz
-                    payload = r.read(meaningful)
+                    meaningful = (head & 63) + 1
+                    payload = read(meaningful)
                     if payload is None:
                         return None
-                    new_xor = payload << tz
+                    new_xor = payload << (64 - meaningful - (head >> 6))
                 self.value ^= new_xor
                 self.xor = new_xor
-        return struct.unpack("<d", struct.pack("<Q", self.value))[0]
+        return _F64.unpack(self.value.to_bytes(8, "little"))[0]
 
 
 class DoubleEncoderLeadTrail:
@@ -336,46 +357,47 @@ class DoubleDecoderLeadTrail:
     reference never wrote one). Mirrors the writer's persistent-window
     state machine exactly."""
 
+    __slots__ = ("value", "lz", "mc")
+
     def __init__(self) -> None:
         self.value: int | None = None
         self.lz = 64
         self.mc = 0
 
     def next(self, r: BitReader) -> float | None:
+        """The next value; None at the end, also inside a record."""
+        read = r.read
         if self.value is None:
-            bits = r.read(64)
+            bits = read(64)
             if bits is None:
                 return None
             self.value = bits
             self.lz, self.mc = 64, 0
         else:
-            ctl = r.read(1)
+            ctl = read(1)
             if ctl is None:
                 return None
             if ctl == 1:
-                sub = r.read(1)
+                sub = read(1)
                 if sub is None:
-                    return None  # truncated mid-record: EOS, not TypeError
+                    return None
                 if sub == 0:  # fit in the standing window
-                    prev_tz = 64 - self.lz - self.mc
-                    payload = r.read(64 - prev_tz - self.lz)
+                    payload = read(self.mc)
                     if payload is None:
                         return None
-                    new_xor = payload << prev_tz
-                else:  # explicit new window
-                    lz = r.read(5)
-                    mc = r.read(6)
-                    if lz is None or mc is None:
+                    new_xor = payload << (64 - self.lz - self.mc)
+                else:  # explicit new window: 5 bits lz, 6 bits meaningful-1
+                    head = read(11)
+                    if head is None:
                         return None
-                    meaningful = mc + 1
-                    tz = 64 - meaningful - lz
-                    payload = r.read(meaningful)
+                    lz, meaningful = head >> 6, (head & 63) + 1
+                    payload = read(meaningful)
                     if payload is None:
                         return None
-                    new_xor = payload << tz
+                    new_xor = payload << (64 - meaningful - lz)
                     self.lz, self.mc = lz, meaningful
                 self.value ^= new_xor
-        return struct.unpack("<d", struct.pack("<Q", self.value))[0]
+        return _F64.unpack(self.value.to_bytes(8, "little"))[0]
 
 
 # ---------------------------------------------------------------------------
@@ -393,6 +415,48 @@ def encode_block(
         te.push(int(ts), w)
         de.push(float(v), w)
     return w.getvalue()
+
+
+def decode_block(
+    payload: bytes, nbits: int, header_time: int
+) -> tuple[list[int], list[float]]:
+    """Scalar decode of one block, the reference that
+    :func:`decode_blocks_vectorized` is pinned against: a
+    TimestampDecoder and a DoubleDecoder take turns on one BitReader
+    over the whole payload.
+
+    ``nbits`` is consulted only between records: a record starts while
+    a bit remains before it (the first needs its 14-bit delta), and its
+    timestamp must leave its value at least a bit (the first value all
+    64) before ``nbits``, else ``ValueError("value truncated: timestamp
+    without value")``. A record running past the payload bytes raises
+    ``ValueError`` as well."""
+    # no read is wider than 64 bits, so with this bound every read
+    # either succeeds or runs past the payload bytes and raises
+    r = BitReader(payload, (len(payload) << 3) + 64)
+    next_ts = TimestampDecoder(header_time).next
+    next_value = DoubleDecoder().next
+    out_ts: list[int] = []
+    out_v: list[float] = []
+    ts_room, value_room = 14, 64
+    while r.pos + ts_room <= nbits:
+        out_ts.append(next_ts(r))
+        if r.pos + value_room > nbits:
+            raise ValueError("value truncated: timestamp without value")
+        out_v.append(next_value(r))
+        ts_room = value_room = 1
+    return out_ts, out_v
+
+
+def decode_values(payload: bytes, nbits: int, policy: str = "xor") -> list[float]:
+    """Decode a value-only stream: :class:`DoubleDecoder`
+    (``policy="xor"``) or :class:`DoubleDecoderLeadTrail`
+    (``policy="leadtrail"``) driven over a BitReader until it reports the
+    end, so a stream cut inside a record yields the records before it."""
+    decoders = {"xor": DoubleDecoder, "leadtrail": DoubleDecoderLeadTrail}
+    if policy not in decoders:
+        raise ValueError(f"unknown policy {policy!r}")
+    return list(iter(partial(decoders[policy]().next, BitReader(payload, nbits)), None))
 
 
 def _bitlen(x):
@@ -614,72 +678,6 @@ def encode_values_vectorized(values, is_start, policy: str = "xor"):
     return _pack(_value_fields(values, is_start, policy), start_idx)
 
 
-def decode_values(payload: bytes, nbits: int, policy: str = "xor") -> list[float]:
-    """Inlined big-int-cursor decode of a value-only stream — identical
-    semantics to driving :class:`DoubleDecoder` /
-    :class:`DoubleDecoderLeadTrail` over a BitReader (equivalence pinned
-    in tests), ~10x faster: each field extraction is one C-level
-    shift+mask."""
-    acc = int.from_bytes(payload, "big")
-    total = len(payload) * 8
-    pos = 0
-    unpack, pack = struct.unpack, struct.pack
-    lead = policy == "leadtrail"
-    if policy not in ("xor", "leadtrail"):
-        raise ValueError(f"unknown policy {policy!r}")
-
-    out: list[float] = []
-    if pos + 64 > nbits:
-        return out
-    v_bits = (acc >> (total - 64)) & _U64
-    pos = 64
-    out.append(unpack("<d", pack("<Q", v_bits))[0])
-    v_xor = v_bits  # xor-policy state
-    wlz, wtz, wwidth = 64, 0, 0  # leadtrail-policy state
-    while pos + 1 <= nbits:
-        ctl = (acc >> (total - pos - 1)) & 1
-        pos += 1
-        if ctl:
-            if pos + 1 > nbits:
-                break
-            sub = (acc >> (total - pos - 1)) & 1
-            pos += 1
-            if sub:  # new window
-                if pos + 11 > nbits:
-                    break
-                lz = (acc >> (total - pos - 5)) & 0x1F
-                pos += 5
-                meaningful = ((acc >> (total - pos - 6)) & 0x3F) + 1
-                pos += 6
-                tz = 64 - meaningful - lz
-                if pos + meaningful > nbits:
-                    break
-                new_xor = (
-                    (acc >> (total - pos - meaningful))
-                    & ((1 << meaningful) - 1)
-                ) << tz
-                pos += meaningful
-                if lead:
-                    wlz, wtz, wwidth = lz, tz, meaningful
-            else:  # fit in the standing/derived window
-                if lead:
-                    nb = wwidth
-                    sh = wtz
-                else:
-                    prev_lz = _lz64(v_xor)
-                    sh = 0 if prev_lz == 64 else _tz64(v_xor)
-                    nb = 64 - sh - prev_lz
-                if pos + nb > nbits:
-                    break
-                new_xor = ((acc >> (total - pos - nb)) & ((1 << nb) - 1)) << sh
-                pos += nb
-            v_bits ^= new_xor
-            if not lead:
-                v_xor = new_xor
-        out.append(unpack("<d", pack("<Q", v_bits))[0])
-    return out
-
-
 # Timestamp record fields by the record's first 4 bits (see
 # TimestampEncoder.push): header length, dod width and dod bias.
 _TS_HEAD = (1,) * 8 + (2,) * 4 + (3,) * 2 + (4, 4)
@@ -740,7 +738,7 @@ def decode_blocks_vectorized(payloads, nbits, header_times):
 
     def past_end(pos, blk):
         if (pos > total[blk]).any():
-            raise ValueError("record runs past the end of its payload")
+            raise ValueError(_PAST_END)
 
     def truncated(pos, blk):
         if (pos > nbits[blk]).any():
@@ -818,101 +816,3 @@ def decode_blocks_vectorized(payloads, nbits, header_times):
     ts_out[dest] = np.concatenate(out_ts)
     v_out[dest] = np.concatenate(out_v)
     return ts_out, v_out.view(np.float64), counts
-
-
-def decode_block(
-    payload: bytes, nbits: int, header_time: int
-) -> tuple[list[int], list[float]]:
-    """Scalar decode of one block, the reference that
-    :func:`decode_blocks_vectorized` is pinned against. Identical
-    semantics to driving TimestampDecoder/DoubleDecoder over a BitReader
-    (which the golden and property tests pin). The whole payload is one
-    Python big-int cursor: each field extraction is a single C-level
-    shift+mask instead of a per-byte Python loop."""
-    acc = int.from_bytes(payload, "big")
-    total = len(payload) * 8
-    pos = 0
-    unpack, pack = struct.unpack, struct.pack
-
-    out_ts: list[int] = []
-    out_v: list[float] = []
-    ts_val = 0
-    delta = 0
-    v_bits = 0
-    v_xor = 0
-    first = True
-    while True:
-        # ---- timestamp record (timestamp_stream.rs:81-121) ----
-        if first:
-            if pos + 14 > nbits:
-                break
-            delta = (acc >> (total - pos - 14)) & 0x3FFF
-            pos += 14
-            ts_val = (header_time + delta) & _U64
-        else:
-            if pos + 1 > nbits:
-                break
-            ctl = (acc >> (total - pos - 1)) & 1
-            pos += 1
-            if ctl:
-                nb, bias = 7, 63
-                if (acc >> (total - pos - 1)) & 1:
-                    pos += 1
-                    nb, bias = 9, 255
-                    if (acc >> (total - pos - 1)) & 1:
-                        pos += 1
-                        nb, bias = 12, 2047
-                        if (acc >> (total - pos - 1)) & 1:
-                            nb, bias = 32, 0
-                        pos += 1
-                    else:
-                        pos += 1
-                else:
-                    pos += 1
-                dod = ((acc >> (total - pos - nb)) & ((1 << nb) - 1)) - bias
-                pos += nb
-                if nb == 32 and dod >= (1 << 31):  # sign-extend (module doc)
-                    dod -= 1 << 32
-                delta += dod
-            ts_val = (ts_val + delta) & _U64
-        # ---- value record (double_stream.rs:96-141) ----
-        if first:
-            if pos + 64 > nbits:
-                raise ValueError("value truncated: timestamp without value")
-            v_bits = (acc >> (total - pos - 64)) & _U64
-            pos += 64
-            v_xor = v_bits
-            first = False
-        else:
-            if pos + 1 > nbits:
-                raise ValueError("value truncated: timestamp without value")
-            if (acc >> (total - pos - 1)) & 1:
-                pos += 1
-                if (acc >> (total - pos - 1)) & 1:  # new window
-                    pos += 1
-                    lz = (acc >> (total - pos - 5)) & 0x1F
-                    pos += 5
-                    meaningful = ((acc >> (total - pos - 6)) & 0x3F) + 1
-                    pos += 6
-                    tz = 64 - meaningful - lz
-                    new_xor = (
-                        (acc >> (total - pos - meaningful))
-                        & ((1 << meaningful) - 1)
-                    ) << tz
-                    pos += meaningful
-                else:  # reuse window (from current xor state)
-                    pos += 1
-                    prev_lz = _lz64(v_xor)
-                    prev_tz = 0 if prev_lz == 64 else _tz64(v_xor)
-                    nb = 64 - prev_tz - prev_lz
-                    new_xor = (
-                        (acc >> (total - pos - nb)) & ((1 << nb) - 1)
-                    ) << prev_tz
-                    pos += nb
-                v_bits ^= new_xor
-                v_xor = new_xor
-            else:
-                pos += 1
-        out_ts.append(ts_val)
-        out_v.append(unpack("<d", pack("<Q", v_bits))[0])
-    return out_ts, out_v

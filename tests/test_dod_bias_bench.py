@@ -6,8 +6,8 @@ twice as long to decode" in native code).
 The hard assertion is CORRECTNESS (both mini-codecs round-trip the
 same dod sequence exactly, at identical bit widths); the timing ratio
 is asserted only directionally with a generous noise margin — the
-measured figure on this host (branchy/biased ≈ 1.35x in the Python
-big-int-cursor decode; the native 2x shrinks because interpreter
+measured figure on a 4-core host (branchy/biased ≈ 1.35x in the tool's
+big-int-cursor mini-codecs; the native 2x shrinks because interpreter
 overhead dominates branch cost) is recorded in SURVEY.md §6.
 """
 

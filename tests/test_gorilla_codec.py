@@ -21,6 +21,7 @@ from gibbon_spark.codec.gorilla import (
     TimestampEncoder,
     decode_block,
     decode_blocks_vectorized,
+    decode_values,
     encode_block,
     encode_blocks_vectorized,
     encode_values_vectorized,
@@ -353,25 +354,25 @@ def test_lt_property_roundtrip():
 # A stream cut mid-record must yield the decodable prefix then None —
 # never a TypeError from a None flowing into integer arithmetic. The
 # reference never hits this (its readers are length-framed), so this is
-# a contract of OUR BitReader/decoder pairing: decode_block callers rely
-# on None-at-EOS to terminate.
+# a contract of OUR BitReader/decoder pairing: decode_values stops at
+# the first None.
 
 
-def _truncation_sweep(encoder_cls, decoder_cls, values):
+def _truncation_sweep(new_encoder, new_decoder, values):
     w = BitWriter()
-    e = encoder_cls()
+    e = new_encoder()
     for v in values:
         e.push(v, w)
     data, nbits = w.getvalue()
     for cut in range(nbits + 1):
-        d = decoder_cls()
+        d = new_decoder()
         r = BitReader(data, cut)
         got = []
         while (x := d.next(r)) is not None:  # must not raise
             got.append(x)
         assert got == values[: len(got)]  # decoded prefix is exact
     # and the untruncated stream still round-trips in the same sweep
-    d = decoder_cls()
+    d = new_decoder()
     r = BitReader(data, nbits)
     got = []
     while (x := d.next(r)) is not None:
@@ -387,6 +388,16 @@ def test_dbl_truncated_stream_returns_none():
 def test_lt_truncated_stream_returns_none():
     _truncation_sweep(
         DoubleEncoderLeadTrail, DoubleDecoderLeadTrail, [11.0, 11.0, 10.0, 10.5, -3.25]
+    )
+
+
+def test_ts_truncated_stream_returns_none():
+    # exercises: the first delta, then dods of 55, 0, 3815, -3874,
+    # 95998, 200 and 1500 (every field width: 0, 7, 32, 9 and 12 bits)
+    _truncation_sweep(
+        lambda: TimestampEncoder(0),
+        lambda: TimestampDecoder(0),
+        [5, 65, 125, 4000, 4001, 100000, 196199, 293898],
     )
 
 
@@ -567,7 +578,76 @@ def test_vectorized_decode_every_cut_matches_scalar():
 def test_vectorized_decode_rejects_records_past_the_payload():
     header, _, payload, _ = _marked_block()
     nbits = len(payload) * 8 + 40
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="past the end"):
         decode_block(payload, nbits, header)
     with pytest.raises(ValueError, match="past the end"):
         decode_blocks_vectorized([payload], [nbits], [header])
+    # the value-only decoder and the reader itself give the same message
+    for policy in ("xor", "leadtrail"):
+        with pytest.raises(ValueError, match="past the end"):
+            decode_values(b"\0" * 8, 100, policy)
+    with pytest.raises(ValueError, match="past the end"):
+        BitReader(b"\0", 100).read(20)
+
+
+def test_long_streams_decode_alike():
+    """One 10k-sample block, ten times the longest stream any other test
+    decodes: decode_block and decode_blocks_vectorized give the same
+    samples, and decode_values gives back the input bits under both
+    policies. Timestamp steps reach every dod bucket; values mix
+    repeats, small moves and random bit patterns."""
+    import random
+
+    import numpy as np
+
+    rng = random.Random(10)
+    header = 7200 * 1000
+    ts, vals = [header + 3], [20.0]
+    for _ in range(9_999):
+        ts.append(ts[-1] + rng.choice([0, 1, 60, 60, 61, 300, 3000]))
+        vals.append(
+            rng.choice(
+                [
+                    vals[-1],
+                    round(vals[-1] + rng.uniform(-1, 1), 2),
+                    float(np.frombuffer(rng.randbytes(8))[0]),
+                ]
+            )
+        )
+    bits = np.array(vals).view(np.uint64).tolist()
+
+    payload, nbits = encode_block(ts, vals, header)
+    got_ts, got_vals = decode_block(payload, nbits, header)
+    assert got_ts == ts
+    assert np.array(got_vals).view(np.uint64).tolist() == bits
+    vec_ts, vec_vals, counts = decode_blocks_vectorized([payload], [nbits], [header])
+    assert counts.tolist() == [len(ts)]
+    assert vec_ts.tolist() == ts
+    assert vec_vals.view(np.uint64).tolist() == bits
+
+    is_start = np.zeros(len(vals), dtype=bool)
+    is_start[0] = True
+    for policy in ("xor", "leadtrail"):
+        (p,), (nb,), _ = encode_values_vectorized(vals, is_start, policy)
+        got = decode_values(p, int(nb), policy)
+        assert np.array(got).view(np.uint64).tolist() == bits, policy
+
+
+def test_codec_module_imports_only_stdlib_and_numpy():
+    """spark_ops._ship_codec_by_value pickles codec/gorilla.py by value
+    for the executors, so the module must not import the engine or
+    pyspark: a local-mode run would not notice if it did."""
+    import ast
+    import sys
+    from pathlib import Path
+
+    from gibbon_spark.codec import gorilla
+
+    roots = set()
+    for node in ast.walk(ast.parse(Path(gorilla.__file__).read_text())):
+        if isinstance(node, ast.Import):
+            roots |= {alias.name.split(".")[0] for alias in node.names}
+        elif isinstance(node, ast.ImportFrom):
+            assert node.level == 0, f"relative import of {node.module}"
+            roots.add(node.module.split(".")[0])
+    assert roots - {"numpy"} <= sys.stdlib_module_names, sorted(roots)
