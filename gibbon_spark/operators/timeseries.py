@@ -26,6 +26,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gibbon_spark.codec.gorilla import BLOCK_SECONDS
 from gibbon_spark.functions import exact as exact_fns
 
 # ---------------------------------------------------------------------------
@@ -238,11 +239,17 @@ def _leading_zeros64(col: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def with_bucket(df: DataFrame, *, ts: str = "ts", width: str = "2 hours") -> DataFrame:
-    """Add the Gorilla block key: 2-hour aligned window start
-    (``csv_to_packed.rs:17`` — ``(t / 7200) * 7200`` seconds). Used as the
-    parquet partition column so time-range queries prune partitions."""
-    return df.withColumn("bucket", F.window(F.col(ts), width).start)
+# The Gorilla block width as a Spark interval string; windows of it start
+# where ``(t / BLOCK_SECONDS) * BLOCK_SECONDS`` does.
+BUCKET_WIDTH = f"{BLOCK_SECONDS} seconds"
+
+
+def with_bucket(df: DataFrame, *, ts: str = "ts") -> DataFrame:
+    """Add the Gorilla block key: the start of the ``BLOCK_SECONDS``
+    (2-hour) aligned window holding ``ts`` (``csv_to_packed.rs:17`` —
+    ``(t / 7200) * 7200`` seconds). The bucketed stores' partition column,
+    so time-range queries prune partitions."""
+    return df.withColumn("bucket", F.window(F.col(ts), BUCKET_WIDTH).start)
 
 
 def resample(

@@ -15,10 +15,10 @@ Here the same layout is Hive-partitioned Parquet:
   achieved ratio against the reference's 16 B/row raw-size formula
   (``csv_to_packed.rs:109-113``).
 
-At cluster scale: writes repartition by (bucket, series hash) so each
-task writes one partition directory (no small-files explosion), and
-readers get both partition pruning on time and series co-location for
-per-series windows.
+At cluster scale: every store write (``_write_partitioned``) repartitions
+by (partition column, series hash) so each task writes one partition
+directory (no small-files explosion), and readers get both partition
+pruning on time and series co-location for per-series windows.
 """
 
 from __future__ import annotations
@@ -30,9 +30,22 @@ from pyspark.sql import functions as F
 
 from gibbon_spark.codec.gorilla import BLOCK_SECONDS
 from gibbon_spark.codec.spark_ops import BLOCK_SCHEMA
-from gibbon_spark.operators.timeseries import as_timeseries, with_bucket
+from gibbon_spark.operators.timeseries import BUCKET_WIDTH, as_timeseries, with_bucket
 
-BUCKET_WIDTH = "2 hours"
+
+def _write_partitioned(
+    df: DataFrame, path: str, part: str, files: int, *, order=(), mode: str = "overwrite"
+) -> None:
+    """The one store write: Hive-partition ``df`` by ``part`` with at
+    most ``files`` files per partition directory, each series' rows in
+    one file (rows are repartitioned on (part, |hash(series_id) % files|)),
+    sorted by ``order`` within each file. The remainder is taken before
+    the absolute value, so a series whose hash is -2^31 cannot overflow."""
+    h = F.hash("series_id")
+    df = df.repartition(F.col(part), F.abs(h % files).alias("sb"))
+    if order:
+        df = df.sortWithinPartitions(*order)
+    df.write.mode(mode).partitionBy(part).parquet(path)
 
 
 def write_bucketed(
@@ -49,17 +62,8 @@ def write_bucketed(
     parquet. ``series_buckets`` caps files per time bucket: rows are
     repartitioned on (bucket, hash(series_id) % N) so a 1000-executor
     write still emits N files per bucket, co-locating each series."""
-    norm = as_timeseries(df, series=series, ts=ts, value=value)
-    bucketed = with_bucket(norm, width=BUCKET_WIDTH)
-    (
-        bucketed.repartition(
-            F.col("bucket"),
-            (F.abs(F.hash("series_id")) % series_buckets).alias("sb"),
-        )
-        .write.mode(mode)
-        .partitionBy("bucket")
-        .parquet(path)
-    )
+    norm = with_bucket(as_timeseries(df, series=series, ts=ts, value=value))
+    _write_partitioned(norm, path, "bucket", series_buckets, mode=mode)
 
 
 def compact_bucketed(
@@ -83,16 +87,7 @@ def compact_bucketed(
     than in place — Spark cannot safely overwrite a path it is reading.
     """
     df = spark.read.parquet(path)
-    (
-        df.repartition(
-            F.col("bucket"),
-            (F.abs(F.hash("series_id")) % series_buckets).alias("sb"),
-        )
-        .sortWithinPartitions("series_id", "ts")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(out_path)
-    )
+    _write_partitioned(df, out_path, "bucket", series_buckets, order=("series_id", "ts"))
 
 
 def expire_buckets(path: str, older_than) -> list[str]:
@@ -135,7 +130,7 @@ def read_bucketed(
     so Catalyst prunes whole buckets before listing row groups."""
     df = spark.read.parquet(path)
     if start is not None:
-        df = df.filter(F.col("bucket") >= F.date_trunc("hour", F.lit(start).cast("timestamp")) - F.expr("interval 2 hours"))
+        df = df.filter(F.col("bucket") >= F.date_trunc("hour", F.lit(start).cast("timestamp")) - F.expr(f"interval {BUCKET_WIDTH}"))
         df = df.filter(F.col("ts") >= F.lit(start).cast("timestamp"))
     if end is not None:
         df = df.filter(F.col("bucket") < F.lit(end).cast("timestamp"))
@@ -174,19 +169,9 @@ def write_gorilla_store(
     ``day_files`` caps files per day directory regardless of executor
     count (same discipline as ``write_bucketed``); raise it on a real
     cluster so per-file size stays in the 128 MB-1 GB band at 100 TB."""
-    (
-        blocks.withColumn(
-            "bucket_day", F.col("header_time") - F.col("header_time") % DAY
-        )
-        .repartition(
-            F.col("bucket_day"),
-            (F.abs(F.hash("series_id")) % day_files).alias("sb"),
-        )
-        .sortWithinPartitions("header_time", "series_id")
-        .write.mode(mode)
-        .partitionBy("bucket_day")
-        .parquet(path)
-    )
+    day = blocks.withColumn("bucket_day", F.col("header_time") - F.col("header_time") % DAY)
+    order = ("header_time", "series_id")
+    _write_partitioned(day, path, "bucket_day", day_files, order=order, mode=mode)
 
 
 def read_gorilla_store(

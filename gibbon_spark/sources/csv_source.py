@@ -20,17 +20,22 @@ GIBBON_CSV_SCHEMA = T.StructType(
 )
 
 
+def _canonical(raw: DataFrame, series_id: str) -> DataFrame:
+    """(ts, value) CSV rows → (series_id, ts timestamp, value)."""
+    return raw.select(
+        F.lit(series_id).alias("series_id"),
+        F.timestamp_seconds("ts").alias("ts"),
+        F.col("value"),
+    )
+
+
 def read_gibbon_csv(
     spark: SparkSession, path: str, *, series_id: str = "default"
 ) -> DataFrame:
     """Read the reference CSV shape into (series_id, ts timestamp, value).
     Epoch seconds → TimestampType (seconds granularity is inherent)."""
     raw = spark.read.schema(GIBBON_CSV_SCHEMA).csv(path, header=False)
-    return raw.select(
-        F.lit(series_id).alias("series_id"),
-        F.timestamp_seconds("ts").alias("ts"),
-        F.col("value"),
-    )
+    return _canonical(raw, series_id)
 
 
 def stream_gibbon_csv(
@@ -38,8 +43,4 @@ def stream_gibbon_csv(
 ) -> DataFrame:
     """Structured-Streaming variant (directory of CSV files as a stream)."""
     raw = spark.readStream.schema(GIBBON_CSV_SCHEMA).csv(path, header=False)
-    return raw.select(
-        F.lit(series_id).alias("series_id"),
-        F.timestamp_seconds("ts").alias("ts"),
-        F.col("value"),
-    )
+    return _canonical(raw, series_id)

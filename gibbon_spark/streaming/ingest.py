@@ -6,14 +6,15 @@ The reference ingests synchronously: CSV row → ``TimeAndValueStream::push``
 Structured Streaming pipeline:
 
     readStream (csv/rate/kafka) → normalize to (series_id, ts, value)
-      → withWatermark → partitioned parquet sink (2-h bucket dirs)
+      + 2-h bucket column → partitioned parquet sink (2-h bucket dirs)
 
 Documented divergence (SURVEY.md §2.2): gibbon's decoder tolerates
 out-of-order deltas (negative dod, ``timestamp_stream.rs:88`` wrapping
 add), so late rows are *encoded*, never dropped. Spark's watermark
-DROPS rows later than the configured bound for stateful stages; the
-plain append sink below never drops (no state), and the windowed
-aggregation helper documents the bound it enforces.
+DROPS rows later than the configured bound only for stateful stages, so
+the plain append sink below has no watermark and never drops a row, and
+the windowed aggregation and dedup helpers document the bound they
+enforce.
 
 Scale: the sink path does not shuffle: each micro-batch task appends
 its rows to the bucket directories it touches, so a long-running sink
@@ -30,21 +31,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from gibbon_spark.operators.timeseries import as_timeseries, with_bucket
-from gibbon_spark.sources.bucketed import BUCKET_WIDTH
-
-
-def normalize_stream(
-    stream: DataFrame,
-    *,
-    series: list[str] | None = None,
-    ts: str = "ts",
-    value: str = "value",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Normalize any streaming source to the canonical watermarked
-    stream schema with the storage bucket column."""
-    norm = as_timeseries(stream, series=series, ts=ts, value=value)
-    return with_bucket(norm.withWatermark("ts", watermark), width=BUCKET_WIDTH)
 
 
 def start_bucketed_sink(
@@ -55,15 +41,13 @@ def start_bucketed_sink(
     series: list[str] | None = None,
     ts: str = "ts",
     value: str = "value",
-    watermark: str = "10 minutes",
     trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Start the parquet sink: append-only, partitioned by bucket —
-    the streaming twin of sources.bucketed.write_bucketed. Exactly-once
-    per micro-batch via the checkpoint + file-sink manifest."""
-    norm = normalize_stream(
-        stream, series=series, ts=ts, value=value, watermark=watermark
-    )
+    the streaming twin of sources.bucketed.write_bucketed, normalizing
+    rows the same way. Stateless, so no row is ever dropped as late.
+    Exactly-once per micro-batch via the checkpoint + file-sink manifest."""
+    norm = with_bucket(as_timeseries(stream, series=series, ts=ts, value=value))
     writer = norm.writeStream.format("parquet").option(
         "checkpointLocation", checkpoint
     ).option("path", path).partitionBy("bucket").outputMode("append")

@@ -45,34 +45,28 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 from gibbon_spark.materialize import materialize
 from gibbon_spark.session import pin_shuffle_partitions
-from gibbon_spark.sources.tables import raw_schema
+from gibbon_spark.sources.tables import nanos_ts_to_micros, raw_schema
 
 TIMEOUT_S = 300
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming read of the events table, normalized like the batch
-    loader (sources/tables.py): if the parquet stores TIMESTAMP(NANOS)
-    the column arrives as a long (nanosAsLong) and is converted to a
-    microsecond timestamp JVM-side; if it is already a timestamp it is
-    passed through unchanged. Pins the session to UTC like the batch
-    queries' ``_prep``."""
+    """Streaming read of the events table, normalized by the batch
+    loader's own ``sources.tables.nanos_ts_to_micros`` (a TIMESTAMP(NANOS)
+    ``ts`` arrives as a long under nanosAsLong and becomes a microsecond
+    timestamp; one already read as a timestamp passes through). Pins the
+    session to UTC like the batch queries' ``_prep``."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = raw_schema(spark, sf_dir, "events")
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if isinstance(schema["ts"].dataType, LongType):
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return stream
+    return nanos_ts_to_micros(stream, "events")
 
 
 def replay(df: DataFrame, sf_dir: str, *, mode: str) -> DataFrame:

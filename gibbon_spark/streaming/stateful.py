@@ -36,7 +36,7 @@ def running_series_stats(
     emitted once per micro-batch per active series.
 
     Input must have columns (series_id, ts, value) — e.g. from
-    streaming.ingest.normalize_stream. The EMA is order-sensitive within
+    operators.timeseries.as_timeseries. The EMA is order-sensitive within
     a batch (rows are sorted by ts before folding), mirroring the
     codec's order-dependent state updates."""
 

@@ -100,6 +100,35 @@ def test_compact_bucketed_restores_file_discipline(spark, store):
     assert a == b
 
 
+def test_series_hashing_to_int_min_lands_in_every_store(spark):
+    """A series whose Spark hash is -2^31 has no int absolute value, so
+    |hash| % N overflowed under ANSI mode; all three store writers must
+    place it and read it back exactly."""
+    from gibbon_spark.codec import spark_ops
+
+    edge = "s208X6VT"
+    assert spark.range(1).select(F.hash(F.lit(edge))).first()[0] == -(2**31)
+    rows = [(edge, 7200 + 60 * i, 0.5 * i) for i in range(3)] + [("other", 7260, 9.5)]
+    df = spark.createDataFrame(rows, "series_id string, ep long, value double").select(
+        "series_id", F.timestamp_seconds("ep").alias("ts"), "value"
+    )
+    d = tempfile.mkdtemp(prefix="gibbon_int_min_")
+    flat, compact, blocks = (os.path.join(d, x) for x in ("flat", "compact", "blocks"))
+
+    bucketed.write_bucketed(df, flat, series=["series_id"], series_buckets=4)
+    bucketed.compact_bucketed(spark, flat, compact, series_buckets=2)
+    bucketed.write_gorilla_store(
+        spark_ops.encode_timeseries(df, series=["series_id"]), blocks, day_files=4
+    )
+    stores = [
+        spark.read.parquet(p).select("series_id", F.unix_timestamp("ts"), "value")
+        for p in (flat, compact)
+    ]
+    stores.append(spark_ops.decode_timeseries(bucketed.read_gorilla_store(spark, blocks)))
+    for got in stores:
+        assert sorted(map(tuple, got.collect())) == sorted(rows)
+
+
 @pytest.fixture(scope="module")
 def block_store(spark):
     """Gorilla block store written with the day-partitioned layout."""

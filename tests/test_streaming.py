@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
 
 import pytest
 
@@ -57,6 +58,35 @@ def test_stream_to_bucketed_sink_equals_batch(spark, csv_dir):
     buckets = {r.bucket.timestamp() for r in got.select("bucket").distinct().collect()}
     # 10005//7200*7200 = 7200 ; 17205//7200*7200 = 14400
     assert buckets == {7200.0, 14400.0}
+
+
+def test_bucketed_sink_never_drops_late_rows(spark):
+    """The sink is stateless, so rows far behind any watermark still
+    land: a second micro-batch 11+ days older than the first is written
+    whole."""
+    from pyspark.sql import functions as F
+
+    from gibbon_spark.sources.csv_source import GIBBON_CSV_SCHEMA
+
+    d = tempfile.mkdtemp(prefix="gibbon_late_")
+    src, out = os.path.join(d, "src"), os.path.join(d, "out")
+    os.makedirs(src)
+    now = time.time()
+    for age, name, rows in ((10, "a.csv", "1000000,1.0\n"), (0, "b.csv", "10,2.0\n20,3.0\n")):
+        path = os.path.join(src, name)
+        with open(path, "w") as f:
+            f.write(rows)
+        os.utime(path, (now - age, now - age))  # the file source reads oldest first
+    raw = spark.readStream.schema(GIBBON_CSV_SCHEMA).option("maxFilesPerTrigger", 1).csv(src)
+    q = ingest.start_bucketed_sink(
+        raw.select(F.timestamp_seconds("ts").alias("ts"), "value"),
+        os.path.join(out, "data"),
+        os.path.join(out, "ckpt"),
+    )
+    q.awaitTermination(120)
+    assert [p["numInputRows"] for p in q.recentProgress] == [1, 2]
+    got = spark.read.parquet(os.path.join(out, "data")).select(F.unix_timestamp("ts"))
+    assert sorted(r[0] for r in got.collect()) == [10, 20, 1000000]
 
 
 def test_windowed_rollup_matches_batch_agg(spark, csv_dir):

@@ -33,45 +33,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from perfbench.proctree import descendants, rss_bytes  # noqa: E402
 from tools import scratch  # noqa: E402
-
-
-def _tree_rss_kb(pid: int) -> int:
-    """Sum VmRSS over pid and its descendants (procfs walk)."""
-    children: dict[int, list[int]] = {}
-    pids = []
-    for entry in os.listdir("/proc"):
-        if not entry.isdigit():
-            continue
-        p = int(entry)
-        try:
-            with open(f"/proc/{p}/stat") as f:
-                data = f.read()
-            # comm (field 2) may itself contain spaces/parens — split
-            # after the LAST ')' so field indexing is unambiguous.
-            ppid = int(data.rsplit(")", 1)[1].split()[1])
-        except (OSError, IndexError, ValueError):
-            continue
-        pids.append(p)
-        children.setdefault(ppid, []).append(p)
-    tree, stack = set(), [pid]
-    while stack:
-        p = stack.pop()
-        if p in tree:
-            continue
-        tree.add(p)
-        stack.extend(children.get(p, []))
-    total = 0
-    for p in tree:
-        try:
-            with open(f"/proc/{p}/status") as f:
-                for line in f:
-                    if line.startswith("VmRSS:"):
-                        total += int(line.split()[1])
-                        break
-        except OSError:
-            continue
-    return total
 
 
 def run_batch(
@@ -113,7 +76,7 @@ def run_batch(
             # can be retried solo or restated via
             # tools/sf3_feasible_oracles.py.
             reason = None
-            if _tree_rss_kb(proc.pid) > cap_kb:
+            if rss_bytes([proc.pid, *descendants(proc.pid)]) // 1024 > cap_kb:
                 reason = f"tree RSS exceeded {rss_cap_gb} GB"
             elif time.time() - t_start > batch_timeout_s:
                 reason = f"wall clock exceeded {batch_timeout_s:.0f}s"
