@@ -29,8 +29,8 @@ Mechanics:
   are plain window functions — no fold needed.
 
 Validated bit-exact against the Spark registry results at sf0.001,
-sf0.01 and sf0.1 (tools/proto_codec_oracle.py is the standalone
-validation harness).
+sf0.01 and sf0.1; re-check with
+``python tools/oracle_check.py <sf_dir> codec_xoror_bits gorilla_compression_ratio``.
 """
 
 from __future__ import annotations

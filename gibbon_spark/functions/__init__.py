@@ -1,1 +1,1 @@
-"""Column-level functions: bit-pattern utilities and text metrics."""
+"""Column-level functions: text metrics and exact cross-engine arithmetic."""

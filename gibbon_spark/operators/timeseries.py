@@ -73,6 +73,17 @@ def _avg(value: str, exact: bool):
     return exact_fns.exact_avg(F.col(value)) if exact else F.avg(value)
 
 
+def _scan_aggs(value: str, exact: bool) -> list[Column]:
+    """The reference's value aggregates: min, max, count and avg
+    (``csv_to_packed.rs:36-76``)."""
+    return [
+        F.min(value).alias("min_value"),
+        F.max(value).alias("max_value"),
+        F.count(F.lit(1)).alias("n_samples"),
+        _avg(value, exact).alias("avg_value"),
+    ]
+
+
 def summary(
     df: DataFrame, *, value: str = "value", ts: str = "ts", exact_avg: bool = False
 ) -> DataFrame:
@@ -87,13 +98,7 @@ def summary(
     ``csv_to_packed.rs:66-76``); pass ``exact_avg=True`` for the
     oracle-parity decimal form (see ``exact_fns.exact_avg`` for the trade-off).
     """
-    return df.agg(
-        F.min(value).alias("min_value"),
-        F.max(value).alias("max_value"),
-        F.count(F.lit(1)).alias("n_samples"),
-        _avg(value, exact_avg).alias("avg_value"),
-        F.max(ts).alias("max_ts"),
-    )
+    return summary_by_series(df, (), value=value, ts=ts, exact_avg=exact_avg)
 
 
 def summary_by_series(
@@ -109,11 +114,7 @@ def summary_by_series(
     series key; partial aggregation makes it skew-tolerant (AQE splits
     hot keys). ``exact_avg`` as in :func:`summary`."""
     return df.groupBy(*keys).agg(
-        F.min(value).alias("min_value"),
-        F.max(value).alias("max_value"),
-        F.count(F.lit(1)).alias("n_samples"),
-        _avg(value, exact_avg).alias("avg_value"),
-        F.max(ts).alias("max_ts"),
+        *_scan_aggs(value, exact_avg), F.max(ts).alias("max_ts")
     )
 
 
@@ -192,11 +193,10 @@ def with_value_xor(
     """xor = bits(value) XOR bits(lag(value)) — the double codec's core
     (``double_stream.rs:42``).
 
-    Spark has no built-in double→bits reinterpret (casts are value
-    conversions, not bit puns), so the bit extraction runs through the
-    Arrow-vectorized ``double_bits`` pandas UDF (numpy zero-copy view) —
-    the sanctioned slow path (SURVEY.md §4.3). The XOR, lag window and
-    leading-zero math all stay JVM-side.
+    Spark casts convert values, so the bit pun is :func:`double_bits`
+    (the JVM's ``Double.doubleToRawLongBits``). The pun, the XOR, the
+    lag window and the leading-zero count all run in the JVM, with no
+    Python stage.
 
     ``first_raw=True`` emits the raw IEEE-754 bits for the first record
     of each series instead of NULL — exactly what the codec stores for
@@ -204,11 +204,8 @@ def with_value_xor(
     uncompressed), and what keeps the column non-nullable int64 for the
     oracle's dtype parity.
     """
-    from gibbon_spark.functions.bits import double_bits
-
     w = _series_window(series, ts, *tiebreak)
-    bits = double_bits(F.col(value))
-    out = df.withColumn("_bits", bits)
+    out = df.withColumn("_bits", double_bits(F.col(value)))
     xor = F.col("_bits").bitwiseXOR(F.lag("_bits").over(w))
     if first_raw:
         xor = F.coalesce(xor, F.col("_bits"))
@@ -231,6 +228,39 @@ def _leading_zeros64(col: Column) -> Column:
         F.when(col == 0, F.lit(64))
         .otherwise(F.lit(64) - F.length(F.bin(col)))
         .cast("int")
+    )
+
+
+def _java_double(method: str, col: Column) -> Column:
+    return F.call_function(
+        "java_method", F.lit("java.lang.Double"), F.lit(method), col
+    )
+
+
+def double_bits(col: Column) -> Column:
+    """The IEEE-754 bits of a double as a signed int64, exactly
+    ``f64::to_bits`` up to signedness (``double_stream.rs:34``): the JVM's
+    ``Double.doubleToRawLongBits`` called through Spark's ``java_method``.
+    Null in, null out.
+
+    ``java_method`` is nondeterministic to Spark and runs without codegen
+    (interpreted reflection per row). A null argument makes it raise
+    ``IllegalArgumentException``, hence the ``when`` guard. It returns the
+    result as a string, which the cast turns back into the exact long."""
+    return F.when(
+        col.isNotNull(), _java_double("doubleToRawLongBits", col).cast("long")
+    )
+
+
+def bits_to_double(col: Column) -> Column:
+    """Inverse of :func:`double_bits`: ``Double.longBitsToDouble`` through
+    ``java_method``, with the same null guard, nondeterminism and lack of
+    codegen. The double comes back via ``Double.toString`` and a
+    string→double cast, which round-trips every finite value, ±0 and ±inf
+    exactly; a NaN comes back as the canonical NaN, so its payload is
+    lost (the tables hold no NaN, and NaN never compares equal anyway)."""
+    return F.when(
+        col.isNotNull(), _java_double("longBitsToDouble", col).cast("double")
     )
 
 
@@ -269,12 +299,7 @@ def resample(
     win = F.window(F.col(ts), every)
     return (
         df.groupBy(*keys, win.alias("win"))
-        .agg(
-            F.min(value).alias("min_value"),
-            F.max(value).alias("max_value"),
-            F.count(F.lit(1)).alias("n_samples"),
-            _avg(value, exact_avg).alias("avg_value"),
-        )
+        .agg(*_scan_aggs(value, exact_avg))
         .withColumn("bucket_start", F.col("win").start)
         .drop("win")
     )

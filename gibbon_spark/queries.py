@@ -1253,10 +1253,11 @@ def q_ts_xor_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
     (double_stream.rs:42): IEEE-754 bits of consecutive values XORed
     (first record per series = the raw bits, exactly what the codec
     stores for it), plus the leading-zero count the window encoding
-    keys on. Bit reinterpretation uses the Arrow-vectorized double_bits
-    UDF; the oracle replays it with DuckDB's DOUBLE→BIT cast (bit-string
-    reinterpret), BIT xor, and a position()-based exact leading-zero
-    count — converted from rows-only to hash-exact in round 8."""
+    keys on. Bit reinterpretation is ts_ops.double_bits (the JVM's
+    Double.doubleToRawLongBits); the oracle replays it with DuckDB's
+    DOUBLE→BIT cast (bit-string reinterpret), BIT xor, and a
+    position()-based exact leading-zero count — converted from
+    rows-only to hash-exact in round 8."""
     (events,) = _prep(spark, sf_dir, "events")
     out = ts_ops.with_value_xor(
         events, ["user_id"], tiebreak=["event_id"], first_raw=True
@@ -1281,21 +1282,14 @@ def q_ts_xor_roundtrip_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     vacuously OK. The oracle pins row identity + literal TRUE, so a
     single corrupted reconstruction anywhere flips the hash. This is
     the invariant twin of the rows-only ts_xor_bits."""
-    from gibbon_spark.functions.bits import bits_to_double, double_bits
-
     (events,) = _prep(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    out = events.withColumn("_bits", double_bits(F.col("value")))
+    out = events.withColumn("_bits", ts_ops.double_bits(F.col("value")))
     prev = F.lag("_bits").over(w)
     out = out.withColumn("_xor", F.col("_bits").bitwiseXOR(prev)).withColumn(
         "_prev", prev
     )
-    # coalesce BEFORE the UDF: a nullable int64 batch reaches pandas as
-    # float64 and silently loses low bits past 2^53 (see bits_to_double's
-    # guard); first-row nulls are masked out by the when() below instead.
-    recon = bits_to_double(
-        F.coalesce(F.col("_xor").bitwiseXOR(F.col("_prev")), F.lit(0))
-    )
+    recon = ts_ops.bits_to_double(F.col("_xor").bitwiseXOR(F.col("_prev")))
     return out.select(
         "event_id",
         "user_id",

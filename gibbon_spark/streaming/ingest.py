@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from gibbon_spark.operators.timeseries import as_timeseries, with_bucket
+from gibbon_spark.operators.timeseries import _scan_aggs, as_timeseries, with_bucket
 
 
 def start_bucketed_sink(
@@ -78,12 +78,7 @@ def windowed_rollup(
     return (
         norm.withWatermark("ts", watermark)
         .groupBy(F.col("series_id"), win.alias("win"))
-        .agg(
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-            F.count(F.lit(1)).alias("n_samples"),
-            F.avg("value").alias("avg_value"),
-        )
+        .agg(*_scan_aggs("value", exact=False))
         .select(
             "series_id",
             F.col("win").start.alias("window_start"),

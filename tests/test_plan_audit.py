@@ -75,6 +75,11 @@ ALLOWED_GLOBAL_WINDOW = {
 }
 
 
+PYTHON_STAGE = (
+    r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGroupsInPandas)\b"
+)
+
+
 @pytest.mark.parametrize("name", list(entrymod.queries()))
 def test_plan_has_no_antipatterns(spark, name):
     df = entrymod.queries()[name](spark, SF_SMALL)
@@ -83,8 +88,13 @@ def test_plan_has_no_antipatterns(spark, name):
     if name not in ALLOWED_NESTED_LOOP:
         assert "BroadcastNestedLoopJoin" not in plan, f"{name}: nested loop join"
     # Arrow-batched python (ArrowEvalPython/MapInPandas/FlatMapGroupsInPandas)
-    # is the sanctioned slow path; row-at-a-time BatchEvalPython never is
+    # is allowed outside the time-series surface (the Gorilla codec's block
+    # stages are mapInPandas); row-at-a-time BatchEvalPython never is. The
+    # ts_* queries run no Python stage at all.
     assert not re.search(r"\bBatchEvalPython\b", plan), f"{name}: row python UDF"
+    if name.startswith("ts_"):
+        stages = re.findall(PYTHON_STAGE, plan)
+        assert not stages, f"{name}: Python stage in a ts_* plan: {stages}"
     if name not in ALLOWED_GLOBAL_WINDOW:
         assert count_partitionless_windows(plan) == 0, (
             f"{name}: partition-less ordered Window (whole frame through one "

@@ -1,6 +1,6 @@
-"""Remaining source/UDF surface: JSON source with explicit schema,
-SQL-registered UDFs (the reference's Writer/Reader traits are its only
-extension points — SURVEY.md §2.2 maps them to the UDF registry)."""
+"""Remaining source surface: JSON with an explicit schema, ORC, nested
+types, schema evolution, malformed CSV, binary files, dynamic partition
+overwrite, XML and a Python data source."""
 
 from __future__ import annotations
 
@@ -35,23 +35,6 @@ def test_json_source_with_explicit_schema(spark):
     assert df.count() == 3
     got = df.groupBy("series_id").agg(F.sum("value").alias("s")).collect()
     assert {(r.series_id, r.s) for r in got} == {("a", 4.0), ("b", -1.0)}
-
-
-def test_sql_udf_registry(spark):
-    """Register the engine's pandas UDF + a plain expression-backed SQL
-    function; both callable from spark.sql."""
-    from gibbon_spark.functions.bits import double_bits
-
-    spark.udf.register("double_bits", double_bits)
-    spark.createDataFrame([(1.0,), (0.0,), (-2.0,)], "v double").createOrReplaceTempView(
-        "udf_probe"
-    )
-    got = {r.v: r.b for r in spark.sql(
-        "SELECT v, double_bits(v) AS b FROM udf_probe"
-    ).collect()}
-    assert got[1.0] == 0x3FF0000000000000
-    assert got[0.0] == 0
-    assert got[-2.0] == -(2**63) + 0x4000000000000000  # sign bit + exponent
 
 
 def test_orc_sink_and_source_roundtrip(spark):

@@ -10,6 +10,8 @@ Pinned semantics come from the reference's test suite (FIXTURES.md):
 from __future__ import annotations
 
 import datetime as dt
+import math
+import struct
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +19,8 @@ from pyspark.sql import functions as F
 from gibbon_spark.operators.timeseries import (
     as_timeseries,
     asof_join,
+    bits_to_double,
+    double_bits,
     gap_fill,
     resample,
     summary,
@@ -92,6 +96,46 @@ def test_value_xor_new_window(spark):
     out = with_value_xor(df, ["series_id"], tiebreak=["seq"]).orderBy("seq").collect()
     assert out[1].value_xor == 0x3FF0000000000000
     assert out[1].xor_leading_zeros == 2
+
+
+EDGE_DOUBLES = [
+    0.0,
+    -0.0,
+    5e-324,  # smallest subnormal
+    2.2250738585072014e-308,  # smallest normal
+    math.inf,
+    -math.inf,
+    math.nan,
+    1.7976931348623157e308,  # largest finite
+    9.64,
+    0.1 + 0.2,
+    -2.0,
+]
+
+
+def _raw_bits(v: float) -> int:
+    return struct.unpack("<q", struct.pack("<d", v))[0]
+
+
+def test_double_bits_edge_values(spark):
+    """double_bits is f64::to_bits as a signed long, and bits_to_double
+    undoes it bit for bit on every non-NaN value; null maps to null both
+    ways."""
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(EDGE_DOUBLES)] + [(len(EDGE_DOUBLES), None)],
+        "i int, v double",
+    )
+    bits = df.select("i", double_bits(F.col("v")).alias("b"))
+    rows = bits.select("i", "b", bits_to_double(F.col("b")).alias("back")).collect()
+    got = {r.i: (r.b, r.back) for r in rows}
+    for i, v in enumerate(EDGE_DOUBLES):
+        b, back = got[i]
+        assert b == _raw_bits(v), v
+        if math.isnan(v):
+            assert math.isnan(back)
+        else:
+            assert _raw_bits(back) == b, v
+    assert got[len(EDGE_DOUBLES)] == (None, None)
 
 
 def test_bucket_2h_alignment(spark):

@@ -7,7 +7,8 @@ Checks per plan:
   ALLOWED below with justification),
 - BatchEvalPython → row-at-a-time Python UDF in the hot path (always a
   bug; Arrow variants ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas
-  are the sanctioned slow path),
+  are allowed, except in the ts_* queries, which tests/test_plan_audit.py
+  keeps free of any Python stage),
 - Window with an EMPTY partition spec → the whole frame funnels through
   one task (the classic ordered-analytics scale cliff). Bounded-frame
   sites (P-row offset tables, month-grain frames, top-k ranks) are
