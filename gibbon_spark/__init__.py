@@ -18,8 +18,15 @@ ported from the reference's Rust; reference files are cited in
 docstrings only to document *what* semantics each operator mirrors.
 """
 
+import sys
+
+from pyspark.cloudpickle import register_pickle_by_value
+
 from gibbon_spark.session import get_spark
 from gibbon_spark.sources.tables import TABLES, load_table, load_tables, register_views
+
+# UDFs pickle the engine code they call by value, so workers need no install.
+register_pickle_by_value(sys.modules[__name__])
 
 __all__ = [
     "get_spark",

@@ -51,9 +51,8 @@ Layout, in file order, with the tests that pin each part:
   blocks: identity with ``decode_block`` in both files, including every
   truncation point of a block (tests/test_gorilla_codec.py).
 
-Everything in this module is deliberately self-contained (stdlib, plus
-numpy imported inside the array kernels) so Spark executors can receive
-it pickled by value.
+The module imports only the stdlib (plus numpy inside the array
+kernels), so the codec runs and is tested without Spark.
 """
 
 from __future__ import annotations
@@ -68,9 +67,10 @@ _U64 = (1 << 64) - 1
 _PAST_END = "record runs past the end of its payload"
 
 # bound once: a field read or a float conversion is a few hundred ns,
-# and the attribute lookups would be a third of it
+# and the attribute lookups would be a third of it. No struct.Struct:
+# UDFs pickle this module by value, and a Struct does not pickle.
 _from_bytes = int.from_bytes
-_F64 = struct.Struct("<d")
+_unpack = struct.unpack
 
 # Width of one block: header times are epoch seconds aligned to it.
 BLOCK_SECONDS = 7200
@@ -299,7 +299,7 @@ class DoubleDecoder:
                     new_xor = payload << (64 - meaningful - (head >> 6))
                 self.value ^= new_xor
                 self.xor = new_xor
-        return _F64.unpack(self.value.to_bytes(8, "little"))[0]
+        return _unpack("<d", self.value.to_bytes(8, "little"))[0]
 
 
 class DoubleEncoderLeadTrail:
@@ -397,7 +397,7 @@ class DoubleDecoderLeadTrail:
                     new_xor = payload << (64 - meaningful - lz)
                     self.lz, self.mc = lz, meaningful
                 self.value ^= new_xor
-        return _F64.unpack(self.value.to_bytes(8, "little"))[0]
+        return _unpack("<d", self.value.to_bytes(8, "little"))[0]
 
 
 # ---------------------------------------------------------------------------

@@ -9,10 +9,6 @@ per-series windows use) and packs each sorted partition with a
 Both run one vectorized codec call per Arrow batch. Blocks are
 independent, so both sides scale embarrassingly: 100 TB = many blocks,
 never a big one (2 h × one series).
-
-The codec module is shipped to executors BY VALUE via cloudpickle's
-``register_pickle_by_value`` — executors need no importable copy of
-gibbon_spark.
 """
 
 from __future__ import annotations
@@ -27,13 +23,6 @@ BLOCK_SCHEMA = (
 ROWS_SCHEMA = "series_id string, ts long, value double"
 
 
-def _ship_codec_by_value() -> None:
-    import gibbon_spark.codec.gorilla as gorilla_mod
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(gorilla_mod)
-
-
 def encode_timeseries(
     df: DataFrame,
     *,
@@ -45,7 +34,6 @@ def encode_timeseries(
     the bit-packed payload. Rows are sorted (ts, then input order proxy)
     inside each block — the order-dependence the codec requires
     (SURVEY.md 'hard parts')."""
-    _ship_codec_by_value()
     from gibbon_spark.codec.gorilla import BLOCK_SECONDS, encode_blocks_vectorized
     from gibbon_spark.operators.timeseries import as_timeseries
 
@@ -142,7 +130,6 @@ def encode_timeseries(
 
 def decode_timeseries(blocks: DataFrame) -> DataFrame:
     """gorilla blocks → (series_id, ts epoch-seconds, value) rows."""
-    _ship_codec_by_value()
     from gibbon_spark.codec.gorilla import decode_blocks_vectorized
 
     def decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:

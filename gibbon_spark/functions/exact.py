@@ -74,19 +74,6 @@ def scaled_long(col):
     )
 
 
-def round_scaled_long(s, sc: int):
-    """Half-away-from-zero rounding of a 1e-4-scaled long sum ``s`` to a
-    coarser power-of-ten scale ``sc`` — in INTEGER arithmetic (SQL
-    ``div``, truncating; both branches operate on non-negative values so
-    truncation equals floor), because a double ``floor((s + h)/sc)``
-    would drift once |s| passes 2^53 (reached by sf100-scale money
-    sums). Exactly BigDecimal HALF_UP on the same exact value."""
-    h, d = F.lit(sc // 2), F.lit(sc)
-    return F.when(s >= 0, F.call_function("div", s + h, d)).otherwise(
-        -F.call_function("div", -s + h, d)
-    )
-
-
 # split radix for the two-level exact money sum below
 _SPLIT_M = 1 << 20
 

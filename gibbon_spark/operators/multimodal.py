@@ -284,7 +284,6 @@ def extract_features(media: DataFrame, *, fake: bool = True) -> DataFrame:
     dim = _FEATURE_DIM
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: executors may not have gibbon_spark
         import hashlib
 
         import numpy as np

@@ -27,6 +27,7 @@ from __future__ import annotations
 import math
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -36,24 +37,76 @@ NUM_PLANES = 16
 _PAIR_SCHEMA = "id_a long, id_b long, cosine_sim double"
 _TOPK_SCHEMA = "query_id long, nbr_id long, cosine_sim double"
 
-# IMPORTANT: every pandas-UDF closure below is written to be fully
-# self-contained (imports inside, no references to module-level helpers).
-# cloudpickle serializes module-level functions BY REFERENCE, so a UDF
-# that calls one would require `gibbon_spark` to be importable inside the
-# executor Python workers — not guaranteed when the driver imports this
-# package from a path-inserted repo dir. Closure-local numpy arrays
-# (query matrices, plane signs) are pickled by value, which is exactly
-# what we want shipped.
+
+def _stack(vecs: pd.Series) -> np.ndarray:
+    """An array column's values as one float64 matrix, a row per value."""
+    return np.stack(vecs.to_numpy()).astype("float64")
 
 
-def _unit_rows(pdf: pd.DataFrame, vec_col: str):
-    """Driver-side helper (safe: only called outside UDF bodies)."""
-    import numpy as np
-
-    mat = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    """``mat`` with every row scaled to unit L2 norm (zero rows stay zero)."""
     norms = np.linalg.norm(mat, axis=1)
     norms[norms == 0] = 1.0
     return mat / norms[:, None]
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best rounded ``cosine_sim`` per query, ties to the lower
+    ``nbr_id``, numbered by ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("nbr_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "nbr_id", "cosine_sim", "rank")
+    )
+
+
+def _query_set(queries: DataFrame, query_id_col: str, vec_col: str):
+    """The bounded query set on the driver for the candidate top-k paths:
+    (int64 ids, float64 vectors) with one row per query_id, or None when
+    it is empty."""
+    q_pdf = queries.select(
+        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("vec")
+    ).toPandas()
+    q_pdf = q_pdf.drop_duplicates(subset=["query_id"])
+    if not len(q_pdf):
+        return None
+    return q_pdf["query_id"].to_numpy().astype("int64"), _stack(q_pdf["vec"])
+
+
+def _rerank_topk(feat: DataFrame, q_ids, q_raw, candidates, k: int) -> DataFrame:
+    """Exact-cosine top-k over candidate pairs, in one ``mapInPandas``
+    pass over ``feat`` (id, vec). ``candidates(mat)`` maps a batch's
+    float64 vectors to the (batch row, query row) index pairs to score;
+    a vector never scores against a query with its own id."""
+    q_mat = _unit_rows(q_raw)
+
+    def cand_score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf["id"].to_numpy()
+            mat = _stack(pdf["vec"])
+            rows, qrow = candidates(mat)
+            keep = ids[rows] != q_ids[qrow]  # self-exclusion
+            rows, qrow = rows[keep], qrow[keep]
+            if not len(rows):
+                continue
+            sims = np.einsum("ij,ij->i", _unit_rows(mat[rows]), q_mat[qrow])
+            yield pd.DataFrame(
+                {
+                    "query_id": q_ids[qrow],
+                    "nbr_id": ids[rows],
+                    "cosine_sim": sims,
+                }
+            )
+
+    scored = feat.mapInPandas(cand_score, _TOPK_SCHEMA).withColumn(
+        "cosine_sim", F.round("cosine_sim", 6)
+    )
+    return _top_k(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -80,26 +133,15 @@ def brute_force_topk(
     q_pdf = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("vec")
     ).toPandas()
-    import numpy as np
-
     q_ids = q_pdf["query_id"].to_numpy()
-    q_mat = _unit_rows(q_pdf, "vec")
+    q_mat = _unit_rows(_stack(q_pdf["vec"]))
 
     def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        import numpy as np
-        import pandas as pd
-
         for pdf in batches:
             if not len(pdf):
                 continue
             ids = pdf["id"].to_numpy()
-            mat = np.stack(pdf["vec"].to_numpy()).astype("float64")
-            norms = np.linalg.norm(mat, axis=1)
-            norms[norms == 0] = 1.0
-            unit = mat / norms[:, None]
-            sims = unit @ q_mat.T  # (batch, n_queries)
+            sims = _unit_rows(_stack(pdf["vec"])) @ q_mat.T  # (batch, n_queries)
             out_q, out_n, out_s = [], [], []
             for qi in range(len(q_ids)):
                 col = sims[:, qi].copy()
@@ -119,15 +161,7 @@ def brute_force_topk(
     local = corpus.mapInPandas(local_topk, _TOPK_SCHEMA).withColumn(
         "cosine_sim", F.round("cosine_sim", 6)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("nbr_id")
-    )
-    return (
-        local.filter(F.col("cosine_sim") > float("-inf"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine_sim", "rank")
-    )
+    return _top_k(local.filter(F.col("cosine_sim") > float("-inf")), k)
 
 
 def pairwise_cosine_pairs(
@@ -171,9 +205,6 @@ def pairwise_cosine_pairs(
     ).select("id", "vec", "blk", F.col("bp.p").alias("p"), F.col("bp.q").alias("q"))
 
     def block_pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-        import pandas as pd
-
         # Row-chunked GEMM: the one-shot sub-matrix product holds an
         # n_p x n_q double sims matrix (450 MB at 7.5k x 7.5k) plus, in
         # the diagonal case, full triu index arrays (~700 MB more) —
@@ -184,10 +215,7 @@ def pairwise_cosine_pairs(
         # materialization for the non-matches).
         p, q = key
         ids = pdf["id"].to_numpy()
-        mat = np.stack(pdf["vec"].to_numpy()).astype("float64")
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0] = 1.0
-        unit = mat / norms[:, None]
+        unit = _unit_rows(_stack(pdf["vec"]))
         blk = pdf["blk"].to_numpy()
         if p == q:
             ids_a_all = ids_b_all = ids
@@ -265,19 +293,15 @@ def with_lsh_bands(
     with_lsh_bucket for wide codes (a packed 64-plane code overflows
     signed 64-bit, which both engines' shift/& arithmetic needs). Same
     GEMM-per-Arrow-batch shape; same md5-derived planes as the oracle."""
-    import numpy as np
-
     n_bands = num_planes // band_bits
-    signs = np.array(plane_signs(num_planes, dims), dtype="float64").T
+    signs = _hyperplanes(num_planes, dims)
     w = 1 << np.arange(band_bits, dtype="int64")
 
     @F.pandas_udf("array<int>")
     def bands_udf(vecs: pd.Series) -> pd.Series:
-        import numpy as np
-
         if not len(vecs):
             return pd.Series([], dtype="object")
-        mat = np.stack(vecs.to_numpy()).astype("float64")
+        mat = _stack(vecs)
         bits = (mat @ signs >= 0).reshape(len(mat), n_bands, band_bits)
         vals = (bits @ w).astype("int32")
         return pd.Series(list(vals))
@@ -402,6 +426,17 @@ def plane_signs(num_planes: int, dims: int) -> list[list[int]]:
     return [[_plane_sign(p, d) for d in range(dims)] for p in range(num_planes)]
 
 
+def _hyperplanes(num_planes: int, dims: int) -> np.ndarray:
+    """The plane signs as a float64 dims × planes matrix."""
+    return np.array(plane_signs(num_planes, dims), dtype="float64").T
+
+
+def _bucket_code(mat: np.ndarray, signs: np.ndarray) -> np.ndarray:
+    """Per row, the int32 code with bit p set iff dot(row, plane_p) >= 0."""
+    weights = 1 << np.arange(signs.shape[1], dtype="int64")
+    return ((mat @ signs >= 0) @ weights).astype("int32")
+
+
 def with_lsh_bucket(
     embeddings: DataFrame,
     *,
@@ -413,20 +448,13 @@ def with_lsh_bucket(
     One (N×dims)@(dims×planes) GEMM per Arrow batch — a pure map, no
     shuffle. (A pure-expression version was tried first: 16×64-term
     codegen overwhelms the JIT and runs interpreted, ~100× slower.)"""
-    import numpy as np
-
-    signs = np.array(plane_signs(num_planes, dims), dtype="float64").T  # dims×planes
-    weights = 1 << np.arange(num_planes, dtype="int64")
+    signs = _hyperplanes(num_planes, dims)
 
     @F.pandas_udf("int")
     def bucket_udf(vecs: pd.Series) -> pd.Series:
-        import numpy as np
-
         if not len(vecs):
             return pd.Series([], dtype="int32")
-        mat = np.stack(vecs.to_numpy()).astype("float64")
-        proj = mat @ signs
-        return pd.Series(((proj >= 0) @ weights).astype("int32"))
+        return pd.Series(_bucket_code(_stack(vecs), signs))
 
     return embeddings.withColumn("bucket", bucket_udf(F.col(vec_col)))
 
@@ -456,83 +484,35 @@ def lsh_topk(
     Python passes plus a broadcast band join and a (query, id) dedup
     exchange. Float paths bit-identical; row-exact verified at
     sf0.001/0.01/0.1."""
-    import numpy as np
-
     n_bands = NUM_PLANES // band_bits
     mask = (1 << band_bits) - 1
-    signs = np.array(plane_signs(NUM_PLANES, dims), dtype="float64").T
-    weights = 1 << np.arange(NUM_PLANES, dtype="int64")
+    signs = _hyperplanes(NUM_PLANES, dims)
 
-    q_pdf = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("vec")
-    ).toPandas()
-    # degenerate-input guards (advisor r12): an empty query set must
-    # return an empty frame, not crash in np.stack; duplicate query_id
-    # rows would emit duplicate scored rows under the fused pass, so
-    # keep the first occurrence (the pre-fusion candidate dedup's
-    # semantics; gate inputs are unique so results are unchanged)
-    q_pdf = q_pdf.drop_duplicates(subset=["query_id"])
-    if not len(q_pdf):
+    # an empty query set returns an empty frame instead of crashing in
+    # np.stack; a duplicated query_id keeps its first row (the pre-fusion
+    # candidate dedup's semantics; gate inputs are unique)
+    qs = _query_set(queries, query_id_col, vec_col)
+    if qs is None:
         return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
-    q_ids = q_pdf["query_id"].to_numpy().astype("int64")
-    q_mat = _unit_rows(q_pdf, "vec")
-    q_raw = np.stack(q_pdf["vec"].to_numpy()).astype("float64")
-    # identical derivation to with_lsh_bucket's bucket_udf
-    q_bucket = ((q_raw @ signs >= 0) @ weights).astype("int32")
+    q_ids, q_raw = qs
+    q_bucket = _bucket_code(q_raw, signs)
     # per-band query values, shape (n_bands, n_queries)
     q_band_vals = np.stack(
         [(q_bucket >> (b * band_bits)) & mask for b in range(n_bands)]
     ).astype("int64")
 
+    def candidates(mat):
+        bucket = _bucket_code(mat, signs)
+        match = np.zeros((len(mat), len(q_ids)), dtype=bool)
+        for b in range(n_bands):
+            cv = ((bucket.astype("int64") >> (b * band_bits)) & mask)
+            match |= cv[:, None] == q_band_vals[b][None, :]
+        return np.nonzero(match)
+
     feat = embeddings.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     )
-
-    def cand_score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["id"].to_numpy()
-            mat = np.stack(pdf["vec"].to_numpy()).astype("float64")
-            bucket = ((mat @ signs >= 0) @ weights).astype("int32")
-            match = np.zeros((len(ids), len(q_ids)), dtype=bool)
-            for b in range(n_bands):
-                cv = ((bucket.astype("int64") >> (b * band_bits)) & mask)
-                match |= cv[:, None] == q_band_vals[b][None, :]
-            rows, qrow = np.nonzero(match)
-            if not len(rows):
-                continue
-            keep = ids[rows] != q_ids[qrow]  # self-exclusion
-            rows, qrow = rows[keep], qrow[keep]
-            if not len(rows):
-                continue
-            sel = mat[rows]
-            norms = np.linalg.norm(sel, axis=1)
-            norms[norms == 0] = 1.0
-            unit = sel / norms[:, None]
-            sims = np.einsum("ij,ij->i", unit, q_mat[qrow])
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids[qrow],
-                    "nbr_id": ids[rows],
-                    "cosine_sim": sims,
-                }
-            )
-
-    scored = feat.mapInPandas(cand_score, _TOPK_SCHEMA).withColumn(
-        "cosine_sim", F.round("cosine_sim", 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("nbr_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine_sim", "rank")
-    )
+    return _rerank_topk(feat, q_ids, q_raw, candidates, k)
 
 
 # ---------------------------------------------------------------------------
@@ -545,6 +525,19 @@ IVF_QUANT = 10_000  # 1e-4 coordinate grid: exact BIGINT distance math
 IVF_ITERS = 4  # unrolled Lloyd rounds (a coarse quantizer saturates fast)
 IVF_PICK_HEX = 15  # 60-bit md5 uniforms for the k-means++ inverse-CDF
 IVF_U = 16**IVF_PICK_HEX
+
+
+def _quantize(mat: np.ndarray) -> np.ndarray:
+    """Coordinates on the 1e-4 integer grid: ``floor(v*IVF_QUANT + 0.5)``."""
+    return np.floor(mat * IVF_QUANT + 0.5).astype(np.int64)
+
+
+def _list_scores(q: np.ndarray, cent: np.ndarray) -> np.ndarray:
+    """Exact integer ||x-c||^2 per (row, list) less the row-constant
+    ||x||^2, so its argmin is the nearest list (np.argmin ties -> the
+    lowest list id)."""
+    csq = (cent**2).sum(axis=1)
+    return csq[None, :] - 2 * (q @ cent.T)
 
 
 def ivf_pick_u(seed: int, t: int) -> int:
@@ -583,12 +576,9 @@ def ivf_train_centroids(train_pdf: pd.DataFrame, n_lists: int, seed: int):
     quantized grid, shape (k, dims)."""
     import hashlib
 
-    import numpy as np
-
     pdf = train_pdf.sort_values("id").reset_index(drop=True)
     ids = pdf["id"].to_numpy()
-    X = np.stack(pdf["vec"].to_numpy()).astype("float64")
-    Q = np.floor(X * IVF_QUANT + 0.5).astype(np.int64)
+    Q = _quantize(_stack(pdf["vec"]))
     k = min(n_lists, len(Q))
 
     def seed_rank(i: int) -> tuple[str, int]:
@@ -671,20 +661,12 @@ def ivf_assign(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     )
     cent = _ivf_codebook(feat, n_lists=n_lists, seed=seed)
-    csq = (cent**2).sum(axis=1)
 
     def assign(batches):
-        import numpy as np
-        import pandas as pd
-
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.stack(pdf["vec"].to_numpy()).astype("float64")
-            q = np.floor(mat * IVF_QUANT + 0.5).astype(np.int64)
-            # exact integer argmin ||x-c||^2: xsq is constant per row,
-            # so argmin(csq - 2 x.c) suffices; np.argmin ties -> lowest j
-            scores = csq[None, :] - 2 * (q @ cent.T)
+            scores = _list_scores(_quantize(_stack(pdf["vec"])), cent)
             yield pd.DataFrame(
                 {
                     "id": pdf["id"],
@@ -729,83 +711,36 @@ def ivf_topk(
     boundary twice. Float paths are bit-identical to the old plan:
     int64 GEMM argmin for assignment, per-row unit-norm + einsum dot
     for the rerank (row-exact verified at sf0.001/0.01/0.1)."""
-    import numpy as np
-
     feat = embeddings.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     )
     centroids = _ivf_codebook(feat, n_lists=n_lists, seed=seed)
-    q_pdf = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("vec")
-    ).toPandas()
-    # degenerate-input guards (advisor r12) — see lsh_topk
-    q_pdf = q_pdf.drop_duplicates(subset=["query_id"])
-    if not len(q_pdf):
+    # empty and duplicated query sets as in lsh_topk
+    qs = _query_set(queries, query_id_col, vec_col)
+    if qs is None:
         return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
-    q_ids = q_pdf["query_id"].to_numpy().astype("int64")
-    q_mat = _unit_rows(q_pdf, "vec")
-    q_int = np.floor(
-        np.stack(q_pdf["vec"].to_numpy()).astype("float64") * IVF_QUANT + 0.5
-    ).astype(np.int64)
-    csq = (centroids**2).sum(axis=1)
-    dists = csq[None, :] - 2 * (q_int @ centroids.T)  # + qsq (row-const)
+    q_ids, q_raw = qs
+    dists = _list_scores(_quantize(q_raw), centroids)
     # nprobe nearest lists per query, ties to the lowest list id:
     # lexsort by (dist, j) — exact integers, no float comparisons
     probe_map: dict[int, list[int]] = {}
     for qi in range(len(q_ids)):
-        order = sorted(range(len(csq)), key=lambda j: (int(dists[qi, j]), j))
+        order = sorted(range(len(centroids)), key=lambda j: (int(dists[qi, j]), j))
         for j in order[:nprobe]:
             probe_map.setdefault(int(j), []).append(qi)
 
-    def cand_score(batches):
-        import numpy as np
-        import pandas as pd
+    def candidates(mat):
+        # each row's list, as in ivf_assign
+        lab = _list_scores(_quantize(mat), centroids).argmin(axis=1)
+        rows_l, qrow_l = [], []
+        for j, qrows in probe_map.items():
+            m = np.nonzero(lab == j)[0]
+            for qr in qrows:
+                if len(m):
+                    rows_l.append(m)
+                    qrow_l.append(np.full(len(m), qr, dtype=np.int64))
+        if not rows_l:
+            return np.empty(0, np.int64), np.empty(0, np.int64)
+        return np.concatenate(rows_l), np.concatenate(qrow_l)
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["id"].to_numpy()
-            mat = np.stack(pdf["vec"].to_numpy()).astype("float64")
-            q = np.floor(mat * IVF_QUANT + 0.5).astype(np.int64)
-            # exact integer argmin ||x-c||^2 (xsq row-constant);
-            # np.argmin ties -> lowest list id, as in ivf_assign
-            lab = (csq[None, :] - 2 * (q @ centroids.T)).argmin(axis=1)
-            rows_l, qrow_l = [], []
-            for j, qrows in probe_map.items():
-                m = np.nonzero(lab == j)[0]
-                for qr in qrows:
-                    if len(m):
-                        rows_l.append(m)
-                        qrow_l.append(np.full(len(m), qr, dtype=np.int64))
-            if not rows_l:
-                continue
-            rows = np.concatenate(rows_l)
-            qrow = np.concatenate(qrow_l)
-            keep = ids[rows] != q_ids[qrow]  # self-exclusion
-            rows, qrow = rows[keep], qrow[keep]
-            if not len(rows):
-                continue
-            sel = mat[rows]
-            norms = np.linalg.norm(sel, axis=1)
-            norms[norms == 0] = 1.0
-            unit = sel / norms[:, None]
-            sims = np.einsum("ij,ij->i", unit, q_mat[qrow])
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids[qrow],
-                    "nbr_id": ids[rows],
-                    "cosine_sim": sims,
-                }
-            )
-
-    scored = feat.mapInPandas(cand_score, _TOPK_SCHEMA).withColumn(
-        "cosine_sim", F.round("cosine_sim", 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("nbr_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine_sim", "rank")
-    )
+    return _rerank_topk(feat, q_ids, q_raw, candidates, k)

@@ -18,8 +18,9 @@ from pyspark.sql import functions as F
 
 from gibbon_spark.codec import oracle_sql as _codec_oracle
 from gibbon_spark.functions import text as tx
-from gibbon_spark.functions.exact import exact_avg, exact_avg_sql, money4
+from gibbon_spark.functions.exact import exact_avg_sql, money4
 from gibbon_spark.operators import dedup, similarity
+from gibbon_spark.operators.timeseries import _scan_aggs
 from gibbon_spark.queries import _prep, query
 from gibbon_spark.materialize import materialize
 
@@ -814,11 +815,7 @@ def q_gorilla_roundtrip_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks = spark_ops.encode_timeseries(events, series=["user_id"])
     decoded = spark_ops.decode_timeseries(blocks)
     return decoded.agg(
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
-        F.count(F.lit(1)).alias("n_samples"),
-        exact_avg(F.col("value")).alias("avg_value"),
-        F.max("ts").alias("max_ts_epoch"),
+        *_scan_aggs("value", exact=True), F.max("ts").alias("max_ts_epoch")
     )
 
 
@@ -1232,10 +1229,8 @@ def q_pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_udtf_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF (table function): split each document into 32-token
     context chunks — the training-data chunking step — as a LATERAL
-    table function. Arrow-optimized eval; the class is defined inside
-    this function so cloudpickle ships it by value (executors cannot
-    import gibbon_spark). One generator row in → ceil(n/32) rows out,
-    fully parallel per partition."""
+    table function. Arrow-optimized eval. One generator row in →
+    ceil(n/32) rows out, fully parallel per partition."""
     from pyspark.sql.functions import udtf
 
     spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
@@ -1279,8 +1274,7 @@ def q_udtf_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_udaf_geometric_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pandas UDAF (grouped-agg pandas_udf): per-language geometric mean
     of document length — an aggregate Spark lacks natively. Arrow ships
-    each group's column once; the fold is a numpy reduction. Defined
-    in-function so cloudpickle ships it by value."""
+    each group's column once; the fold is a numpy reduction."""
     from pyspark.sql.functions import PandasUDFType, pandas_udf
 
     (docs,) = _prep(spark, sf_dir, "documents")

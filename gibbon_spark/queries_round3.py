@@ -11,8 +11,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gibbon_spark.functions.exact import exact_avg, exact_avg_sql
+from gibbon_spark.functions.exact import exact_avg_sql
 from gibbon_spark.operators import skew as skew_ops
+from gibbon_spark.operators.timeseries import _scan_aggs
 from gibbon_spark.queries import _prep, query
 
 # =========================================================================
@@ -177,10 +178,7 @@ def q_gorilla_store_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored = bucketed.read_gorilla_store(spark, path)
     decoded = spark_ops.decode_timeseries(stored)
     return decoded.agg(
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
-        F.count(F.lit(1)).alias("n_samples"),
-        exact_avg(F.col("value")).alias("avg_value"),
+        *_scan_aggs("value", exact=True),
         F.max("ts").alias("max_ts_epoch"),
         F.countDistinct(F.col("ts") - F.col("ts") % 7200).cast("bigint").alias(
             "n_buckets"

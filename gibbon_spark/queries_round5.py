@@ -49,17 +49,10 @@ def _series_codec_stats(events: DataFrame, verify: bool) -> DataFrame:
     the constant, never a big task."""
     import pandas as pd
 
-    from gibbon_spark.codec import spark_ops
-
-    spark_ops._ship_codec_by_value()
+    from gibbon_spark.codec.gorilla import decode_values, encode_values_vectorized
 
     def per_bucket(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import numpy as np
-
-        from gibbon_spark.codec.gorilla import (
-            decode_values,
-            encode_values_vectorized,
-        )
 
         pdf = pdf.sort_values(["user_id", "ts", "event_id"])
         vals = pdf["value"].to_numpy(np.float64)

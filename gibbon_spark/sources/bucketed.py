@@ -91,16 +91,18 @@ def compact_bucketed(
 
 
 def expire_buckets(path: str, older_than) -> list[str]:
-    """Retention: drop whole bucket partition directories older than the
-    cutoff (Gorilla keeps a bounded in-memory horizon — ``README.md:1-3``
-    paper context; here retention is a metadata-only delete of pruned
-    partitions, no data rewrite). Returns the removed bucket values.
+    """Retention: drop the bucket partition directories whose whole
+    2-hour span ends at or before the cutoff, so every row at or after
+    the cutoff survives (Gorilla keeps a bounded in-memory horizon —
+    ``README.md:1-3`` paper context; here retention is a metadata-only
+    delete of pruned partitions, no data rewrite). Returns the removed
+    bucket values.
 
     Driver-side directory surgery is correct here because partitions ARE
     the retention unit; nothing scans or shuffles.
     """
     import shutil
-    from datetime import datetime
+    from datetime import datetime, timedelta
     from urllib.parse import unquote
 
     cutoff = (
@@ -113,7 +115,7 @@ def expire_buckets(path: str, older_than) -> list[str]:
         if not d.startswith("bucket="):
             continue
         val = unquote(d.split("=", 1)[1])
-        if datetime.fromisoformat(val) < cutoff:
+        if datetime.fromisoformat(val) + timedelta(seconds=BLOCK_SECONDS) <= cutoff:
             shutil.rmtree(os.path.join(path, d))
             removed.append(val)
     return removed

@@ -41,7 +41,6 @@ def running_series_stats(
     codec's order-dependent state updates."""
 
     def track(key, pdf_iter, state):
-        # self-contained closure: executors may not import gibbon_spark
         import pandas as pd
 
         (series_id,) = key

@@ -634,9 +634,8 @@ def test_long_streams_decode_alike():
 
 
 def test_codec_module_imports_only_stdlib_and_numpy():
-    """spark_ops._ship_codec_by_value pickles codec/gorilla.py by value
-    for the executors, so the module must not import the engine or
-    pyspark: a local-mode run would not notice if it did."""
+    """The codec runs and is tested without Spark, so the module must
+    not import the engine or pyspark."""
     import ast
     import sys
     from pathlib import Path

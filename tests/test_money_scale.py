@@ -21,6 +21,19 @@ from gibbon_spark.functions import exact as exact_fns
 from gibbon_spark.queries import exact_avg, money_sum
 
 
+def round_scaled_long(s, sc: int):
+    """The r12 money path's rounding, kept as the reference: half away
+    from zero of a 1e-4-scaled long sum ``s`` to a coarser power-of-ten
+    scale ``sc``, in integer arithmetic (SQL ``div`` truncates, and both
+    branches divide non-negative values), because a double
+    ``floor((s + h)/sc)`` would drift once |s| passes 2^53. Exactly
+    BigDecimal HALF_UP on the same exact value."""
+    h, d = F.lit(sc // 2), F.lit(sc)
+    return F.when(s >= 0, F.call_function("div", s + h, d)).otherwise(
+        -F.call_function("div", -s + h, d)
+    )
+
+
 def _py_scaled(v: float) -> int:
     """Python twin of scaled_long (same IEEE double arithmetic)."""
     y = v + 1e-9
@@ -76,7 +89,7 @@ def test_split_presentation_identical_to_r12_at_gate_magnitudes(spark):
 
     def money_sum_r12(col, dp=2):
         s = F.sum(exact_fns.scaled_long(col))
-        q = exact_fns.round_scaled_long(s, 10 ** (4 - dp))
+        q = round_scaled_long(s, 10 ** (4 - dp))
         return q.cast("double") / F.lit(float(10**dp))
 
     def exact_avg_r12(col):

@@ -193,7 +193,9 @@ def test_gorilla_store_range_read_prunes_day_dirs(spark, block_store):
 
 def test_expire_buckets_retention(spark, store):
     """Copy the store, expire everything before a mid-range cutoff, and
-    check exactly the old buckets are gone and the data still reads."""
+    check exactly the old buckets are gone and the data still reads. A
+    cutoff inside a bucket keeps that bucket, so no row at or after the
+    cutoff is lost."""
     import shutil
 
     d = tempfile.mkdtemp(prefix="gibbon_retention_")
@@ -210,6 +212,21 @@ def test_expire_buckets_retention(spark, store):
     left = spark.read.parquet(path)
     assert left.count() > 0
     assert left.agg(F.min("bucket")).collect()[0][0].isoformat(sep=" ") >= cutoff
+
+    mid = os.path.join(d, "mid")
+    shutil.copytree(store, mid)
+    full = spark.read.parquet(mid)
+    # the cutoff bucket's last row: past the bucket's start, inside its span
+    last = (
+        full.filter(F.col("bucket") == F.lit(cutoff).cast("timestamp"))
+        .agg(F.max("ts").cast("string"))
+        .collect()[0][0]
+    )
+    assert last > cutoff
+    newer = F.col("ts") >= F.lit(last).cast(full.schema["ts"].dataType)
+    n_newer = full.filter(newer).count()
+    assert bucketed.expire_buckets(mid, last) == removed
+    assert spark.read.parquet(mid).filter(newer).count() == n_newer
 
 
 def test_gorilla_store_pinned_schema_reads_as_inferred(spark, block_store):
