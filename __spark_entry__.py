@@ -1,6 +1,6 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Thin shim over :mod:`gibbon_spark.queries` — the registry pairs each
+Thin shim over :mod:`gibbon_spark.registry` — the registry pairs each
 Spark DataFrame plan with its DuckDB oracle SQL (see SURVEY.md §2 for
 the operator inventory each entry covers).
 """
@@ -15,15 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from gibbon_spark import queries as _registry  # noqa: E402
-import gibbon_spark.queries_llm  # noqa: E402,F401  (registers LLM-pipeline queries)
-import gibbon_spark.queries_round2  # noqa: E402,F401  (round-2 additions)
-import gibbon_spark.queries_round2b  # noqa: E402,F401  (round-2 batch B)
-import gibbon_spark.queries_round2c  # noqa: E402,F401  (round-2 batch E)
-import gibbon_spark.queries_round2d  # noqa: E402,F401  (round-2 batch F)
-import gibbon_spark.queries_round3  # noqa: E402,F401  (round-3 additions)
-import gibbon_spark.queries_round4  # noqa: E402,F401  (round-4 additions)
-import gibbon_spark.queries_round5  # noqa: E402,F401  (round-5 additions)
+from gibbon_spark import registry as _registry  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -32,7 +24,7 @@ def entry(spark: SparkSession) -> DataFrame:
     return _registry.queries()["ts_summary"](spark, "/root/testdata/sf0.001")
 
 
-# Driver-window rotation lives in gibbon_spark.queries.priority_window()
+# Driver-window rotation lives in gibbon_spark.registry.priority_window()
 # (the registry front-loads it; the driver samples the first 50 names).
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return _registry.queries()

@@ -17,8 +17,8 @@ exact same semantics with the TWO-LEVEL decomposition:
 The reference has no ordered analytics at all (it scans one series
 sequentially — ``examples/csv_to_packed.rs:36-76``); this module is part
 of the engine surface that makes ordered scans survive distribution.
-Used by ``running_total_orders`` (queries_round2) and mirrored inline by
-``revenue_concentration`` (queries.py) for rank.
+Used by ``running_total_orders`` (registry.relational) and mirrored inline by
+``revenue_concentration`` (registry.analytics) for rank.
 """
 
 from __future__ import annotations

@@ -64,9 +64,9 @@ def _top_k(scored: DataFrame, k: int) -> DataFrame:
 
 
 def _query_set(queries: DataFrame, query_id_col: str, vec_col: str):
-    """The bounded query set on the driver for the candidate top-k paths:
-    (int64 ids, float64 vectors) with one row per query_id, or None when
-    it is empty."""
+    """The bounded query set on the driver for the top-k paths: (int64
+    ids, float64 vectors) with one row per query_id (a duplicated
+    query_id keeps its first row), or None when it is empty."""
     q_pdf = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("vec")
     ).toPandas()
@@ -74,6 +74,12 @@ def _query_set(queries: DataFrame, query_id_col: str, vec_col: str):
     if not len(q_pdf):
         return None
     return q_pdf["query_id"].to_numpy().astype("int64"), _stack(q_pdf["vec"])
+
+
+def _no_queries(embeddings: DataFrame) -> DataFrame:
+    """The top-k result of an empty query set: no rows, and the columns
+    of a non-empty result."""
+    return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA + ", rank int")
 
 
 def _rerank_topk(feat: DataFrame, q_ids, q_raw, candidates, k: int) -> DataFrame:
@@ -130,11 +136,11 @@ def brute_force_topk(
     batch contributing its local top-k per query via one GEMM; a final
     tiny window merges the per-batch winners. No corpus shuffle at all —
     at 1000 executors this is a pure map + a k×queries-row reduce."""
-    q_pdf = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("vec")
-    ).toPandas()
-    q_ids = q_pdf["query_id"].to_numpy()
-    q_mat = _unit_rows(_stack(q_pdf["vec"]))
+    qs = _query_set(queries, query_id_col, vec_col)
+    if qs is None:
+        return _no_queries(embeddings)
+    q_ids, q_raw = qs
+    q_mat = _unit_rows(q_raw)
 
     def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -415,7 +421,7 @@ def lsh_neardup_pairs(
 
 def _plane_sign(plane: int, dim: int) -> int:
     """Deterministic ±1 from md5(plane:dim) — identical to the oracle's
-    duckdb-side derivation (see queries_llm._lsh_bucket_oracle_sql)."""
+    duckdb-side derivation (see registry.similarity._lsh_bucket_oracle_sql)."""
     import hashlib
 
     h = hashlib.md5(f"{plane}:{dim}".encode()).hexdigest()
@@ -488,12 +494,9 @@ def lsh_topk(
     mask = (1 << band_bits) - 1
     signs = _hyperplanes(NUM_PLANES, dims)
 
-    # an empty query set returns an empty frame instead of crashing in
-    # np.stack; a duplicated query_id keeps its first row (the pre-fusion
-    # candidate dedup's semantics; gate inputs are unique)
     qs = _query_set(queries, query_id_col, vec_col)
     if qs is None:
-        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+        return _no_queries(embeddings)
     q_ids, q_raw = qs
     q_bucket = _bucket_code(q_raw, signs)
     # per-band query values, shape (n_bands, n_queries)
@@ -715,10 +718,9 @@ def ivf_topk(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     )
     centroids = _ivf_codebook(feat, n_lists=n_lists, seed=seed)
-    # empty and duplicated query sets as in lsh_topk
     qs = _query_set(queries, query_id_col, vec_col)
     if qs is None:
-        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+        return _no_queries(embeddings)
     q_ids, q_raw = qs
     dists = _list_scores(_quantize(q_raw), centroids)
     # nprobe nearest lists per query, ties to the lowest list id:

@@ -1,0 +1,147 @@
+"""Query registry — the driver contract (SURVEY.md §2 inventory).
+
+Each entry pairs a Spark DataFrame plan with an ANSI-SQL oracle that
+DuckDB runs on the same parquet tables. Conventions that keep the
+value-hash comparison exact:
+
+- every computed column is aliased identically on both sides;
+- float aggregates are ``round()``-ed identically on both sides (sums
+  to 2 dp, averages/ratios to 6 dp) so parallel-vs-serial association
+  order cannot flip the hash;
+- money sums are decimal-exact (functions/exact.py), and half-way
+  values get the same ``+ 1e-9`` nudge before ``round()`` on both sides;
+- window orderings always carry a unique tiebreak column;
+- session timezone is pinned to UTC inside each query so timestamp
+  semantics match DuckDB's naive timestamps regardless of the caller's
+  session defaults.
+
+The queries live in one module per operator family: ``timeseries``
+(``ts_*``), ``codec`` (``gorilla_*``, ``codec_*``), ``streaming``,
+``relational``, ``analytics``, ``similarity`` and ``text``. This module
+holds the registry machinery and imports all seven, so importing the
+package registers every query. Only ``timeseries`` and ``codec`` restate
+operators of the reference codec library (johshoff/gibbon); the rest is
+engine surface beyond it (SURVEY.md §2.2).
+"""
+
+from __future__ import annotations
+
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+
+from gibbon_spark.sources.tables import load_table
+
+
+SparkQuery = Callable[[SparkSession, str], DataFrame]
+
+_QUERIES: dict[str, SparkQuery] = {}
+_ORACLES: dict[str, str] = {}
+
+
+def query(name: str, oracle: str | None = None):
+    """Register a query function and (optionally) its DuckDB oracle SQL."""
+
+    def deco(fn: SparkQuery) -> SparkQuery:
+        _QUERIES[name] = fn
+        if oracle is not None:
+            _ORACLES[name] = oracle
+        return fn
+
+    return deco
+
+
+# The driver's correctness gate samples the FIRST 50 dict entries of
+# queries(). Rounds 1-10 rotated this window for COVERAGE — by
+# CORRECTNESS_r10 every one of the 229 oracle-backed queries holds a
+# driver-green hash at least once (the r10 endgame window carried the
+# final 28 never-sampled names). Post-endgame the window's job is
+# REGRESSION DETECTION, encoded as a deterministic policy rather than a
+# hand-picked list (round-10 verdict ask #5):
+#
+#   * 10 pinned cross-family SENTINELS — one per major operator family
+#     (codec/ts, distributed codec, TPC-H agg + join, outer joins,
+#     multi-level aggs, window functions, streaming replay, LLM dedup,
+#     ANN) — sampled EVERY round, so a break in any family's shared
+#     machinery surfaces in at most one round;
+#   * 40 ROUND-ROBIN slots walking the remaining oracle-backed registry
+#     in sorted-name order, advancing 40 names per round — the full
+#     registry re-earns a fresh driver hash every ceil(219/40) = 6
+#     rounds.
+#
+# Bump ROTATION_ROUND by 1 each round (and only that). The window is
+# computed, not listed, so it can never silently drift from the policy;
+# tests/test_registry_invariants.py pins both the policy math and the
+# driver-contract invariants (50 names, oracle-backed, first in dict
+# order).
+SENTINELS: tuple[str, ...] = (
+    "ts_summary",               # codec/time-series scan+agg facade
+    "gorilla_roundtrip_summary",  # distributed Gorilla codec round-trip
+    "q1_pricing_summary",       # TPC-H wide aggregate
+    "q3_top_orders",            # TPC-H 3-way join + top-k
+    "outer_join_order_counts",  # outer-join family
+    "rollup_lineitem",          # multi-level aggregation family
+    "window_rank_orders",       # window-function family
+    "streaming_hourly_rollup",  # streaming replay-parity family
+    "dedup_minhash_lsh",        # LLM dedup (MinHash banding machinery)
+    "sim_topk_bruteforce",      # ANN / embedding kernels
+)
+ROTATION_ROUND = 12  # bump each round
+_DRIVER_SAMPLE = 50
+ROTATION_SLOTS = _DRIVER_SAMPLE - len(SENTINELS)
+
+
+def priority_window() -> tuple[str, ...]:
+    """The 50 names the driver samples this round (policy above).
+
+    Computed lazily because the round-robin pool is "every oracle-backed
+    registered query" — only known after all query modules import.
+    """
+    pool = sorted(n for n in _QUERIES if n in _ORACLES and n not in SENTINELS)
+    start = ((ROTATION_ROUND - 11) * ROTATION_SLOTS) % len(pool)
+    rotating = tuple(pool[(start + i) % len(pool)] for i in range(ROTATION_SLOTS))
+    return SENTINELS + rotating
+
+
+def queries() -> dict[str, SparkQuery]:
+    """All registered queries: priority_window() first, then the
+    remaining oracle-backed entries, then rows-only entries LAST.
+
+    The driver samples the first N dict entries for its correctness
+    gate; a rows-only (no-oracle) query in that window burns a slot on
+    an ``err: no_oracle`` row even though it is rows-only by design.
+    The computed window guarantees the sampled set spans the operator
+    families (sentinels) and round-robins the rest of the registry
+    (policy comment above priority_window)."""
+    prioritized = {
+        k: _QUERIES[k] for k in priority_window() if k in _QUERIES and k in _ORACLES
+    }
+    backed = {
+        k: v
+        for k, v in _QUERIES.items()
+        if k in _ORACLES and k not in prioritized
+    }
+    rows_only = {k: v for k, v in _QUERIES.items() if k not in _ORACLES}
+    return {**prioritized, **backed, **rows_only}
+
+
+def oracle_sql() -> dict[str, str]:
+    return dict(_ORACLES)
+
+
+def _prep(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
+    """Pin UTC (driver may hand us a session with another tz) and load tables."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    return [load_table(spark, sf_dir, n) for n in names]
+
+
+# Importing the domain modules registers their queries, in this order.
+from gibbon_spark.registry import (  # noqa: E402,F401
+    timeseries,
+    codec,
+    streaming,
+    relational,
+    analytics,
+    similarity,
+    text,
+)

@@ -10,7 +10,8 @@ every oracle-backed query and fails when one side is an int family and
 the other lands in pandas float territory.
 
 The executed companion (which also catches null-induced pandas widening)
-is ``tools/dtype_parity.py`` — run per round at sf0.001.
+is ``tools/oracle_check.py``: its ``compare`` FAILs an int/float
+dtype-class mismatch on the executed frames.
 """
 
 from __future__ import annotations

@@ -50,7 +50,7 @@ def test_interval_union_exact_touching_boundaries(spark):
     """Intervals that touch exactly (gap == interval length) must merge;
     gap of interval+1 must not. Brute-force second-set union is the
     oracle."""
-    from gibbon_spark.queries_round2b import _IVL_SECONDS
+    from gibbon_spark.registry.analytics import _IVL_SECONDS
 
     rng = random.Random(42)
     rows = []
@@ -90,7 +90,7 @@ def test_chunker_on_pathological_whitespace(spark):
     must reassemble exactly those tokens."""
     import re
 
-    from gibbon_spark.queries_round2b import _CHUNK_TOKENS
+    from gibbon_spark.registry.text import _CHUNK_TOKENS
 
     docs = [
         (0, "  leading and trailing   ", "en", "web"),
@@ -121,7 +121,7 @@ def test_chunker_on_pathological_whitespace(spark):
 def test_heavy_hitters_under_zipf_flood(spark):
     """A zipf-skewed token flood (one token is ~20% of the corpus):
     the MG sketch + exact recount must equal the exact > N/k set."""
-    from gibbon_spark.queries_round2b import _MG_K
+    from gibbon_spark.registry.analytics import _MG_K
 
     rng = random.Random(7)
     docs = []
@@ -157,7 +157,7 @@ def test_heavy_hitters_under_zipf_flood(spark):
 def test_bollinger_warmup_and_flat_series(spark):
     """A perfectly flat series has sigma 0 and bands equal to the value;
     warm-up rows (first WINDOW-1 samples) are excluded."""
-    from gibbon_spark.queries_round2b import _BB_WINDOW
+    from gibbon_spark.registry.timeseries import _BB_WINDOW
 
     rows = []
     base = 1_700_000_000

@@ -26,7 +26,7 @@ import numpy as np
 import pandas as pd
 
 from gibbon_spark.operators import similarity
-from gibbon_spark.queries_llm import _ivf_topk_oracle_sql
+from gibbon_spark.registry.similarity import _ivf_topk_oracle_sql
 
 
 def test_pick_uniforms_pinned():

@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gibbon_spark.functions import exact as exact_fns
-from gibbon_spark.queries import exact_avg, money_sum
+from gibbon_spark.functions.exact import exact_avg, money_sum
 
 
 def round_scaled_long(s, sc: int):

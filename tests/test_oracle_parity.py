@@ -51,7 +51,7 @@ def test_money_sum_presents_identically_at_1e13(spark, duck):
     on at any magnitude."""
     from pyspark.sql import functions as F
 
-    from gibbon_spark.queries import money_sum, money_sum_sql
+    from gibbon_spark.functions.exact import money_sum, money_sum_sql
 
     sdf = spark.createDataFrame(
         [(10116031050223.0,), (0.855,)], "v double"

@@ -1,7 +1,7 @@
 """Pins the driver-contract registry machinery (round-8 verdict ask #6;
 policy re-encoded round 11 after the coverage endgame).
 
-The rotation window (queries.priority_window()) is load-bearing for
+The rotation window (registry.priority_window()) is load-bearing for
 driver-hash verification: the driver samples the FIRST 50 dict entries
 of queries() for its correctness gate. Rounds 1-10 rotated the window
 by hand for cumulative coverage; with every oracle-backed query now
@@ -17,8 +17,14 @@ round-robin math) a pytest failure instead of a burned driver round.
 
 from __future__ import annotations
 
+import ast
+import json
+import os
+import subprocess
+import sys
+
 import __spark_entry__ as entrymod
-from gibbon_spark.queries import (
+from gibbon_spark.registry import (
     ROTATION_ROUND,
     ROTATION_SLOTS,
     SENTINELS,
@@ -34,6 +40,7 @@ from gibbon_spark.queries import (
 EXPECTED_TOTAL = 231
 EXPECTED_ORACLE_BACKED = 229
 DRIVER_SAMPLE = 50
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_registry_size_pinned():
@@ -87,7 +94,7 @@ def test_window_policy_math():
 def test_rotation_covers_full_registry_in_six_rounds():
     """Six consecutive rounds of the round-robin + the sentinels cover
     every oracle-backed query — the policy's whole point."""
-    import gibbon_spark.queries as qmod
+    import gibbon_spark.registry as qmod
 
     oracles = set(entrymod.oracle_sql())
     seen: set[str] = set()
@@ -118,3 +125,61 @@ def test_every_oracle_belongs_to_a_registered_query():
     qs = entrymod.queries()
     orphans = [n for n in entrymod.oracle_sql() if n not in qs]
     assert not orphans, f"oracles without queries: {orphans}"
+
+
+def test_package_import_alone_registers_the_whole_registry():
+    """``import gibbon_spark.registry`` by itself, in a fresh interpreter,
+    registers every query and oracle, and its window is the one
+    ``__spark_entry__.queries()`` puts first."""
+    probe = (
+        "import json, gibbon_spark.registry as r; "
+        "print(json.dumps([len(r.queries()), len(r.oracle_sql()), "
+        "list(r.priority_window())]))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=ROOT, capture_output=True,
+        text=True, check=True,
+    ).stdout
+    n_queries, n_oracles, window = json.loads(out.strip().splitlines()[-1])
+    assert (n_queries, n_oracles) == (EXPECTED_TOTAL, EXPECTED_ORACLE_BACKED)
+    assert window == list(entrymod.queries())[:DRIVER_SAMPLE]
+
+
+def _top_level_names(tree):
+    for n in tree.body:
+        if isinstance(n, ast.FunctionDef):
+            yield n.name
+        for t in getattr(n, "targets", [getattr(n, "target", None)]):
+            if isinstance(t, ast.Name):
+                yield t.id
+
+
+def test_registry_modules_import_one_way_and_own_their_privates():
+    """No two registry modules import each other (the package importing
+    its own modules aside), and a private name is imported only from the
+    module that defines it."""
+    pkg = os.path.join(ROOT, "gibbon_spark", "registry")
+    defined, imports = {}, {}
+    for fn in sorted(os.listdir(pkg)):
+        if not fn.endswith(".py"):
+            continue
+        mod = "gibbon_spark.registry" + ("." + fn[:-3]) * (fn != "__init__.py")
+        with open(os.path.join(pkg, fn)) as f:
+            tree = ast.parse(f.read())
+        defined[mod] = set(_top_level_names(tree))
+        imports[mod] = [
+            (n.module, [a.name for a in n.names])
+            for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom)
+            and (n.module or "").startswith("gibbon_spark.registry")
+        ]
+    for mod, imps in imports.items():
+        for src, names in imps:
+            if "gibbon_spark.registry" in (mod, src):
+                continue
+            assert mod not in [s for s, _ in imports[src]], (
+                f"{mod} and {src} import each other"
+            )
+            for name in names:
+                if name.startswith("_"):
+                    assert name in defined[src], f"{mod} borrows {src}.{name}"

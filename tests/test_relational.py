@@ -95,7 +95,7 @@ def test_bloom_prefilter_actually_prunes(spark):
     false negatives — guaranteed by construction, checked anyway) and
     prune a meaningful share of non-matching fact rows (k=4, 64 Kib
     filter => FP rate << 50% at test cardinalities)."""
-    from gibbon_spark.queries_llm import _bloom_pos_exprs, _bloom_words_df
+    from gibbon_spark.registry.analytics import _bloom_pos_exprs, _bloom_words_df
     from gibbon_spark.sources.tables import load_table
 
     words = {r.word: r.bits for r in _bloom_words_df(spark, SF_SMALL).collect()}

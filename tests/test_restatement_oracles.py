@@ -23,7 +23,7 @@ def con():
 
 
 def test_chunked_sigs_equal_inline_sigs(con):
-    from gibbon_spark.queries_llm import _SHINGLE_CTE, _minhash_sig_cols
+    from gibbon_spark.registry.similarity import _SHINGLE_CTE, _minhash_sig_cols
 
     _build_sigs_chunked(con, chunks=3)
     chunked = con.execute(
@@ -37,7 +37,7 @@ def test_chunked_sigs_equal_inline_sigs(con):
 
 
 def test_minhash_tail_over_sigs_equals_registered_oracle(con):
-    from gibbon_spark.queries_llm import _minhash_oracle_sql, _minhash_tail_sql
+    from gibbon_spark.registry.similarity import _minhash_oracle_sql, _minhash_tail_sql
 
     _build_sigs_chunked(con, chunks=3)
     restated = con.execute(
@@ -51,7 +51,7 @@ def test_minhash_tail_over_sigs_equals_registered_oracle(con):
 
 
 def test_incremental_tail_over_sigs_equals_registered_oracle(con):
-    from gibbon_spark.queries_llm import (
+    from gibbon_spark.registry.similarity import (
         _INCREMENTAL_SPLIT_CTE,
         _incremental_oracle_sql,
         _incremental_tail_sql,
@@ -68,10 +68,8 @@ def test_incremental_tail_over_sigs_equals_registered_oracle(con):
 
 
 def test_pipeline_pairs_src_equals_registered_oracle(con):
-    from gibbon_spark.queries_llm import (
-        _minhash_tail_sql,
-        _pipeline_oracle_sql,
-    )
+    from gibbon_spark.registry.similarity import _minhash_tail_sql
+    from gibbon_spark.registry.text import _pipeline_oracle_sql
 
     _build_sigs_chunked(con, chunks=3)
     con.execute(
@@ -88,7 +86,7 @@ def test_pipeline_pairs_src_equals_registered_oracle(con):
 
 
 def test_pc_scan_gram_equals_join_gram(con):
-    from gibbon_spark.queries_round2b import _pc_oracle_sql
+    from gibbon_spark.registry.similarity import _pc_oracle_sql
 
     join_form = con.execute(_pc_oracle_sql(gram_mode="join")).fetchdf()
     scan_form = con.execute(_pc_oracle_sql(gram_mode="scan")).fetchdf()
@@ -96,7 +94,7 @@ def test_pc_scan_gram_equals_join_gram(con):
 
 
 def test_pc_unknown_gram_mode_raises():
-    from gibbon_spark.queries_round2b import _pc_oracle_sql
+    from gibbon_spark.registry.similarity import _pc_oracle_sql
 
     with pytest.raises(ValueError, match="gram_mode"):
         _pc_oracle_sql(gram_mode="stream")

@@ -17,7 +17,7 @@ def test_chunking_covers_every_token(spark):
     so token coverage is exact: the first chunk of each doc starts at 1,
     consecutive starts differ by the stride, and the last chunk reaches
     the final token."""
-    from gibbon_spark.queries_round2b import _CHUNK_STRIDE, _CHUNK_TOKENS
+    from gibbon_spark.registry.text import _CHUNK_STRIDE, _CHUNK_TOKENS
 
     pdf = _run(spark, "chunk_documents_overlap")
     g = pdf.groupby("doc_id")
@@ -46,8 +46,8 @@ def test_heavy_hitters_match_exact_threshold(spark):
     sketch, no false positives after the recount)."""
     from pyspark.sql import functions as F
 
-    from gibbon_spark.queries_round2b import _MG_K
-    from gibbon_spark.queries import _prep
+    from gibbon_spark.registry.analytics import _MG_K
+    from gibbon_spark.registry import _prep
 
     got = set(_run(spark, "heavy_hitters_mg")["token"])
     (docs,) = _prep(spark, SF_SMALL, "documents")
@@ -67,7 +67,7 @@ def test_interval_union_bounds(spark):
     """Union length per user is bounded by n_events * interval on top
     and by one interval per island on the bottom, and islands can't
     outnumber events."""
-    from gibbon_spark.queries_round2b import _IVL_SECONDS
+    from gibbon_spark.registry.analytics import _IVL_SECONDS
 
     pdf = _run(spark, "interval_coverage_union")
     assert (pdf["covered_seconds"] <= pdf["n_events"] * _IVL_SECONDS).all()
@@ -80,7 +80,7 @@ def test_hll_registers_bound_exact_count(spark):
     """HLL structural invariants: used registers never exceed m or the
     exact distinct count (each distinct user fills at most one bucket
     per window), and the raw estimate is positive."""
-    from gibbon_spark.queries_round2b import _HLL_M
+    from gibbon_spark.registry.analytics import _HLL_M
 
     pdf = _run(spark, "sketch_hll_sliding_wau")
     assert (pdf["n_buckets_used"] <= _HLL_M).all()
@@ -95,7 +95,7 @@ def test_forecast_matches_numpy_polyfit(spark):
     import numpy as np
     import pandas as pd
 
-    from gibbon_spark.queries import _prep
+    from gibbon_spark.registry import _prep
 
     fit = _run(spark, "ts_forecast_linear").set_index("series")
     (events,) = _prep(spark, SF_SMALL, "events")
@@ -144,7 +144,7 @@ def test_top_pc_against_numpy_svd(spark):
     direction components came from a unit vector."""
     import numpy as np
 
-    from gibbon_spark.queries import _prep
+    from gibbon_spark.registry import _prep
 
     pdf = entrymod.queries()["embedding_top_pc"](spark, SF_SMALL).toPandas()
     sigma = pdf["sigma"].iloc[0]
@@ -162,7 +162,7 @@ def test_top_pc_against_numpy_svd(spark):
 def test_spearman_matches_pandas(spark):
     """The integer-moment Spearman must agree with pandas' rank
     correlation (tie-aware) per supplier."""
-    from gibbon_spark.queries import _prep
+    from gibbon_spark.registry import _prep
 
     got = _run(spark, "corr_spearman_supplier").set_index("supp")["spearman_rho"]
     (li,) = _prep(spark, SF_SMALL, "lineitem")
@@ -189,8 +189,8 @@ def test_bollinger_bands_sane(spark):
     assert (pdf["mid"] <= pdf["upper_band"] + 1e-9).all()
     assert pdf["breakout"].isin([0, 1]).all()
     # warm-up rows are excluded: every series loses WINDOW-1 rows
-    from gibbon_spark.queries import _prep
-    from gibbon_spark.queries_round2b import _BB_WINDOW
+    from gibbon_spark.registry import _prep
+    from gibbon_spark.registry.timeseries import _BB_WINDOW
 
     (events,) = _prep(spark, SF_SMALL, "events")
     per_series = events.groupBy("event_type").count().collect()
@@ -204,7 +204,7 @@ def test_streaming_hll_registers_match_batch(spark):
     directly — mergeable-sketch state is micro-batching-invariant."""
     from pyspark.sql import functions as F
 
-    from gibbon_spark.queries import _prep
+    from gibbon_spark.registry import _prep
 
     stream_pdf = (
         _run(spark, "streaming_sketch_hll")
@@ -239,7 +239,7 @@ def test_cuped_against_numpy(spark):
 
     import numpy as np
 
-    from gibbon_spark.queries import _prep
+    from gibbon_spark.registry import _prep
 
     got = _run(spark, "abtest_cuped").iloc[0]
     (events,) = _prep(spark, SF_SMALL, "events")
@@ -287,8 +287,8 @@ def test_trimmed_mean_matches_pandas(spark):
     integer-cent quantization must match."""
     import numpy as np
 
-    from gibbon_spark.queries import _prep
-    from gibbon_spark.queries_round2b import _TRIM_PCT
+    from gibbon_spark.registry import _prep
+    from gibbon_spark.registry.analytics import _TRIM_PCT
 
     got = _run(spark, "agg_trimmed_mean").set_index("grp")
     (orders,) = _prep(spark, SF_SMALL, "orders")

@@ -1,5 +1,5 @@
-"""Invariant tests for the round-2 batch E operators
-(gibbon_spark/queries_round2c.py) — properties the oracle compare
+"""Invariant tests for the round-2 batch E, F and G queries (in
+gibbon_spark/registry/, filed by domain) — properties the oracle compare
 cannot see (cross-checks against independent numpy/pandas
 recomputation, structural invariants)."""
 
@@ -110,7 +110,7 @@ def test_recursive_chain_depth_and_root(spark):
         assert pdf.loc[s].root_suppkey == k
 
 
-# ---- batch F (queries_round2d.py) ----
+# ---- batch F ----
 
 
 def test_table_diff_finds_exactly_the_corrupted_rows(spark):
@@ -163,7 +163,7 @@ def test_conversion_lag_buckets_cover_signups(spark):
         }
 
 
-# ---- batch G (queries_round2d.py, part 2) ----
+# ---- batch G ----
 
 
 def test_ks_distance_matches_scipy_style_recompute(spark):

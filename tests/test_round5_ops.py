@@ -65,7 +65,7 @@ def test_xoror_smooth_series_leadtrail_wins():
 def test_xoror_bits_query_matches_offline(spark):
     res = {
         r["user_id"]: (r["n_values"], r["xor_bits"], r["leadtrail_bits"])
-        for r in __import__("gibbon_spark.queries_round5", fromlist=["x"])
+        for r in __import__("gibbon_spark.registry.codec", fromlist=["x"])
         ._series_codec_stats(
             spark.read.parquet(f"{SF_SMALL}/events.parquet"), verify=True
         )
@@ -89,7 +89,7 @@ def test_perplexity_bigram_vs_dict_lm(spark):
     with the registered distributed query."""
     import hashlib
 
-    from gibbon_spark.queries_round5 import q_text_perplexity_bigram
+    from gibbon_spark.registry.text import q_text_perplexity_bigram
 
     t = pq.read_table(f"{SF_SMALL}/documents.parquet").to_pandas()
 

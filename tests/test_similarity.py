@@ -188,6 +188,19 @@ def test_topk_degenerate_query_inputs(spark, embeddings):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     doubled = one.unionAll(one)
-    base = similarity.lsh_topk(embeddings, one, k=5).collect()
-    dup = similarity.lsh_topk(embeddings, doubled, k=5).collect()
-    assert sorted(map(tuple, dup)) == sorted(map(tuple, base))
+    for topk in (similarity.brute_force_topk, similarity.lsh_topk):
+        base = topk(embeddings, one, k=5).collect()
+        dup = topk(embeddings, doubled, k=5).collect()
+        assert sorted(map(tuple, dup)) == sorted(map(tuple, base))
+
+
+@pytest.mark.parametrize(
+    "topk", [similarity.brute_force_topk, similarity.lsh_topk, similarity.ivf_topk]
+)
+def test_topk_empty_query_set_keeps_result_columns(spark, embeddings, topk):
+    """An empty query set returns no rows and the columns of a non-empty
+    result (``rank`` included), from each of the three top-k paths."""
+    qs = embeddings.select(F.col("vec_id").alias("query_id"), "embedding")
+    empty = topk(embeddings, qs.limit(0), k=5)
+    assert empty.count() == 0
+    assert empty.columns == topk(embeddings, qs.limit(2), k=5).columns

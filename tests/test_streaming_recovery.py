@@ -19,7 +19,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from gibbon_spark.queries import money_sum
+from gibbon_spark.functions.exact import money_sum
 from gibbon_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"

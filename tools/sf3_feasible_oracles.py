@@ -156,7 +156,7 @@ def check_knn_subset(name: str, sf_dir: str, pct: int) -> int:
     freeing the JVM) then `GS_SF3_PHASE=duck` (duck-only process with
     the whole box for the oracle)."""
     from gibbon_spark.operators import similarity
-    from gibbon_spark.queries_llm import _COSINE_SQL
+    from gibbon_spark.registry.similarity import _COSINE_SQL
 
     phase = os.environ.get("GS_SF3_PHASE", "")
     # cache name embeds the run's provenance (sf_dir + subset pct) so the
@@ -261,7 +261,7 @@ def _build_sigs_chunked(con, chunks: int) -> None:
     expressions are the same generator strings as the registered oracle
     (_minhash_sig_cols / _SHINGLE_CTE), so the hash family cannot
     drift."""
-    from gibbon_spark.queries_llm import _SHINGLE_CTE, _minhash_sig_cols
+    from gibbon_spark.registry.similarity import _SHINGLE_CTE, _minhash_sig_cols
 
     sig_cols = _minhash_sig_cols()
     for i in range(chunks):
@@ -301,7 +301,7 @@ def check_minhash_chunked(sf_dir: str) -> int:
     """dedup_minhash_lsh: FULL exact — chunked signature TEMP TABLE +
     the registered oracle's own tail (banding/cap/candidates/estimate)
     reading sigs from the TEMP table instead of the inline CTE."""
-    from gibbon_spark.queries_llm import _minhash_tail_sql
+    from gibbon_spark.registry.similarity import _minhash_tail_sql
 
     t0 = time.time()
     spark_pdf = _spark_result("dedup_minhash_lsh", sf_dir)
@@ -327,7 +327,8 @@ def check_pipeline_chunked(sf_dir: str) -> int:
     chunked sigs path, then run the registered pipeline SQL with
     dup_pairs sourced from the TEMP table (_pipeline_oracle_sql's
     pairs_src hook — every downstream stage is the same string)."""
-    from gibbon_spark.queries_llm import _minhash_tail_sql, _pipeline_oracle_sql
+    from gibbon_spark.registry.similarity import _minhash_tail_sql
+    from gibbon_spark.registry.text import _pipeline_oracle_sql
 
     t0 = time.time()
     spark_pdf = _spark_result("pipeline_training_corpus", sf_dir)
@@ -353,7 +354,7 @@ def check_incremental_chunked(sf_dir: str) -> int:
     """dedup_incremental: FULL exact — chunked sigs TEMP TABLE + the
     registered oracle's own split/band/cross-candidate tail
     (_incremental_tail_sql)."""
-    from gibbon_spark.queries_llm import (
+    from gibbon_spark.registry.similarity import (
         _INCREMENTAL_SPLIT_CTE,
         _incremental_tail_sql,
     )
@@ -385,7 +386,7 @@ def check_pc_scan(sf_dir: str) -> int:
     from one scan into the 4,096-group aggregate (identical values —
     proven equal to the join form at sf0.01/sf0.1). Every CTE downstream
     of g is the identical string."""
-    from gibbon_spark.queries_round2b import _pc_oracle_sql
+    from gibbon_spark.registry.similarity import _pc_oracle_sql
 
     t0 = time.time()
     spark_pdf = _spark_result("embedding_top_pc", sf_dir)
@@ -413,7 +414,7 @@ def check_neardup_relational_subset(sf_dir: str, pct: int) -> int:
     left-to-right chain bit-for-bit (knn_graph_lsh sf10 PASS
     precedent)."""
     from gibbon_spark.operators import similarity
-    from gibbon_spark.queries_llm import _COSINE_SQL
+    from gibbon_spark.registry.similarity import _COSINE_SQL
 
     t0 = time.time()
     spark_full = _spark_result("sim_embedding_neardup", sf_dir)
@@ -472,7 +473,7 @@ def check_cc_full(sf_dir: str) -> int:
     over the identical capped-LSH edge set. The pair table builds
     through the chunked-sigs path (exact at every SF; at sf10 the
     one-shot sigs aggregate is the disk-filling stage)."""
-    from gibbon_spark.queries_llm import _minhash_tail_sql
+    from gibbon_spark.registry.similarity import _minhash_tail_sql
 
     t0 = time.time()
     spark_pdf = _spark_result("dedup_clusters_cc", sf_dir)
