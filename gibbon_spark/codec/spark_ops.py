@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gibbon_spark.worker import drop_spark_archives
+
 BLOCK_SCHEMA = (
     "series_id string, header_time long, n_samples int, n_bits long, payload binary"
 )
@@ -79,6 +81,7 @@ def encode_timeseries(
     )
 
     def encode_partition(batches):
+        drop_spark_archives()
         import numpy as np
         import pandas as pd
 
@@ -151,10 +154,13 @@ def decode_timeseries(blocks: DataFrame) -> DataFrame:
             }
         )
 
+    def decode_partition(batches):
+        drop_spark_archives()
+        for pdf in batches:
+            yield decode_batch(pdf)
+
     # mapInPandas keeps decode embarrassingly parallel (no shuffle)
-    return blocks.mapInPandas(
-        lambda it: (decode_batch(pdf) for pdf in it), ROWS_SCHEMA
-    )
+    return blocks.mapInPandas(decode_partition, ROWS_SCHEMA)
 
 
 def compression_report(blocks: DataFrame) -> DataFrame:

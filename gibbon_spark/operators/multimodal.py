@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gibbon_spark.worker import drop_spark_archives
+
 _FEATURE_DIM = 16
 _FEATURE_SCHEMA = (
     "media_id long, modality string, payload_bytes long, payload_md5 string, "
@@ -118,6 +120,7 @@ def decode_image(media: DataFrame, *, codec: str = "gsraw") -> DataFrame:
     )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_spark_archives()
         import numpy as np
         import pandas as pd
 
@@ -177,6 +180,7 @@ def resize_image(
     tw, th = int(target_w), int(target_h)
 
     def resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_spark_archives()
         import numpy as np
         import pandas as pd
 
@@ -284,6 +288,7 @@ def extract_features(media: DataFrame, *, fake: bool = True) -> DataFrame:
     dim = _FEATURE_DIM
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_spark_archives()
         import hashlib
 
         import numpy as np
@@ -350,6 +355,7 @@ def decode_audio(media: DataFrame) -> DataFrame:
     )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_spark_archives()
         import numpy as np
         import pandas as pd
 
@@ -439,6 +445,7 @@ def sample_frame_luma(
     )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_spark_archives()
         import numpy as np
         import pandas as pd
 
@@ -487,6 +494,7 @@ def image_ahash(media: DataFrame) -> DataFrame:
     )
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_spark_archives()
         import numpy as np
         import pandas as pd
 

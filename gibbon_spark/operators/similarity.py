@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gibbon_spark.worker import drop_spark_archives
+
 NUM_PLANES = 16
 
 _PAIR_SCHEMA = "id_a long, id_b long, cosine_sim double"
@@ -90,6 +92,7 @@ def _rerank_topk(feat: DataFrame, q_ids, q_raw, candidates, k: int) -> DataFrame
     q_mat = _unit_rows(q_raw)
 
     def cand_score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_spark_archives()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -143,6 +146,7 @@ def brute_force_topk(
     q_mat = _unit_rows(q_raw)
 
     def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_spark_archives()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -211,6 +215,7 @@ def pairwise_cosine_pairs(
     ).select("id", "vec", "blk", F.col("bp.p").alias("p"), F.col("bp.q").alias("q"))
 
     def block_pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_spark_archives()
         # Row-chunked GEMM: the one-shot sub-matrix product holds an
         # n_p x n_q double sims matrix (450 MB at 7.5k x 7.5k) plus, in
         # the diagonal case, full triu index arrays (~700 MB more) —
@@ -305,10 +310,11 @@ def with_lsh_bands(
 
     @F.pandas_udf("array<int>")
     def bands_udf(vecs: pd.Series) -> pd.Series:
+        drop_spark_archives()
         if not len(vecs):
             return pd.Series([], dtype="object")
         mat = _stack(vecs)
-        bits = (mat @ signs >= 0).reshape(len(mat), n_bands, band_bits)
+        bits = (mat @ signs.astype("float64") >= 0).reshape(len(mat), n_bands, band_bits)
         vals = (bits @ w).astype("int32")
         return pd.Series(list(vals))
 
@@ -433,14 +439,16 @@ def plane_signs(num_planes: int, dims: int) -> list[list[int]]:
 
 
 def _hyperplanes(num_planes: int, dims: int) -> np.ndarray:
-    """The plane signs as a float64 dims × planes matrix."""
-    return np.array(plane_signs(num_planes, dims), dtype="float64").T
+    """The ±1 plane signs as an int8 dims × planes matrix. A UDF that
+    closes over it ships one byte per sign (32 KB for 512 × 64, not
+    256 KB) and upcasts it to float64, exactly, for its GEMM."""
+    return np.array(plane_signs(num_planes, dims), dtype="int8").T
 
 
 def _bucket_code(mat: np.ndarray, signs: np.ndarray) -> np.ndarray:
     """Per row, the int32 code with bit p set iff dot(row, plane_p) >= 0."""
     weights = 1 << np.arange(signs.shape[1], dtype="int64")
-    return ((mat @ signs >= 0) @ weights).astype("int32")
+    return ((mat @ signs.astype("float64") >= 0) @ weights).astype("int32")
 
 
 def with_lsh_bucket(
@@ -458,6 +466,7 @@ def with_lsh_bucket(
 
     @F.pandas_udf("int")
     def bucket_udf(vecs: pd.Series) -> pd.Series:
+        drop_spark_archives()
         if not len(vecs):
             return pd.Series([], dtype="int32")
         return pd.Series(_bucket_code(_stack(vecs), signs))
@@ -666,6 +675,7 @@ def ivf_assign(
     cent = _ivf_codebook(feat, n_lists=n_lists, seed=seed)
 
     def assign(batches):
+        drop_spark_archives()
         for pdf in batches:
             if not len(pdf):
                 continue

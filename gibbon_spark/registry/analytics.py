@@ -13,6 +13,7 @@ from gibbon_spark.materialize import materialize
 from gibbon_spark.operators import ranking
 from gibbon_spark.registry import _prep, query
 from gibbon_spark.sources.tables import load_table
+from gibbon_spark.worker import drop_spark_archives
 
 
 # =========================================================================
@@ -858,6 +859,7 @@ def q_udaf_geometric_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stringifies type hints, which breaks pandas_udf hint inference
     @pandas_udf("double", PandasUDFType.GROUPED_AGG)
     def gmean(x):
+        drop_spark_archives()
         import numpy as np
 
         v = x.to_numpy(dtype="float64")
@@ -867,6 +869,7 @@ def q_udaf_geometric_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row count is a (cheap) second pandas aggregate over the same group
     @pandas_udf("long", PandasUDFType.GROUPED_AGG)
     def cnt(x):
+        drop_spark_archives()
         return len(x)
 
     return docs.groupBy("lang").agg(
@@ -1878,6 +1881,7 @@ def q_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(F.explode(F.split(F.col("text"), r"\s+")).alias("token"))
 
     def mg_partition(batches):
+        drop_spark_archives()
         import pandas as pd
 
         counters: dict[str, int] = {}

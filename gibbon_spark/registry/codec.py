@@ -19,6 +19,7 @@ from gibbon_spark.codec import oracle_sql as _codec_oracle
 from gibbon_spark.functions.exact import exact_avg_sql, money4
 from gibbon_spark.operators.timeseries import _scan_aggs
 from gibbon_spark.registry import _prep, query
+from gibbon_spark.worker import drop_spark_archives
 
 
 # ---------------------------------------------------------------------------
@@ -253,6 +254,7 @@ def _series_codec_stats(events: DataFrame, verify: bool) -> DataFrame:
     from gibbon_spark.codec.gorilla import decode_values, encode_values_vectorized
 
     def per_bucket(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        drop_spark_archives()
         import numpy as np
 
         pdf = pdf.sort_values(["user_id", "ts", "event_id"])

@@ -23,6 +23,7 @@ from gibbon_spark.operators import merge as merge_ops
 from gibbon_spark.operators import skew as skew_ops
 from gibbon_spark.operators import timeseries as ts_ops
 from gibbon_spark.registry import _prep, query
+from gibbon_spark.worker import drop_spark_archives
 
 
 # =========================================================================
@@ -2155,6 +2156,7 @@ def q_cogroup_order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     def reconcile(odf: pd.DataFrame, ldf: pd.DataFrame) -> pd.DataFrame:
+        drop_spark_archives()
         charges = (
             ldf.groupby("okey")["line_cents"].sum().rename("charge_cents")
             if len(ldf)

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from gibbon_spark.materialize import materialize
 from gibbon_spark.operators import dedup, similarity
 from gibbon_spark.registry import _prep, query
+from gibbon_spark.worker import drop_spark_archives
 
 
 # ---------------------------------------------------------------------------
@@ -1512,6 +1513,7 @@ def q_embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     d, quant, vq_scale = _PC_DIMS, _PC_QUANT, _PC_VQ
 
     def gram_partials(batches):
+        drop_spark_archives()
         import numpy as np
 
         for pdf in batches:
@@ -1761,6 +1763,7 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         kk = len(cent_arr)
 
         def partials(batches):
+            drop_spark_archives()
             import numpy as np
             import pandas as pd
 

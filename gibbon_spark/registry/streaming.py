@@ -15,6 +15,7 @@ from gibbon_spark.registry.timeseries import _SESSIONS_SQL
 from gibbon_spark.sources.tables import load_table
 from gibbon_spark.streaming.joins import stream_interval_join
 from gibbon_spark.streaming.replay import events_stream, replay
+from gibbon_spark.worker import drop_spark_archives
 
 
 # =========================================================================
@@ -206,6 +207,7 @@ def q_streaming_stateful_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def track(key, pdf_iter, state):
+        drop_spark_archives()
         import pandas as pd
 
         (user_id,) = key

@@ -15,6 +15,7 @@ from gibbon_spark.materialize import materialize
 from gibbon_spark.operators import dedup
 from gibbon_spark.registry import _ORACLES, _prep, query
 from gibbon_spark.registry.similarity import _SHINGLE_CTE, _minhash_oracle_sql
+from gibbon_spark.worker import drop_spark_archives
 
 
 # ---------------------------------------------------------------------------
@@ -369,6 +370,9 @@ def q_udtf_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @udtf(returnType="doc_id bigint, chunk_idx int, chunk_text string, n_tokens int")
     class TokenChunks:
+        def __init__(self):
+            drop_spark_archives()
+
         def eval(self, doc_id, text):
             import re
 

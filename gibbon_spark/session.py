@@ -7,6 +7,10 @@ count is sized to cores locally and should be overridden (or left to
 AQE coalescing) on a real cluster; Arrow is on for the few Pandas-UDF
 paths; session timezone is pinned to UTC so timestamp semantics match
 the oracle (DuckDB) and are portable across clusters.
+
+No config here touches the Python workers: every engine UDF sets up its
+own worker (``gibbon_spark/worker.py``), so a session the caller built
+pays the same per-task Python cost as this one.
 """
 
 from __future__ import annotations
@@ -36,17 +40,6 @@ def _driver_mem(phys_bytes: int) -> str:
     return f"{min(48 << 10, phys_bytes // 2 >> 20)}m"
 
 
-# Holds only gibbon_daemon.py, so it can go on the workers' PYTHONPATH.
-_WORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker")
-
-
-def _worker_pythonpath(caller: str | None) -> str:
-    """The workers' PYTHONPATH: the daemon module's directory, then the
-    caller's own entries (without a second copy of that directory)."""
-    rest = [p for p in (caller or "").split(os.pathsep) if p and p != _WORKER_DIR]
-    return os.pathsep.join([_WORKER_DIR, *rest])
-
-
 def get_spark(
     app_name: str = "gibbon_spark",
     *,
@@ -70,16 +63,9 @@ def get_spark(
       needs ~2.6k classes, so the default evicts and recompiles them on
       every pass. The conf is static: a caller that builds its own
       session must set it at build time.
-    - Python workers start from ``gibbon_spark/_worker/gibbon_daemon.py``
-      instead of ``pyspark.daemon``. It takes ``pyspark.zip`` and the
-      Spark jar off the worker's import path when a directory install of
-      the same pyspark is there, which cuts each Python task's fixed
-      cost from about 0.2 s of worker CPU to 0.04 s. The master is
-      always ``local[N]``, so the module's path is on the machine that
-      runs the workers. Both confs are static: a caller that builds its
-      own session keeps the stock daemon (same results) unless it sets
-      them at build time. A caller's ``spark.executorEnv.PYTHONPATH``
-      in ``extra_conf`` is kept, after the module's directory.
+    - Python workers start with Spark's stock daemon, as in any session:
+      each engine UDF takes Spark's archives off its worker's import
+      path itself (``gibbon_spark/worker.py``).
     """
     cpus = _cpus()
     builder = (
@@ -113,17 +99,8 @@ def get_spark(
         # finite. Re-measure with recipe 7 of .claude/skills/verify/SKILL.md;
         # the measured figures are in ROADMAP.md D2.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
-        # Static conf. Spark's worker calls importlib.invalidate_caches()
-        # on every task, which re-reads pyspark.zip once per zipimporter;
-        # this daemon leaves the worker none (recipe 8 of
-        # .claude/skills/verify/SKILL.md; ROADMAP.md D8).
-        .config("spark.python.daemon.module", "gibbon_daemon")
     )
-    conf = dict(extra_conf or {})
-    conf["spark.executorEnv.PYTHONPATH"] = _worker_pythonpath(
-        conf.get("spark.executorEnv.PYTHONPATH")
-    )
-    for k, v in conf.items():
+    for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

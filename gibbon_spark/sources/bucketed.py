@@ -129,11 +129,14 @@ def read_bucketed(
     end=None,
 ) -> DataFrame:
     """Read with time-range predicates expressed on the partition column
-    so Catalyst prunes whole buckets before listing row groups."""
+    so Catalyst prunes whole buckets before listing row groups. A bucket
+    is read when its span overlaps [start, end): it starts before
+    ``end`` and ends after ``start``."""
     df = spark.read.parquet(path)
     if start is not None:
-        df = df.filter(F.col("bucket") >= F.date_trunc("hour", F.lit(start).cast("timestamp")) - F.expr(f"interval {BUCKET_WIDTH}"))
-        df = df.filter(F.col("ts") >= F.lit(start).cast("timestamp"))
+        start_ts = F.lit(start).cast("timestamp")
+        df = df.filter(F.col("bucket") > start_ts - F.expr(f"interval {BUCKET_WIDTH}"))
+        df = df.filter(F.col("ts") >= start_ts)
     if end is not None:
         df = df.filter(F.col("bucket") < F.lit(end).cast("timestamp"))
         df = df.filter(F.col("ts") < F.lit(end).cast("timestamp"))
@@ -195,7 +198,8 @@ def read_gorilla_store(
     2038-01-19 and as bigint after; it is written as long."""
     df = spark.read.schema(f"{BLOCK_SCHEMA}, bucket_day long").parquet(path)
     if start_epoch is not None:
-        lo = int(start_epoch) - BLOCK_SECONDS
+        # the block holding start_epoch: the first that ends after it
+        lo = int(start_epoch) - int(start_epoch) % BLOCK_SECONDS
         df = df.filter(F.col("bucket_day") >= lo - lo % DAY)
         df = df.filter(F.col("header_time") >= lo)
     if end_epoch is not None:

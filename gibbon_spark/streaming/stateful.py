@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from gibbon_spark.worker import drop_spark_archives
+
 OUTPUT_SCHEMA = (
     "series_id string, n_total long, sum_value double, min_value double, "
     "max_value double, last_value double, ema double"
@@ -41,6 +43,7 @@ def running_series_stats(
     codec's order-dependent state updates."""
 
     def track(key, pdf_iter, state):
+        drop_spark_archives()
         import pandas as pd
 
         (series_id,) = key

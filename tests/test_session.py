@@ -3,11 +3,10 @@ no JVM; the others run tiny jobs on the shared ``spark`` fixture."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
-from gibbon_spark.session import _WORKER_DIR, _cpus, _driver_mem, _worker_pythonpath
+from gibbon_spark.session import _cpus, _driver_mem, pin_shuffle_partitions
+from gibbon_spark.worker import drop_spark_archives
 
 
 def test_driver_mem_default_is_half_of_host_capped_at_48g():
@@ -26,45 +25,59 @@ def test_cpus_defaults_to_32_and_rejects_unparsable(monkeypatch):
         _cpus()
 
 
-def test_worker_pythonpath_puts_the_daemon_dir_before_the_callers_entries():
-    """A caller's ``spark.executorEnv.PYTHONPATH`` once replaced the
-    daemon module's directory, and every Python task then failed."""
-    sep = os.pathsep
-    assert _worker_pythonpath(None) == _WORKER_DIR
-    assert _worker_pythonpath("") == _WORKER_DIR
-    assert _worker_pythonpath(f"/a{sep}/b") == f"{_WORKER_DIR}{sep}/a{sep}/b"
-    assert _worker_pythonpath(f"/a{sep}{_WORKER_DIR}") == f"{_WORKER_DIR}{sep}/a"
+def test_helper_leaves_workers_no_spark_archive_and_later_stages_run(spark):
+    """In the suite's session (Spark's stock daemon) a worker that ran
+    ``drop_spark_archives`` holds no Spark-archive zipimporter (a stock
+    worker holds 16, each re-read on every task), and keyed and
+    cogrouped Python stages, which import pyspark modules the probe did
+    not, still run afterwards."""
+    import pandas as pd
 
-
-def test_get_spark_workers_import_nothing_from_archives(spark):
-    """A ``get_spark`` worker holds no zipimporter (Spark's stock daemon
-    leaves 16, each re-read on every task) and imports pyspark from a
-    directory install."""
-
-    def probe(batches):
+    def worker_archives() -> dict:
+        """Spark-archive entries on the calling worker's path and among its
+        cached zipimporters."""
+        import re
         import sys
         import zipimport
 
-        import pandas as pd
-        import pyspark
+        spark_archive = re.compile(r"(^|/)(pyspark\.zip|py4j-[^/]*\.zip|spark-core[^/]*\.jar)(/|$)")
+        return {
+            "on_path": sum(bool(spark_archive.search(p)) for p in sys.path),
+            "zipimporters": sum(
+                isinstance(f, zipimport.zipimporter) and bool(spark_archive.search(k))
+                for k, f in sys.path_importer_cache.items()
+            ),
+        }
 
+    def probe(batches):
+        drop_spark_archives()
         for _ in batches:
             pass
-        yield pd.DataFrame(
-            {
-                "zipimporters": [
-                    sum(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values())
-                ],
-                "archive_on_path": [any(p.endswith((".zip", ".jar")) for p in sys.path)],
-                "pyspark_file": [pyspark.__file__],
-            }
-        )
+        yield pd.DataFrame({k: [v] for k, v in worker_archives().items()})
 
-    schema = "zipimporters long, archive_on_path boolean, pyspark_file string"
-    r = spark.range(4, numPartitions=1).mapInPandas(probe, schema).collect()[0]
-    assert r.zipimporters == 0
-    assert not r.archive_on_path
-    assert not any(p.endswith((".zip", ".jar")) for p in r.pyspark_file.split(os.sep)), r.pyspark_file
+    def per_key(key, pdf):
+        drop_spark_archives()
+        state = worker_archives()
+        return pd.DataFrame({"k": [key[0]], "n": [len(pdf)], "zipimporters": [state["zipimporters"]]})
+
+    def per_pair(left, right):
+        drop_spark_archives()
+        return pd.DataFrame({"n_left": [len(left)], "n_right": [len(right)]})
+
+    r = spark.range(4, numPartitions=1).mapInPandas(probe, "on_path long, zipimporters long").collect()[0]
+    assert (r.on_path, r.zipimporters) == (0, 0)
+
+    df = spark.range(12, numPartitions=1).selectExpr("id % 3 AS k", "id")
+    with pin_shuffle_partitions(spark, 1):
+        keyed = df.groupBy("k").applyInPandas(per_key, "k long, n long, zipimporters long").collect()
+        pairs = (
+            df.groupBy("k")
+            .cogroup(spark.range(6, numPartitions=1).selectExpr("id % 3 AS k").groupBy("k"))
+            .applyInPandas(per_pair, "n_left long, n_right long")
+            .collect()
+        )
+    assert sorted((x.k, x.n, x.zipimporters) for x in keyed) == [(0, 4, 0), (1, 4, 0), (2, 4, 0)]
+    assert sorted((x.n_left, x.n_right) for x in pairs) == [(4, 2)] * 3
 
 
 def test_codegen_cache_keeps_a_query_warm_past_100_other_plans(spark):

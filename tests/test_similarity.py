@@ -59,6 +59,24 @@ def test_lsh_recall_vs_brute_force(spark, embeddings):
     assert recall >= 0.35, f"LSH recall {recall:.2f} too low"
 
 
+def test_lsh_planes_ship_as_int8_with_unchanged_codes():
+    """The plane matrix an LSH UDF closes over is int8 (32 KB at 512 x
+    64, not 256 KB as float64), and the codes equal a plain per-plane
+    dot product over ``plane_signs``."""
+    import numpy as np
+
+    signs = similarity._hyperplanes(similarity.NEARDUP_PLANES, 64)
+    assert signs.dtype == np.int8 and signs.nbytes == 512 * 64
+    mat = np.random.default_rng(0).standard_normal((50, 64))
+    mat[0] = 0.0  # every dot product is 0: every bit set
+    planes = similarity.plane_signs(similarity.NUM_PLANES, 64)
+    expected = [
+        sum(1 << p for p, plane in enumerate(planes) if float(np.dot(row, plane)) >= 0) for row in mat
+    ]
+    codes = similarity._bucket_code(mat, similarity._hyperplanes(similarity.NUM_PLANES, 64))
+    assert codes.tolist() == expected and expected[0] == (1 << 16) - 1
+
+
 def test_lsh_bucket_is_deterministic(spark, embeddings):
     a = similarity.with_lsh_bucket(embeddings).select("vec_id", "bucket")
     b = similarity.with_lsh_bucket(embeddings).select("vec_id", "bucket")

@@ -57,6 +57,34 @@ def test_time_range_read_prunes_partitions(spark, store):
     assert ranged.count() == expected
 
 
+def _partitions_read(df) -> int:
+    """Run ``df`` and return how many partition directories its file
+    scan read (the scan's ``numPartitions`` metric)."""
+    df.collect()
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    (scan,) = [leaves.apply(i) for i in range(leaves.size())]
+    return scan.metrics().apply("numPartitions").value()
+
+
+def test_aligned_start_reads_no_bucket_that_ends_at_it(spark, store):
+    """A bucket is read only when it ends after ``start``: a start on a
+    bucket boundary reads no earlier bucket, one second before it does."""
+    from datetime import datetime, timedelta
+    from urllib.parse import unquote
+
+    two_h = timedelta(hours=2)
+    have = {
+        datetime.fromisoformat(unquote(d.split("=", 1)[1]))
+        for d in os.listdir(store)
+        if d.startswith("bucket=")
+    }
+    b = min(t for t in have if t - two_h in have and t + two_h in have)
+    end = str(b + 2 * two_h)
+    assert _partitions_read(bucketed.read_bucketed(spark, store, start=str(b), end=end)) == 2
+    early = str(b - timedelta(seconds=1))
+    assert _partitions_read(bucketed.read_bucketed(spark, store, start=early, end=end)) == 3
+
+
 def test_partition_filter_in_plan(spark, store):
     ranged = bucketed.read_bucketed(spark, store, start="2024-01-10", end="2024-01-11")
     plan = ranged._jdf.queryExecution().executedPlan().toString()
@@ -178,7 +206,7 @@ def test_gorilla_store_range_read_prunes_day_dirs(spark, block_store):
         spark, block_store, start_epoch=lo, end_epoch=hi
     )
     expected = full.filter(
-        (F.col("header_time") >= lo - 7200) & (F.col("header_time") < hi)
+        (F.col("header_time") + 7200 > lo) & (F.col("header_time") < hi)
     )
     assert sorted(map(tuple, ranged.collect())) == sorted(
         map(tuple, expected.collect())
@@ -189,6 +217,25 @@ def test_gorilla_store_range_read_prunes_day_dirs(spark, block_store):
     assert read_files <= 4 < full_files
     plan = ranged._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
+
+
+def test_gorilla_store_aligned_start_reads_no_block_that_ends_at_it(spark, block_store):
+    """A block is read only when it ends after ``start_epoch``: a start on
+    a block boundary reads that block alone, one second before it also
+    the block before; a day-aligned start lists no earlier day."""
+    headers = {r[0] for r in spark.read.parquet(block_store).select("header_time").distinct().collect()}
+    h = min(t for t in headers if t - 7200 in headers)
+
+    def read(start):
+        df = bucketed.read_gorilla_store(spark, block_store, start_epoch=start, end_epoch=h + 7200)
+        return sorted(r[0] for r in df.select("header_time").distinct().collect())
+
+    assert read(h) == [h]
+    assert read(h + 3600) == [h]
+    assert read(h - 1) == [h - 7200, h]
+    day = 1704844800  # 2024-01-10 00:00 UTC
+    ranged = bucketed.read_gorilla_store(spark, block_store, start_epoch=day, end_epoch=day + 7200)
+    assert _partitions_read(ranged) == 1
 
 
 def test_expire_buckets_retention(spark, store):
@@ -251,7 +298,7 @@ def test_gorilla_store_pinned_schema_reads_as_inferred(spark, block_store):
         map(tuple, inferred.select(cols).collect())
     )
     expected = inferred.filter(
-        (F.col("header_time") >= lo - 7200) & (F.col("header_time") < hi)
+        (F.col("header_time") + 7200 > lo) & (F.col("header_time") < hi)
     ).select(cols)
     assert sorted(map(tuple, ranged.collect())) == sorted(
         map(tuple, expected.collect())
