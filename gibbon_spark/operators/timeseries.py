@@ -328,59 +328,60 @@ def _step_seconds(step: str) -> int:
     return int(parts[0]) * _STEP_UNITS[parts[1]]
 
 
-def _slot_grid_join(
+def _slot_grid(
     df: DataFrame,
     series: Sequence[str],
     *,
-    ts: str = "ts",
-    value: str = "value",
-    step: str = "1 hour",
+    ts: str,
+    value: str,
+    step: str,
+    **carry: Column,
 ) -> DataFrame:
-    """Shared grid machinery for gap_fill / interpolate_linear: the full
-    per-series slot grid left-joined with the last observation of each
-    slot. Columns: *series, grid_ts, slot_value."""
-    # Grid slots and observation snapping both floor to epoch-aligned
-    # tumbling slots of ANY step width (same alignment as window(step)).
-    # Plain epoch arithmetic because (a) Spark allows only one window()
-    # expression per projection and (b) an earlier date_trunc version
-    # silently DROPPED observations that fell inside a slot but not on
-    # its truncation unit for steps like "30 minutes".
-    w_sec = _step_seconds(step)
+    """The full slot grid of each series, from its first observed slot to
+    its last, in one per-series ordered pass. Columns: *series,
+    ``grid_ts``, ``slot_value`` (the slot's last sample; null for an
+    empty slot) and one column per ``carry``.
 
-    def slot_of(c: Column) -> Column:
-        epoch = F.unix_timestamp(c)
-        return F.timestamp_seconds(epoch - epoch % w_sec)
-    grid = (
-        df.groupBy(*series)
-        .agg(
-            F.min(ts).alias("_min_ts"),
-            F.max(ts).alias("_max_ts"),
-        )
-        .select(
-            *series,
-            F.explode(
-                F.sequence(
-                    slot_of(F.col("_min_ts")),
-                    slot_of(F.col("_max_ts")),
-                    F.expr(f"interval {step}"),
-                )
-            ).alias("grid_ts"),
-        )
-    )
-    # snap observations to their slot, keep last value per slot
+    Rows snap to epoch-aligned tumbling slots of ANY step width (the
+    alignment of ``window(step)``) by plain epoch arithmetic: an earlier
+    date_trunc version silently DROPPED observations that fell inside a
+    slot but not on its truncation unit for steps like "30 minutes".
+    Then one shuffle on the series key and one sort by (slot, ts). A
+    row whose ``lead(slot)`` differs is its slot's last sample, and that
+    lead is the series' next observed slot, so ``explode(sequence(slot,
+    next - step, step))`` expands each observed slot into itself plus
+    the empty slots before the next one: the grid needs no min/max
+    aggregate, no second scan and no join. A null series key is one
+    series like any other, as in ``groupBy``.
+
+    ``carry`` maps names to window expressions over the observed slots
+    (columns *series, ``_slot`` in epoch seconds, ``_v``), ordered by
+    ``_series_window(series, "_slot")``; that ordering reuses the sort,
+    so it adds no shuffle and no sort. Every grid row takes the value of
+    the observed slot that starts its run.
+    """
+    w_sec = _step_seconds(step)
+    epoch = F.unix_timestamp(F.col(ts))
     snapped = df.select(
         *series,
-        slot_of(F.col(ts)).alias("grid_ts"),
-        F.col(value).alias("_v"),
+        (epoch - epoch % w_sec).alias("_slot"),
         F.col(ts).alias("_ts"),
+        F.col(value).alias("_v"),
     )
-    w_slot = Window.partitionBy(*series, "grid_ts").orderBy(F.col("_ts").desc())
-    slot_last = (
-        snapped.withColumn("_rn", F.row_number().over(w_slot))
-        .filter(F.col("_rn") == 1)
-        .select(*series, "grid_ts", F.col("_v").alias("slot_value"))
+    nxt = F.lead("_slot").over(_series_window(series, "_slot", "_ts"))
+    slots = (
+        snapped.withColumn("_next", nxt)
+        .filter(F.col("_next").isNull() | (F.col("_next") != F.col("_slot")))
+        .withColumns(carry)
     )
-    return grid.join(slot_last, [*series, "grid_ts"], "left")
+    last = F.coalesce(F.col("_next") - w_sec, F.col("_slot"))
+    runs = F.explode(F.sequence("_slot", last, F.lit(w_sec).cast("long")))
+    return slots.select(*series, "_slot", "_v", *carry, runs.alias("_grid")).select(
+        *series,
+        F.timestamp_seconds("_grid").alias("grid_ts"),
+        F.when(F.col("_grid") == F.col("_slot"), F.col("_v")).alias("slot_value"),
+        *carry,
+    )
 
 
 def gap_fill(
@@ -393,22 +394,17 @@ def gap_fill(
 ) -> DataFrame:
     """Regular-grid gap fill with forward fill.
 
-    Per series: build the full grid between min(ts) and max(ts) with
-    ``sequence()`` + ``explode`` (no driver loop — the grid is generated
-    distributed, one row per series in, grid rows out), left-join the
-    observed points, then forward-fill with ``last(value, ignorenulls)``
-    over an unbounded-preceding window. Two shuffles (grid join + window)
-    both on the series key, so AQE can reuse the partitioning.
+    Per series: the full grid between min(ts) and max(ts), one row per
+    ``step`` slot with its last sample as ``slot_value``, and
+    ``filled_value`` = the last non-null ``slot_value`` at or before the
+    slot (a running ``last(ignorenulls)``). The grid is generated
+    distributed (no driver loop) by :func:`_slot_grid`; the fill runs
+    over the observed slots before they expand, in the same sort. One
+    shuffle on the series key and one sort.
     """
-    joined = _slot_grid_join(df, series, ts=ts, value=value, step=step)
-    w_ffill = (
-        Window.partitionBy(*series)
-        .orderBy("grid_ts")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return joined.withColumn(
-        "filled_value", F.last("slot_value", ignorenulls=True).over(w_ffill)
-    )
+    back = _series_window(series, "_slot").rowsBetween(Window.unboundedPreceding, 0)
+    ffill = F.last("_v", ignorenulls=True).over(back)
+    return _slot_grid(df, series, ts=ts, value=value, step=step, filled_value=ffill)
 
 
 def interpolate_linear(
@@ -423,49 +419,41 @@ def interpolate_linear(
     :func:`gap_fill` for signals where holding the last value flat is
     wrong (counters, gauges between sparse scrapes). Empty slots get
     ``v_prev + (v_next − v_prev) · Δt_frac`` from the bracketing
-    observed slots; observed slots pass through unchanged; a missing
-    bracket (before first / after last observation) falls back to the
-    one-sided neighbor.
+    observed slots; observed slots pass through unchanged (one whose
+    last sample is null counts as empty); a missing bracket (before
+    first / after last observation) falls back to the one-sided neighbor.
 
-    Same shuffle profile as gap_fill: grid join + ONE window shuffle.
-    The forward lookup is a running ``last(ignorenulls)`` over a
-    DESCENDING sort, not ``first`` over a (currentRow,
-    unboundedFollowing) frame: Spark's UnboundedFollowing frame
-    re-scans to the partition end for every row — O(n²) per series,
-    measured 24 s vs 1.5 s at sf0.1 on this exact operator. Both
-    directions share the partitioning (one shuffle); the second sort is
-    per-partition."""
-    joined = _slot_grid_join(df, series, ts=ts, value=value, step=step)
-    w_back = (
-        Window.partitionBy(*series)
-        .orderBy("grid_ts")
-        .rowsBetween(Window.unboundedPreceding, 0)
+    Same single shuffle and single sort as gap_fill: both lookups run
+    over the grid's own ordering. The backward one is a running
+    ``last(ignorenulls)``; the forward one is ``lead(...) IGNORE NULLS``,
+    which Spark evaluates in one forward pass (on a 4-core host a
+    200k-row run of nulls took 0.28 s, as a descending running ``last``
+    did), not ``first`` over an
+    unboundedFollowing frame: Spark's UnboundedFollowing frame re-scans
+    to the partition end for every row — O(n²) per series, measured
+    24 s vs 1.5 s at sf0.1 on this operator."""
+    w = _series_window(series, "_slot")
+    back = w.rowsBetween(Window.unboundedPreceding, 0)
+    obs = F.when(F.col("_v").isNotNull(), F.col("_slot"))
+    # PySpark's lead() has no ignoreNulls argument; the SQL form has.
+    nxt = "lead({}) IGNORE NULLS"
+    grid = _slot_grid(
+        df, series, ts=ts, value=value, step=step,
+        _vp=F.last("_v", ignorenulls=True).over(back),
+        _tp=F.last(obs, ignorenulls=True).over(back),
+        _vn=F.expr(nxt.format("_v")).over(w),
+        _tn=F.expr(nxt.format("CASE WHEN _v IS NOT NULL THEN _slot END")).over(w),
     )
-    w_fwd = (
-        Window.partitionBy(*series)
-        .orderBy(F.desc("grid_ts"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    obs_ts = F.when(F.col("slot_value").isNotNull(), F.col("grid_ts"))
-    out = (
-        joined.withColumn("_vp", F.last("slot_value", ignorenulls=True).over(w_back))
-        .withColumn("_tp", F.last(obs_ts, ignorenulls=True).over(w_back))
-        .withColumn("_vn", F.last("slot_value", ignorenulls=True).over(w_fwd))
-        .withColumn("_tn", F.last(obs_ts, ignorenulls=True).over(w_fwd))
-    )
-    frac = (
-        (F.unix_timestamp("grid_ts") - F.unix_timestamp("_tp")).cast("double")
-        / (F.unix_timestamp("_tn") - F.unix_timestamp("_tp")).cast("double")
-    )
+    frac = (F.unix_timestamp("grid_ts") - F.col("_tp")).cast("double") / (
+        F.col("_tn") - F.col("_tp")
+    ).cast("double")
     interp = (
         F.when(F.col("slot_value").isNotNull(), F.col("slot_value"))
         .when(F.col("_vp").isNull(), F.col("_vn"))
         .when(F.col("_vn").isNull(), F.col("_vp"))
         .otherwise(F.col("_vp") + (F.col("_vn") - F.col("_vp")) * frac)
     )
-    return out.withColumn("interp_value", interp).select(
-        *series, "grid_ts", "slot_value", "interp_value"
-    )
+    return grid.select(*series, "grid_ts", "slot_value", interp.alias("interp_value"))
 
 
 # ---------------------------------------------------------------------------

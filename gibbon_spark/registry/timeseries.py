@@ -386,8 +386,8 @@ def q_ts_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The hourly slot grid of every series with the last sample of each slot:
-# the oracle side of operators.timeseries._slot_grid_join, which
-# ts_gap_fill and ts_interpolate_linear share.
+# the oracle side of operators.timeseries._slot_grid, which ts_gap_fill
+# and ts_interpolate_linear share.
 _SLOT_GRID_CTE = """
     WITH b AS (
       SELECT user_id, date_trunc('hour', min(ts)) AS t0,
@@ -419,8 +419,11 @@ _SLOT_GRID_CTE = """
 )
 def q_ts_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly grid per series with forward fill — grid generated
-    distributed via sequence()+explode (no driver loop), fill via
-    last(ignorenulls) window."""
+    distributed via sequence()+explode (no driver loop) in one pass over
+    each series, fill via last(ignorenulls) window. The oracle's grid
+    equi-join (shared with ts_interpolate_linear) drops the observations
+    of a null user_id, which the Spark grid keeps; no testdata table has
+    a null user_id."""
     (events,) = _prep(spark, sf_dir, "events")
     out = ts_ops.gap_fill(events, ["user_id"], step="1 hour")
     return out.select("user_id", "grid_ts", "filled_value")
@@ -823,7 +826,7 @@ def q_ts_downsample_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly grid per series with LINEAR interpolation of empty slots
     (operators.timeseries.interpolate_linear) — gap_fill's sibling for
-    gauge-type signals. Grid join + one window shuffle; the interpolation
+    gauge-type signals. One shuffle on the series key; the interpolation
     itself is pure scalar double math, so the oracle replays it exactly
     (ratios of integral second deltas are identical doubles on both
     engines)."""

@@ -35,6 +35,9 @@ QUERIES = [
     "table_diff_checksum",
     "text_rake_keywords",
     "agg_mad_outliers",
+    # one-pass slot grid: last sample per slot, running fills both ways
+    "ts_gap_fill",
+    "ts_interpolate_linear",
 ]
 
 

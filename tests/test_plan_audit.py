@@ -101,3 +101,15 @@ def test_plan_has_no_antipatterns(spark, name):
             "task) — either partition it, use the two-level decomposition "
             "(operators/ranking.py), or allowlist with a bounded-frame argument"
         )
+
+
+@pytest.mark.parametrize("name", ["ts_gap_fill", "ts_interpolate_linear"])
+def test_slot_grid_is_one_pass(spark, name):
+    """The slot grid (operators/timeseries.py::_slot_grid) reads events
+    once and shuffles once on the series key: no grid join."""
+    df = entrymod.queries()[name](spark, SF_SMALL)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bExchange hashpartitioning\b", plan)) == 1, plan
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    assert "BroadcastExchange" not in plan, plan
+    assert len(re.findall(r"FileScan parquet .*/events\.parquet\]", plan)) == 1, plan

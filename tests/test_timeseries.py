@@ -309,6 +309,61 @@ def test_interpolate_linear_known_values(spark):
     assert out == {0: 10.0, 1: 20.0, 2: 30.0, 3: 40.0}
 
 
+# Two key columns, 30-minute slots. Per series: (minute, value) samples
+# and the expected grid rows (slot minute, slot_value, filled, interp).
+_SLOT_GRID_CASES = {
+    # slot 0:30 is observed, but its last sample is null: forward fill
+    # skips it and interpolation treats it as empty (2 → 10 over 2 h).
+    ("a", 1): (
+        [(5, 2.5), (20, 2.0), (40, 5.0), (50, None), (130, 10.0)],
+        [(0, 2.0, 2.0, 2.0), (30, None, 2.0, 4.0), (60, None, 2.0, 6.0),
+         (90, None, 2.0, 8.0), (120, 10.0, 10.0, 10.0)],
+    ),
+    ("a", 2): ([(45, 3.0)], [(30, 3.0, 3.0, 3.0)]),
+    # a null last sample after the last value: one-sided fallback
+    ("b", 1): ([(0, 4.0), (35, None)], [(0, 4.0, 4.0, 4.0), (30, None, 4.0, 4.0)]),
+    # a null series key is one series like any other
+    (None, 1): (
+        [(10, 7.0), (75, 9.0)],
+        [(0, 7.0, 7.0, 7.0), (30, None, 7.0, 8.0), (60, 9.0, 9.0, 9.0)],
+    ),
+}
+
+
+def _slot_grid_rows(spark, keys):
+    from gibbon_spark.operators.timeseries import interpolate_linear
+
+    df = spark.createDataFrame(
+        [(*k, _ts(60 * m), v) for k in keys for m, v in _SLOT_GRID_CASES[k][0]],
+        "k1 string, k2 int, ts timestamp, value double",
+    )
+    got, want = {}, {}
+    for i, (op, col) in enumerate(
+        [(gap_fill, "filled_value"), (interpolate_linear, "interp_value")]
+    ):
+        got[col] = {
+            (r.k1, r.k2, r.grid_ts): (r.slot_value, r[col])
+            for r in op(df, ["k1", "k2"], step="30 minutes").collect()
+        }
+        want[col] = {
+            (*k, _ts(60 * m)): (slot_value, expected[i])
+            for k in keys
+            for m, slot_value, *expected in _SLOT_GRID_CASES[k][1]
+        }
+    return got, want
+
+
+def test_slot_grid_null_samples_two_keys(spark):
+    got, want = _slot_grid_rows(spark, [("a", 1), ("a", 2), ("b", 1)])
+    assert got == want
+
+
+def test_slot_grid_null_series_key(spark):
+    """The grid of a null-key series keeps its observations."""
+    got, want = _slot_grid_rows(spark, [("a", 1), (None, 1)])
+    assert got == want
+
+
 def test_asof_join_forward_takes_earliest_at_or_after(spark):
     left = spark.createDataFrame(
         [("a", _ts(100), 1.0), ("a", _ts(200), 2.0), ("b", _ts(100), 3.0)],
