@@ -10,9 +10,10 @@ the min of the two passes. No query is ever run a third time: host CPU
 steal moves wall time 20-40% between runs a minute apart, and the CPU
 figure beside it is the steadier reading.
 
-Each query is forced end-to-end with the noop sink (full computation, no
-driver collect, no disk write), so the number measures the distributed
-plan, not driver materialization. stdout carries:
+Each query runs through ``gibbon_spark.registry.run`` into the noop sink
+(full computation, no driver collect, no disk write), so the number
+measures the build and the distributed plan, not driver
+materialization. stdout carries:
 
 1. the detail line: ``value`` (total of the per-query min walls),
    ``queries`` (wall s), ``queries_cpu_s``, ``cpu_total_s``,
@@ -105,20 +106,11 @@ def main() -> None:
         canon = _read_detail(os.path.join(REPO, "BENCH_DETAIL.json"))
 
     import __spark_entry__ as entrymod
+    from gibbon_spark.registry import run, warm
 
     spark = get_spark("gibbon_spark_bench")
-    qs = entrymod.queries()
-
-    # warm the JVM + parquet footers so per-query numbers measure the plan
-    qs["ts_summary"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # warm the Python/Arrow worker pool (one worker per core) so the first
-    # pandas-UDF query isn't charged ~2s of worker spawn
-    def _identity(batches):
-        yield from batches
-
-    spark.range(0, 64, 1, 64).mapInPandas(_identity, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    names = list(entrymod.queries())
+    warm(spark, sf_dir)
 
     # ---- host-speed calibration constant (round-4 verdict ask #5) ------
     # A fixed synthetic workload measured alongside every bench run: a
@@ -178,7 +170,6 @@ def main() -> None:
     cpu: dict[str, float] = {}
     pass_totals: list[float] = []
     sample_s = 0.0
-    names = list(qs)
     for p in range(N_PASSES):
         pass_total = 0.0
         for i, name in enumerate(names):
@@ -190,14 +181,12 @@ def main() -> None:
                 spark.sparkContext._jvm.System.gc()
             if p == 0 and i == len(names) // 2:
                 cal_probes.append(_calibrate())  # mid-run probe
-            s0 = time.time()
+            s0 = time.perf_counter()
             before = thread_ticks()
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            t1 = time.time()
+            _, wall = run(spark, name, sf_dir, sink="noop")
             cpu_s = round(cpu_seconds_between(before, thread_ticks()), 2)
-            sample_s += (t0 - s0) + (time.time() - t1)
-            wall = round(t1 - t0, 4)
+            sample_s += time.perf_counter() - s0 - wall
+            wall = round(wall, 4)
             pass_total += wall
             timings[name] = min(timings.get(name, wall), wall)
             cpu[name] = min(cpu.get(name, cpu_s), cpu_s)
@@ -235,28 +224,26 @@ def main() -> None:
 
     # ---- cross-scale self-diagnosis (round-10 verdict ask #6): a run at
     # a non-canonical SF publishes its per-query ratio vs the committed
-    # sf0.1 canonical detail and flags ratios above the per-query work
-    # model (linear unless WORK_MODEL says otherwise, x1.3 slack, 5s
-    # floor on the larger time so startup noise can't flag) — so
-    # cross-scale drift lands in the artifact itself instead of waiting
-    # for a sweep to trip over it.
+    # sf0.1 canonical detail and flags the queries whose time grew faster
+    # than scale_gate's growth rule allows from the smaller sf to the
+    # larger, whichever side this run is on; a flag's ``ratio`` is that
+    # growth (larger-sf time over smaller-sf time).
     vs_canonical: dict[str, float] = {}
     cross_scale_flags: dict[str, dict] = {}
     if canon is not None:
-        from tools.scale_gate import ABS_FLOOR_S, growth_limit
+        from tools.scale_gate import growth_limit, super_linear
 
-        data_growth = sf / 0.1
+        growth = max(sf, 0.1) / min(sf, 0.1)
         for name, t in timings.items():
             ct = canon["queries"].get(name)
             if not ct or ct <= 0:
                 continue
-            ratio = round(t / ct, 2)
-            vs_canonical[name] = ratio
-            limit = growth_limit(name, data_growth)
-            if ratio > limit and max(t, ct) > ABS_FLOOR_S:
+            vs_canonical[name] = round(t / ct, 2)
+            small, big = (t, ct) if sf < 0.1 else (ct, t)
+            if super_linear(name, small, big, growth):
                 cross_scale_flags[name] = {
-                    "ratio": ratio,
-                    "allowed": round(limit, 1),
+                    "ratio": round(big / small, 2),
+                    "allowed": round(growth_limit(name, growth), 1),
                     "sf_s": t,
                     "canon_s": ct,
                 }

@@ -22,15 +22,25 @@ holds the registry machinery and imports all seven, so importing the
 package registers every query. Only ``timeseries`` and ``codec`` restate
 operators of the reference codec library (johshoff/gibbon); the rest is
 engine surface beyond it (SURVEY.md §2.2).
+
+A builder returns a lazy frame. ``run`` is the one place a harness turns
+a registry query into a Spark action: it builds the query, forces it
+with the noop sink (full computation, nothing collected) or collects it
+to pandas, and returns the frame with the wall seconds of build and
+action together. ``warm`` is the warm-up every timing harness runs
+first. Only the plan tools and the tests call a builder directly.
 """
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from gibbon_spark.sources.tables import load_table
+from gibbon_spark.worker import drop_spark_archives
 
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
@@ -127,6 +137,43 @@ def queries() -> dict[str, SparkQuery]:
 
 def oracle_sql() -> dict[str, str]:
     return dict(_ORACLES)
+
+
+def run(
+    spark: SparkSession, name: str, sf_dir: str, *, sink: str
+) -> tuple[pd.DataFrame | None, float]:
+    """Build query ``name`` over the tables in ``sf_dir`` and run it into
+    ``sink``: ``"noop"`` computes the whole result and discards it,
+    ``"pandas"`` collects it to the driver. Returns the pandas frame
+    (``None`` for noop) and the wall seconds of build and action
+    together. An unknown name raises ``KeyError``, an unknown sink
+    ``ValueError``."""
+    if sink not in ("noop", "pandas"):
+        raise ValueError(f"sink must be 'noop' or 'pandas', got {sink!r}")
+    build = _QUERIES[name]
+    t0 = time.perf_counter()
+    df = build(spark, sf_dir)
+    if sink == "noop":
+        df.write.format("noop").mode("overwrite").save()
+        pdf = None
+    else:
+        pdf = df.toPandas()
+    return pdf, time.perf_counter() - t0
+
+
+def warm(spark: SparkSession, sf_dir: str) -> None:
+    """Warm the JVM and the parquet footers of ``sf_dir`` with one
+    ``ts_summary`` run, then the Python worker pool with 64 one-row
+    tasks, so that a harness's first timed query pays neither."""
+    run(spark, "ts_summary", sf_dir, sink="noop")
+
+    def _identity(batches):
+        drop_spark_archives()
+        yield from batches
+
+    spark.range(0, 64, 1, 64).mapInPandas(_identity, "id long").write.format(
+        "noop"
+    ).mode("overwrite").save()
 
 
 def _prep(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:

@@ -23,13 +23,18 @@ import os
 import subprocess
 import sys
 
+import pandas as pd
+import pytest
+
 import __spark_entry__ as entrymod
 from gibbon_spark.registry import (
     ROTATION_ROUND,
     ROTATION_SLOTS,
     SENTINELS,
     priority_window,
+    run,
 )
+from tests.conftest import SF_SMALL
 
 # Registered query count as of round 9: 231 queries, 229 oracle-backed
 # (228 from round 8 + the sim_topk_ivf conversion — its codebook now
@@ -183,3 +188,22 @@ def test_registry_modules_import_one_way_and_own_their_privates():
             for name in names:
                 if name.startswith("_"):
                     assert name in defined[src], f"{mod} borrows {src}.{name}"
+
+
+def test_run_collects_what_the_builder_returns(spark):
+    pdf, wall = run(spark, "ts_summary", SF_SMALL, sink="pandas")
+    direct = entrymod.queries()["ts_summary"](spark, SF_SMALL).toPandas()
+    pd.testing.assert_frame_equal(pdf, direct)
+    assert wall > 0
+
+
+def test_run_noop_returns_no_frame_and_its_wall_time(spark):
+    pdf, wall = run(spark, "ts_summary", SF_SMALL, sink="noop")
+    assert pdf is None and wall > 0
+
+
+def test_run_rejects_an_unknown_name_or_sink(spark):
+    with pytest.raises(KeyError, match="no_such_query"):
+        run(spark, "no_such_query", SF_SMALL, sink="noop")
+    with pytest.raises(ValueError, match="parquet"):
+        run(spark, "ts_summary", SF_SMALL, sink="parquet")

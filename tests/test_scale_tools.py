@@ -1,6 +1,8 @@
 """Spark-free checks for the scale-gate tooling: the data generator
-must be deterministic and schema-faithful, and the plan-lint window
-parser must classify Window plan lines correctly."""
+must be deterministic and schema-faithful, the plan-lint window parser
+must classify Window plan lines correctly, and the growth rule must
+judge the smaller and the larger data point the same way whichever
+side a run was on."""
 
 from __future__ import annotations
 
@@ -11,6 +13,7 @@ import pyarrow.parquet as pq
 
 from tools.explain_audit import _toplevel_groups, count_partitionless_windows
 from tools.gen_scale_data import gen_all
+from tools.scale_gate import SF1, super_linear
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -64,3 +67,24 @@ def test_window_line_classification():
     assert count_partitionless_windows(partitioned_unordered) == 0
     assert count_partitionless_windows("\n".join([partitionless, partitioned])) == 1
     assert _toplevel_groups("[a], [b, [c]], [d]") == ["a", "b, [c]", "d"]
+
+
+def test_growth_rule_orders_the_two_points():
+    # a run 2.9x faster on a tenth of the data is 2.9x growth, not 0.34x
+    assert not super_linear("dedup_containment", 6.0, 17.4, 10.0)
+    # slower on the smaller data is not growth at all
+    assert not super_linear("q1_pricing_summary", 17.4, 6.0, 10.0)
+    # linear queries: 13x growth passes, past it flags, under the floor never
+    assert not super_linear("q1_pricing_summary", 1.0, 12.9, 10.0)
+    assert super_linear("q1_pricing_summary", 1.0, 13.1, 10.0)
+    assert not super_linear("q1_pricing_summary", 0.1, 4.9, 10.0)
+
+
+def test_growth_rule_work_model_and_ceiling():
+    # a ^2 work model allows 1.3 x 10^2 = 130x where a linear query gets 13x
+    assert not super_linear("ts_range_join", 0.2, 20.0, 10.0)
+    assert super_linear("ts_range_join", 0.1, 20.0, 10.0)
+    assert super_linear("q1_pricing_summary", 0.2, 20.0, 10.0)
+    # the absolute ceiling binds at its own sf only
+    assert super_linear("ts_range_join", 1.0, 31.0, 10.0, SF1)
+    assert not super_linear("ts_range_join", 1.0, 31.0, 10.0)

@@ -120,18 +120,18 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
+    from gibbon_spark.registry import run
     from gibbon_spark.session import get_spark
 
     spark = get_spark("oracle_check")
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    oracles = entrymod.oracle_sql()
     n_pass = n_fail = n_rows_only = 0
-    for name, fn in qs.items():
+    for name in entrymod.queries():
         if only and name not in only:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            spark_pdf = sdf.toPandas()
+            spark_pdf, _ = run(spark, name, sf_dir, sink="pandas")
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1

@@ -54,14 +54,15 @@ def main() -> int:
     if rest:
         sf_dir = rest[0]
 
+    from gibbon_spark.registry import run
     from gibbon_spark.session import get_spark
 
     spark = get_spark("gibbon_run_query")
-    df = qs[name](spark, sf_dir)
     if explain:
-        df.explain("formatted")
-    df.show(limit, truncate=60)
-    print(f"-- {name} on {sf_dir}")
+        qs[name](spark, sf_dir).explain("formatted")  # a plan, no action
+    pdf, wall = run(spark, name, sf_dir, sink="pandas")
+    print(pdf.head(limit).to_string(max_colwidth=60))
+    print(f"-- {name} on {sf_dir}: {len(pdf)} rows in {wall:.2f} s")
     return 0
 
 

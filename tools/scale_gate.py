@@ -6,15 +6,16 @@ For every registered query this tool:
 1. verifies the generated scale data (tools/gen_scale_data.py) has
    schemas identical to the driver's testdata (column names + arrow
    types + order),
-2. times the query end-to-end (bench.py's noop-sink protocol — full
-   distributed computation, no driver collect) at sf0.1 (driver
-   testdata) and sf1 (generated, 10x the data), interleaved per query
-   so host noise hits both points of a ratio equally,
-3. flags any query whose cost grows SUPER-LINEARLY: t_sf1 > 1.3 x 10 x
-   t_sf0.1 with an absolute floor (t_sf1 > 5 s) so fixed-overhead
-   queries (0.2 s -> 0.9 s) don't false-positive; flagged queries are
-   re-measured once (min of runs — re-measuring the plan, not the
-   noisy neighbor, same protocol as bench.py),
+2. times the query end-to-end (``gibbon_spark.registry.run`` into the
+   noop sink, as bench.py does — full distributed computation, no
+   driver collect) at sf0.1 (driver testdata) and sf1 (generated, 10x
+   the data), interleaved per query so host noise hits both points of a
+   ratio equally,
+3. flags any query whose cost grows SUPER-LINEARLY (``super_linear``:
+   t_sf1 > 1.3 x 10 x t_sf0.1 with an absolute floor, t_sf1 > 5 s, so
+   fixed-overhead queries (0.2 s -> 0.9 s) don't false-positive);
+   flagged queries are re-measured once (min of runs — re-measuring the
+   plan, not the noisy neighbor),
 4. optionally repeats the top-N most expensive queries at sf3 for a
    third growth point (3x over sf1, threshold 1.3 x 3),
 5. writes SCALE.md (the committed evidence table) and
@@ -33,11 +34,11 @@ Usage:
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import re
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -45,6 +46,7 @@ sys.path.insert(0, REPO)
 SF01 = "/root/testdata/sf0.1"
 SF1 = os.path.join(REPO, "scaledata", "sf1")
 SF3 = os.path.join(REPO, "scaledata", "sf3")
+SF10 = os.path.join(REPO, "scaledata", "sf10")
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -52,6 +54,7 @@ TABLES = (
 
 GROWTH_01_TO_1 = 10.0
 GROWTH_1_TO_3 = 3.0
+GROWTH_3_TO_10 = 10.0 / 3.0
 SLACK = 1.3  # judge-specified: flag growth > 1.3x the data-growth ratio
 ABS_FLOOR_S = 5.0  # below this, timing is overhead/noise, not a scale signal
 
@@ -94,7 +97,6 @@ WORK_MODEL = {
         "pair-irreducible (every true pair must be emitted)",
     ),
 }
-QUADRATIC_BY_CONTRACT = WORK_MODEL  # report helper iterates this
 
 # A ^2 allowance is 130x on the 10x sf0.1->sf1 step — wide enough to
 # hide a genuine plan regression inside the excused query. Secondary
@@ -116,11 +118,18 @@ def growth_limit(name: str, data_growth: float) -> float:
     return SLACK * data_growth**exp
 
 
-def over_ceiling(name: str, sf_dir: str, t: float) -> bool:
-    """Secondary absolute-time gate for WORK_MODEL queries (see
-    ABS_CEILING_S): catches a regression the wide ^2 ratio allowance
-    would excuse."""
-    return t > ABS_CEILING_S.get(name, {}).get(sf_dir, float("inf"))
+def super_linear(
+    name: str, t_small: float, t_big: float, growth: float, sf_dir: str | None = None
+) -> bool:
+    """The one growth rule: ``t_small`` and ``t_big`` are one query's
+    times on the smaller and the larger data, ``growth`` the data ratio
+    between them (> 1). Flags a larger time over the floor that grew
+    past the query's work model, or a WORK_MODEL query over its absolute
+    ceiling at ``sf_dir`` (ABS_CEILING_S: catches a regression the wide
+    ^2 allowance would excuse)."""
+    return (t_big > ABS_FLOOR_S and t_big > growth_limit(name, growth) * t_small) or (
+        t_big > ABS_CEILING_S.get(name, {}).get(sf_dir, float("inf"))
+    )
 
 
 def check_schemas() -> None:
@@ -133,26 +142,41 @@ def check_schemas() -> None:
     print("schema parity: generated sf1 tables identical to driver testdata")
 
 
-def run_once(fn, spark, sf_dir: str) -> float:
-    # Measurement hygiene: a long-lived gate session otherwise carries
-    # dead state from earlier queries into later timings (leaked caches,
-    # finished streaming memory-sink tables holding millions of rows) —
-    # measured as 2-7x inflation of later sf3 runs before this existed.
-    # Queries manage their own caches within a run, so clearing between
-    # runs only removes leaks, never live state. (No temp-view sweep is
-    # needed: replays pin their output through materialize(), see
-    # gibbon_spark/streaming/replay.py.)
-    spark.catalog.clearCache()
-    # localCheckpoint blocks (iterative queries: CC, k-means, pagerank)
-    # are freed by the JVM ContextCleaner only after the Python-side
-    # DataFrame is garbage-collected — force that promptly so a prior
-    # query's pinned blocks don't inflate this run's memory pressure
-    import gc
+def time_pairs(
+    spark, names, small: str, big: str, growth: float
+) -> tuple[dict[str, float], dict[str, float]]:
+    """Time each query at ``small`` then at ``big``, back to back so host
+    noise hits both points of a ratio alike; a pair that super_linear
+    flags is re-measured once, keeping the min of each point."""
+    from gibbon_spark.registry import run
 
-    gc.collect()
-    t0 = time.time()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return round(time.time() - t0, 4)
+    t: dict[str, dict[str, float]] = {small: {}, big: {}}
+    todo = list(names)
+    for attempt in range(2):
+        for i, name in enumerate(todo):
+            if attempt:
+                print(f"re-measuring flagged {name} ...")
+            # a freshly collected driver heap for every pair, so one
+            # query's garbage can't inflate the next query's ratio
+            spark.sparkContext._jvm.System.gc()
+            for sf_dir in (small, big):
+                # Measurement hygiene: a long-lived gate session otherwise
+                # carries dead state from earlier queries into later
+                # timings (leaked caches, finished streaming memory-sink
+                # tables holding millions of rows), measured as 2-7x
+                # inflation of later sf3 runs before this existed. Queries
+                # manage their own caches within a run, so this removes
+                # only leaks (no temp-view sweep is needed: replays pin
+                # their output through materialize()). gc.collect() lets
+                # the JVM ContextCleaner free a prior query's
+                # localCheckpoint blocks promptly.
+                spark.catalog.clearCache()
+                gc.collect()
+                wall = round(run(spark, name, sf_dir, sink="noop")[1], 4)
+                t[sf_dir][name] = min(t[sf_dir].get(name, wall), wall)
+            print(f"[{i+1}/{len(todo)}] {name}: {t[small][name]}s -> {t[big][name]}s")
+        todo = [n for n in todo if super_linear(n, t[small][n], t[big][n], growth, big)]
+    return t[small], t[big]
 
 
 def _oracle_summary(fname: str = "SCALE_ORACLE_SF1.txt") -> str:
@@ -168,20 +192,21 @@ def _oracle_summary(fname: str = "SCALE_ORACLE_SF1.txt") -> str:
     return "\n".join(lines)
 
 
+def flagged(t_small: dict, t_big: dict, growth: float, sf_dir: str) -> list[str]:
+    """The queries of ``t_big`` that super_linear flags against ``t_small``."""
+    return sorted(
+        n for n in t_big if n in t_small and super_linear(n, t_small[n], t_big[n], growth, sf_dir)
+    )
+
+
 def report_only() -> int:
     """Rewrite SCALE.md from SCALE_TIMINGS.json (+ the captured sf1
     oracle output, if present) without re-timing anything."""
     with open(os.path.join(REPO, "SCALE_TIMINGS.json")) as f:
         d = json.load(f)
     t01, t1, t3 = d["sf0.1"], d["sf1"], d.get("sf3", {})
-    super_linear = d.get("super_linear", [])
-    super_linear_3 = sorted(
-        n
-        for n in t3
-        if (t3[n] > ABS_FLOOR_S and t3[n] > growth_limit(n, GROWTH_1_TO_3) * t1[n])
-        or over_ceiling(n, SF3, t3[n])
-    )
-    write_report(t01, t1, t3, super_linear, super_linear_3, _oracle_summary())
+    super_linear_3 = flagged(t1, t3, GROWTH_1_TO_3, SF3)
+    write_report(t01, t1, t3, d.get("super_linear", []), super_linear_3, _oracle_summary())
     return 0
 
 
@@ -202,64 +227,23 @@ def main() -> int:
     check_schemas()
 
     import __spark_entry__ as entrymod
+    from gibbon_spark.registry import run, warm
     from gibbon_spark.session import get_spark
 
     spark = get_spark("scale_gate")
-    qs = {
-        n: f for n, f in entrymod.queries().items() if not only or n in only
-    }
-
-    # warm JVM/parquet footers + the Arrow worker pool (bench.py protocol)
-    entrymod.queries()["ts_summary"](spark, SF01).write.format("noop").mode(
-        "overwrite"
-    ).save()
-
-    def _identity(batches):
-        yield from batches
-
-    spark.range(0, 64, 1, 64).mapInPandas(_identity, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    t01: dict[str, float] = {}
-    t1: dict[str, float] = {}
-    for i, (name, fn) in enumerate(qs.items()):
-        if i % 10 == 9:
-            spark.sparkContext._jvm.System.gc()
-        t01[name] = run_once(fn, spark, SF01)
-        t1[name] = run_once(fn, spark, SF1)
-        print(f"[{i+1}/{len(qs)}] {name}: sf0.1={t01[name]}s sf1={t1[name]}s")
-
-    def flagged(name: str) -> bool:
-        return (
-            t1[name] > ABS_FLOOR_S
-            and t1[name] > growth_limit(name, GROWTH_01_TO_1) * t01[name]
-        ) or over_ceiling(name, SF1, t1[name])
-
-    # confirm pass: re-measure both points of any flagged ratio, keep min
-    for name in [n for n in qs if flagged(n)]:
-        print(f"re-measuring flagged {name} ...")
-        t01[name] = min(t01[name], run_once(qs[name], spark, SF01))
-        t1[name] = min(t1[name], run_once(qs[name], spark, SF1))
+    names = [n for n in entrymod.queries() if not only or n in only]
+    warm(spark, SF01)
+    t01, t1 = time_pairs(spark, names, SF01, SF1, GROWTH_01_TO_1)
 
     t3: dict[str, float] = {}
     if sf3_top and os.path.isdir(SF3):
-        top = sorted(qs, key=lambda n: -t1[n])[:sf3_top]
-        for name in top:
-            # the sf3 runs are the most memory-hungry — give each a
-            # freshly-collected heap so one query's garbage can't
-            # inflate the next query's ratio
+        for name in sorted(names, key=lambda n: -t1[n])[:sf3_top]:
+            # time_pairs' hygiene: the sf3 runs are the most memory-hungry
             spark.sparkContext._jvm.System.gc()
-            t3[name] = run_once(qs[name], spark, SF3)
+            spark.catalog.clearCache()
+            gc.collect()
+            t3[name] = round(run(spark, name, SF3, sink="noop")[1], 4)
             print(f"sf3 {name}: {t3[name]}s (sf1 {t1[name]}s)")
-
-    super_linear = sorted(n for n in qs if flagged(n))
-    super_linear_3 = sorted(
-        n
-        for n in t3
-        if (t3[n] > ABS_FLOOR_S and t3[n] > growth_limit(n, GROWTH_1_TO_3) * t1[n])
-        or over_ceiling(n, SF3, t3[n])
-    )
 
     # subset runs MERGE into the standing timings file (so a post-fix
     # re-measure of a few queries updates their rows without losing the
@@ -271,37 +255,24 @@ def main() -> int:
         prev["sf0.1"].update(t01)
         prev["sf1"].update(t1)
         prev.setdefault("sf3", {}).update(t3)
-        t01, t1 = prev["sf0.1"], prev["sf1"]
-        t3 = prev["sf3"]
-        super_linear = sorted(
-            n
-            for n in t1
-            if n in t01
-            and ((t1[n] > ABS_FLOOR_S
-                  and t1[n] > growth_limit(n, GROWTH_01_TO_1) * t01[n])
-                 or over_ceiling(n, SF1, t1[n]))
-        )
-        super_linear_3 = sorted(
-            n
-            for n in t3
-            if (t3[n] > ABS_FLOOR_S and t3[n] > growth_limit(n, GROWTH_1_TO_3) * t1[n])
-            or over_ceiling(n, SF3, t3[n])
-        )
+        t01, t1, t3 = prev["sf0.1"], prev["sf1"], prev["sf3"]
+    super_linear_1 = flagged(t01, t1, GROWTH_01_TO_1, SF1)
+    super_linear_3 = flagged(t1, t3, GROWTH_1_TO_3, SF3)
     with open(path, "w") as f:
         json.dump(
-            {"sf0.1": t01, "sf1": t1, "sf3": t3, "super_linear": super_linear},
+            {"sf0.1": t01, "sf1": t1, "sf3": t3, "super_linear": super_linear_1},
             f,
             indent=1,
             sort_keys=True,
         )
 
-    write_report(t01, t1, t3, super_linear, super_linear_3, _oracle_summary())
+    write_report(t01, t1, t3, super_linear_1, super_linear_3, _oracle_summary())
     print(
-        f"\n{len(super_linear)} super-linear of {len(qs)} "
+        f"\n{len(super_linear_1)} super-linear of {len(names)} "
         f"(sf1 threshold {SLACK}x{GROWTH_01_TO_1:g}x); "
         f"{len(super_linear_3)} super-linear at sf3"
     )
-    return 1 if super_linear or super_linear_3 else 0
+    return 1 if super_linear_1 or super_linear_3 else 0
 
 
 def write_report(t01, t1, t3, super_linear, super_linear_3, oracle_summary) -> None:
@@ -399,23 +370,62 @@ and their sf3 Spark runs are timed flag-free above:
 """
     with open(os.path.join(REPO, "SCALE.md"), "w") as f:
         f.write(md)
-    # re-append the sf10 octave section (maintained by tools/
-    # sf10_octave.py) if its timings exist — a full rewrite here must
-    # not silently drop that evidence
-    try:
-        with open(os.path.join(REPO, "SCALE_TIMINGS.json")) as f:
-            timings = json.load(f)
-        if timings.get("sf10"):
-            import sf10_octave
-
-            sf10_octave._write_section(
-                sorted(timings["sf10"]),
-                timings["sf3_at_octave"],
-                timings["sf10"],
-            )
-    except Exception as e:  # noqa: BLE001
-        print(f"sf10 section re-append skipped: {e}")
+    # a full rewrite must not drop the sf10 octave section
+    # (tools/sf10_octave.py measures it)
+    with open(os.path.join(REPO, "SCALE_TIMINGS.json")) as f:
+        timings = json.load(f)
+    if timings.get("sf10"):
+        write_sf10_section(timings["sf3_at_octave"], timings["sf10"])
     print("wrote SCALE.md + SCALE_TIMINGS.json")
+
+
+def write_sf10_section(t3: dict, t10: dict) -> list[str]:
+    """Append, or replace, SCALE.md's "## sf10 octave" section for the
+    queries timed in ``t10``; returns the flagged ones."""
+    flags = flagged(t3, t10, GROWTH_3_TO_10, SF10)
+    rows = []
+    for name in sorted(t10, key=lambda n: -t10[n]):
+        ratio = t10[name] / t3[name] if t3[name] > 0 else float("inf")
+        verdict = "**SUPER-LINEAR@sf10**" if name in flags else "ok"
+        if name in WORK_MODEL:
+            verdict += " (work-model gate: 1.3 x growth^2)"
+        rows.append(
+            f"| {name} | {t3[name]:.2f} | {t10[name]:.2f} | {ratio:.1f}x "
+            f"| {verdict} |"
+        )
+    section = f"""## sf10 octave (top-30 by sf3 time + every >3.0x sf3 grower)
+
+Produced by `python tools/sf10_octave.py` — both points of each ratio
+re-measured back-to-back in one session. Round 7 covered the top-10 +
+>3.0x growers; round 8 extended to ranks 11-30 by sf3 time (verdict
+ask #5). Data growth sf3 -> sf10 =
+3.33x; gate: t(sf10) > {SLACK} x 3.33 x t(sf3) and t(sf10) > {ABS_FLOOR_S:g} s
+(work-model queries: {SLACK} x 3.33^2). A benign amortization grower
+converges toward the data ratio here; an emerging quadratic widens
+past 11x. Flags are settled by the interleaved 3-rep protocol before
+being accepted (round 8: q21_sole_late_supplier first read 4.6x cold,
+settled at 2.61x warm — min 8.58 s sf10 vs 3.29 s sf3;
+ts_interpolate_linear first read 7.5x cold, settled at 3.1x).
+
+- Queries timed at sf10: **{len(t10)}**
+- Super-linear at sf10: **{len(flags)}**{' — ' + ', '.join(flags) if flags else ''}
+
+| query | sf3 s | sf10 s | x3.33 growth | verdict |
+|---|---|---|---|---|
+{chr(10).join(rows)}
+"""
+    md_path = os.path.join(REPO, "SCALE.md")
+    with open(md_path) as f:
+        md = f.read()
+    marker = "## sf10 octave"
+    if marker in md:
+        md = md[: md.index(marker)].rstrip() + "\n\n" + section
+    else:
+        md = md.rstrip() + "\n\n" + section
+    with open(md_path, "w") as f:
+        f.write(md)
+    print(f"{len(flags)} super-linear at sf10 of {len(t10)}")
+    return flags
 
 
 if __name__ == "__main__":

@@ -22,25 +22,13 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
-from scale_gate import (  # noqa: E402
-    ABS_FLOOR_S,
-    SF3,
-    SLACK,
-    WORK_MODEL,
-    growth_limit,
-    run_once,
-)
-
-SF10 = os.path.join(REPO, "scaledata", "sf10")
-GROWTH_3_TO_10 = 10.0 / 3.0
+from scale_gate import GROWTH_3_TO_10, SF3, SF10, time_pairs, write_sf10_section  # noqa: E402
 
 
 def pick_targets(timings: dict) -> list[str]:
@@ -58,114 +46,32 @@ def pick_targets(timings: dict) -> list[str]:
     return out
 
 
-def _flagged(n: str, t3: dict, t10: dict) -> bool:
-    return t10[n] > ABS_FLOOR_S and t10[n] > growth_limit(
-        n, GROWTH_3_TO_10
-    ) * t3[n]
-
-
-def _write_section(targets: list[str], t3: dict, t10: dict) -> None:
-    flags = sorted(n for n in targets if _flagged(n, t3, t10))
-    rows = []
-    for name in sorted(targets, key=lambda n: -t10[n]):
-        ratio = t10[name] / t3[name] if t3[name] > 0 else float("inf")
-        verdict = "**SUPER-LINEAR@sf10**" if name in flags else "ok"
-        if name in WORK_MODEL:
-            verdict += " (work-model gate: 1.3 x growth^2)"
-        rows.append(
-            f"| {name} | {t3[name]:.2f} | {t10[name]:.2f} | {ratio:.1f}x "
-            f"| {verdict} |"
-        )
-    section = f"""## sf10 octave (top-30 by sf3 time + every >3.0x sf3 grower)
-
-Produced by `python tools/sf10_octave.py` — both points of each ratio
-re-measured back-to-back in one session. Round 7 covered the top-10 +
->3.0x growers; round 8 extended to ranks 11-30 by sf3 time (verdict
-ask #5). Data growth sf3 -> sf10 =
-3.33x; gate: t(sf10) > {SLACK} x 3.33 x t(sf3) and t(sf10) > {ABS_FLOOR_S:g} s
-(work-model queries: {SLACK} x 3.33^2). A benign amortization grower
-converges toward the data ratio here; an emerging quadratic widens
-past 11x. Flags are settled by the interleaved 3-rep protocol before
-being accepted (round 8: q21_sole_late_supplier first read 4.6x cold,
-settled at 2.61x warm — min 8.58 s sf10 vs 3.29 s sf3;
-ts_interpolate_linear first read 7.5x cold, settled at 3.1x).
-
-- Queries timed at sf10: **{len(targets)}**
-- Super-linear at sf10: **{len(flags)}**{' — ' + ', '.join(flags) if flags else ''}
-
-| query | sf3 s | sf10 s | x3.33 growth | verdict |
-|---|---|---|---|---|
-{chr(10).join(rows)}
-"""
-    md_path = os.path.join(REPO, "SCALE.md")
-    with open(md_path) as f:
-        md = f.read()
-    marker = "## sf10 octave"
-    if marker in md:
-        md = md[: md.index(marker)].rstrip() + "\n\n" + section
-    else:
-        md = md.rstrip() + "\n\n" + section
-    with open(md_path, "w") as f:
-        f.write(md)
-    print(f"{len(flags)} super-linear at sf10 of {len(targets)}")
-
-
 def main() -> int:
     path = os.path.join(REPO, "SCALE_TIMINGS.json")
     with open(path) as f:
         timings = json.load(f)
     only = sys.argv[1:]
     if only == ["--report-only"]:
-        t10 = timings["sf10"]
-        t3 = timings["sf3_at_octave"]
-        _write_section(sorted(t10), t3, t10)
+        write_sf10_section(timings["sf3_at_octave"], timings["sf10"])
         return 0
     targets = only or pick_targets(timings)
     if not os.path.isdir(SF10):
         print("scaledata/sf10 missing — run: python tools/gen_scale_data.py 10")
         return 2
 
-    import __spark_entry__ as entrymod
+    from gibbon_spark.registry import warm
     from gibbon_spark.session import get_spark
 
     spark = get_spark("sf10_octave")
-    qs = entrymod.queries()
-
-    # warm JVM + Arrow worker pool (bench protocol)
-    qs["ts_summary"](spark, SF3).write.format("noop").mode("overwrite").save()
-
-    def _identity(batches):
-        yield from batches
-
-    spark.range(0, 64, 1, 64).mapInPandas(_identity, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    t3: dict[str, float] = {}
-    t10: dict[str, float] = {}
-    for name in targets:
-        spark.sparkContext._jvm.System.gc()
-        t3[name] = run_once(qs[name], spark, SF3)
-        t10[name] = run_once(qs[name], spark, SF10)
-        print(f"{name}: sf3={t3[name]}s sf10={t10[name]}s "
-              f"({t10[name]/max(t3[name],1e-9):.1f}x on 3.33x data)")
-
-    flags = sorted(n for n in targets if _flagged(n, t3, t10))
-    # confirm pass: re-measure both points, keep min
-    for name in list(flags):
-        print(f"re-measuring flagged {name} ...")
-        spark.sparkContext._jvm.System.gc()
-        t3[name] = min(t3[name], run_once(qs[name], spark, SF3))
-        t10[name] = min(t10[name], run_once(qs[name], spark, SF10))
-    flags = sorted(n for n in targets if _flagged(n, t3, t10))
+    warm(spark, SF3)
+    t3, t10 = time_pairs(spark, targets, SF3, SF10, GROWTH_3_TO_10)
 
     timings.setdefault("sf10", {}).update(t10)
     timings.setdefault("sf3_at_octave", {}).update(t3)
     with open(path, "w") as f:
         json.dump(timings, f, indent=1, sort_keys=True)
 
-    _write_section(targets, t3, t10)
-    return 1 if flags else 0
+    return 1 if write_sf10_section(t3, t10) else 0
 
 
 if __name__ == "__main__":

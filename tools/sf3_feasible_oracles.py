@@ -45,6 +45,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
+from gibbon_spark.registry import run  # noqa: E402
+from gibbon_spark.session import get_spark  # noqa: E402
 from oracle_check import compare, duck_connection  # noqa: E402
 
 SUBSET_PCT = {
@@ -54,6 +56,8 @@ SUBSET_PCT = {
     "knn_graph_lsh": 2,
     "dedup_ngram_jaccard": 5,
 }
+# doc_id slices of the chunked MinHash signature build (_build_sigs_chunked)
+MINHASH_CHUNKS = 10
 
 
 def _pred_sql(col: str, pct: int) -> str:
@@ -79,24 +83,6 @@ def _subset_table_sql(sql: str, table: str, id_col: str, pct: int) -> str:
     return sql.replace(needle, repl)
 
 
-def _spark_result(name: str, sf_dir: str) -> pd.DataFrame:
-    import __spark_entry__ as entrymod
-
-    return entrymod.queries()[name](entrymod_spark(), sf_dir).toPandas()
-
-
-_SPARK = None
-
-
-def entrymod_spark():
-    global _SPARK
-    if _SPARK is None:
-        from gibbon_spark.session import get_spark
-
-        _SPARK = get_spark("sf3_feasible_oracles")
-    return _SPARK
-
-
 def _report(name: str, tag: str, problems: list[str], n: int, t0: float) -> int:
     dt = time.time() - t0
     if problems:
@@ -114,7 +100,7 @@ def check_pairwise_subset(name: str, sf_dir: str, pct: int) -> int:
     import __spark_entry__ as entrymod
 
     t0 = time.time()
-    spark_pdf = _spark_result(name, sf_dir)
+    spark_pdf = run(get_spark(), name, sf_dir, sink="pandas")[0]
     a_col, b_col = {
         "dedup_containment": ("id_contained", "id_container"),
         "sim_embedding_neardup": ("id_a", "id_b"),
@@ -175,7 +161,7 @@ def check_knn_subset(name: str, sf_dir: str, pct: int) -> int:
             return 1
         spark_sub = pd.read_parquet(cache)
     else:
-        spark_pdf = _spark_result(name, sf_dir)
+        spark_pdf = run(get_spark(), name, sf_dir, sink="pandas")[0]
         keep = spark_pdf["src"].map(lambda i: _in_subset(i, pct)).astype(bool)
         spark_sub = spark_pdf[keep].reset_index(drop=True)
         if phase == "spark":
@@ -281,20 +267,15 @@ def _sigs_table(con, sf_dir: str) -> None:
     ~1.2B md5 calls at sf10 — pay it once). The cache name embeds the
     sf tag and chunk count (the knn-cache provenance rule), so a stale
     cache from another SF or config cannot silently validate."""
-    k = _chunks()
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    cache = f"/tmp/gs_sigs_{tag}_k{k}.parquet"
+    cache = f"/tmp/gs_sigs_{tag}_k{MINHASH_CHUNKS}.parquet"
     if os.path.exists(cache):
         con.execute(
             f"CREATE TEMP TABLE sigs_t AS SELECT * FROM read_parquet('{cache}')"
         )
         return
-    _build_sigs_chunked(con, k)
+    _build_sigs_chunked(con, MINHASH_CHUNKS)
     con.execute(f"COPY sigs_t TO '{cache}' (FORMAT PARQUET)")
-
-
-def _chunks() -> int:
-    return int(os.environ.get("GS_MINHASH_CHUNKS", "10"))
 
 
 def check_minhash_chunked(sf_dir: str) -> int:
@@ -304,8 +285,7 @@ def check_minhash_chunked(sf_dir: str) -> int:
     from gibbon_spark.registry.similarity import _minhash_tail_sql
 
     t0 = time.time()
-    spark_pdf = _spark_result("dedup_minhash_lsh", sf_dir)
-    k = _chunks()
+    spark_pdf = run(get_spark(), "dedup_minhash_lsh", sf_dir, sink="pandas")[0]
     con = duck_connection(sf_dir)
     _sigs_table(con, sf_dir)
     duck_pdf = con.execute(
@@ -314,7 +294,7 @@ def check_minhash_chunked(sf_dir: str) -> int:
     con.close()
     return _report(
         "dedup_minhash_lsh",
-        f"FULL, chunked sigs TEMP TABLE ({k} slices)",
+        f"FULL, chunked sigs TEMP TABLE ({MINHASH_CHUNKS} slices)",
         compare("dedup_minhash_lsh", spark_pdf, duck_pdf),
         len(spark_pdf),
         t0,
@@ -331,8 +311,7 @@ def check_pipeline_chunked(sf_dir: str) -> int:
     from gibbon_spark.registry.text import _pipeline_oracle_sql
 
     t0 = time.time()
-    spark_pdf = _spark_result("pipeline_training_corpus", sf_dir)
-    k = _chunks()
+    spark_pdf = run(get_spark(), "pipeline_training_corpus", sf_dir, sink="pandas")[0]
     con = duck_connection(sf_dir)
     _sigs_table(con, sf_dir)
     con.execute(
@@ -343,7 +322,7 @@ def check_pipeline_chunked(sf_dir: str) -> int:
     con.close()
     return _report(
         "pipeline_training_corpus",
-        f"FULL, chunked-sigs pair TEMP TABLE ({k} slices)",
+        f"FULL, chunked-sigs pair TEMP TABLE ({MINHASH_CHUNKS} slices)",
         compare("pipeline_training_corpus", spark_pdf, duck_pdf),
         len(spark_pdf),
         t0,
@@ -360,10 +339,9 @@ def check_incremental_chunked(sf_dir: str) -> int:
     )
 
     t0 = time.time()
-    spark_pdf = _spark_result("dedup_incremental", sf_dir)
-    k = _chunks()
+    spark_pdf = run(get_spark(), "dedup_incremental", sf_dir, sink="pandas")[0]
     con = duck_connection(sf_dir)
-    _build_sigs_chunked(con, k)
+    _build_sigs_chunked(con, MINHASH_CHUNKS)
     duck_pdf = con.execute(
         f"WITH {_INCREMENTAL_SPLIT_CTE},\n"
         "    sigs AS (SELECT * FROM sigs_t),\n"
@@ -372,7 +350,7 @@ def check_incremental_chunked(sf_dir: str) -> int:
     con.close()
     return _report(
         "dedup_incremental",
-        f"FULL, chunked sigs TEMP TABLE ({k} slices)",
+        f"FULL, chunked sigs TEMP TABLE ({MINHASH_CHUNKS} slices)",
         compare("dedup_incremental", spark_pdf, duck_pdf),
         len(spark_pdf),
         t0,
@@ -389,7 +367,7 @@ def check_pc_scan(sf_dir: str) -> int:
     from gibbon_spark.registry.similarity import _pc_oracle_sql
 
     t0 = time.time()
-    spark_pdf = _spark_result("embedding_top_pc", sf_dir)
+    spark_pdf = run(get_spark(), "embedding_top_pc", sf_dir, sink="pandas")[0]
     con = duck_connection(sf_dir)
     duck_pdf = con.execute(_pc_oracle_sql(gram_mode="scan")).fetchdf()
     con.close()
@@ -417,7 +395,7 @@ def check_neardup_relational_subset(sf_dir: str, pct: int) -> int:
     from gibbon_spark.registry.similarity import _COSINE_SQL
 
     t0 = time.time()
-    spark_full = _spark_result("sim_embedding_neardup", sf_dir)
+    spark_full = run(get_spark(), "sim_embedding_neardup", sf_dir, sink="pandas")[0]
     keep = (
         spark_full["id_a"].map(lambda i: _in_subset(i, pct))
         & spark_full["id_b"].map(lambda i: _in_subset(i, pct))
@@ -476,7 +454,7 @@ def check_cc_full(sf_dir: str) -> int:
     from gibbon_spark.registry.similarity import _minhash_tail_sql
 
     t0 = time.time()
-    spark_pdf = _spark_result("dedup_clusters_cc", sf_dir)
+    spark_pdf = run(get_spark(), "dedup_clusters_cc", sf_dir, sink="pandas")[0]
 
     con = duck_connection(sf_dir)
     _sigs_table(con, sf_dir)
@@ -531,7 +509,7 @@ def check_cc_full(sf_dir: str) -> int:
 def check_triangles_full(sf_dir: str, n_blocks: int = 16) -> int:
     """graph_triangle_count: FULL exact via blocked 3-way edge join."""
     t0 = time.time()
-    spark_pdf = _spark_result("graph_triangle_count", sf_dir)
+    spark_pdf = run(get_spark(), "graph_triangle_count", sf_dir, sink="pandas")[0]
 
     con = duck_connection(sf_dir)
     con.execute(
@@ -605,7 +583,7 @@ def check_skyline_full(sf_dir: str) -> int:
     rep_orderkey / n_orders columns are then recomputed from orders on
     the verified frontier and value-compared."""
     t0 = time.time()
-    spark_pdf = _spark_result("skyline_orders", sf_dir)
+    spark_pdf = run(get_spark(), "skyline_orders", sf_dir, sink="pandas")[0]
 
     con = duck_connection(sf_dir)
     con.register("s_front", spark_pdf)
@@ -677,7 +655,8 @@ def check_rowwise_subset(name: str, sf_dir: str, pct: int) -> int:
     from pyspark.sql import functions as F
 
     t0 = time.time()
-    df = entrymod.queries()[name](entrymod_spark(), sf_dir)
+    # built, not run: the frame is filtered before it is collected
+    df = entrymod.queries()[name](get_spark(), sf_dir)
     pred = (
         F.conv(
             F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 4), 16, 10
